@@ -1871,6 +1871,7 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream_session_records(
                 priced_calls(stream), gap_seconds=1800, watermark="10 seconds"
             )
+            .observe("drain", F.count(F.lit(1)).alias("rows"))
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -1879,6 +1880,22 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+        # every session emits from the trailing no-data batch, so calls in
+        # and zero records out means that batch never ran (e.g.
+        # spark.sql.streaming.noDataMicroBatches.enabled=false): fail instead
+        # of returning an empty frame. The write tasks count the records on
+        # their way to the sink and the progress reports carry the count, so
+        # the check adds no Spark job.
+        written = sum(
+            p.observedMetrics["drain"]["rows"]
+            for p in q.recentProgress
+            if "drain" in p.observedMetrics
+        )
+        if max_ts is not None and written == 0:
+            raise RuntimeError(
+                "session drain folded calls but emitted no records: the "
+                "timeout micro-batch did not run"
+            )
 
         out = (
             spark.read.parquet(out_dir)

@@ -28,7 +28,8 @@ partition-pruned by the repo/lang partitioning of the input.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable, Iterator, Sequence
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -36,13 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cognee_spark.functions.ids import normalize_identity_col
-from cognee_spark.functions.sha import (
-    SHA_BIN,
-    SHA_RAW,
-    sha_distinct,
-    sha_narrow,
-    sha_widen,
-)
+from cognee_spark.functions.narrow import SHA
 from cognee_spark.functions.similarity import SIMILARITY_CUTOFF
 from cognee_spark.operators.components import connected_components
 
@@ -93,7 +88,6 @@ def resolve_code_edges(
     mentions: DataFrame,
     raw_edges: DataFrame,
     skew_salts: int | None = None,
-    prefilter_ambiguous: bool = True,
 ) -> DataFrame:
     """Raw code edges → resolved (repo, src, rel, dst) qualified-name edges.
 
@@ -116,7 +110,7 @@ def resolve_code_edges(
 
     Output schema contract: alongside the public columns (repo, src, rel,
     dst, content_sha, ...) the frame carries the INTERNAL narrowed-sha pair
-    ``_sha_bin``/``_sha_raw`` (functions/sha.py) so code_triples can consume
+    ``_sha_bin``/``_sha_raw`` (functions/narrow.py) so code_triples can consume
     the digest without a hex round trip; consumers persisting or
     ``select('*')``-ing this frame should drop the pair, and input frames
     must not already carry columns of those reserved names (they would be
@@ -124,23 +118,23 @@ def resolve_code_edges(
     """
     code_m = mentions.where(F.col("mode") == "code")
     # the provenance sha rides the probe side of every resolution join as a
-    # 32-byte digest instead of 64-char hex (functions/sha.py — guarded, so
+    # 32-byte digest instead of 64-char hex (functions/narrow.py — guarded, so
     # non-sha fixture values pass through bit-identical). The branch selects
     # expose BOTH the widened string (the public content_sha schema) and the
     # narrow pair: code_triples consumes the pair directly and column pruning
     # removes the unevaluated widen, so the composed pipeline pays no
     # hex round trip; a consumer reading content_sha prunes the pair instead.
-    _sha_bin, _sha_raw = sha_narrow(F.col("content_sha"))
+    _sha_bin, _sha_raw = SHA.narrow(F.col("content_sha"))
     code_e = (
         raw_edges.where(F.col("mode") == "code")
-        .withColumn(SHA_BIN, _sha_bin)
-        .withColumn(SHA_RAW, _sha_raw)
+        .withColumn(SHA.bin, _sha_bin)
+        .withColumn(SHA.raw, _sha_raw)
         .drop("content_sha")
     )
     _sha_cols = (
-        sha_widen(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
-        F.col(SHA_BIN),
-        F.col(SHA_RAW),
+        SHA.widen(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
+        F.col(SHA.bin),
+        F.col(SHA.raw),
     )
 
     def salt_probe(df: DataFrame) -> DataFrame:
@@ -191,10 +185,11 @@ def resolve_code_edges(
     # only at a x S dictionary-replication cost; the broadcast anti-join
     # kills those rows at the scan instead. Bare shorts contain no dots, so
     # no row that could match the exact (qualified, dotted) join is touched.
-    calls = code_e.where(F.col("rel") == "calls")
-    if prefilter_ambiguous:
-        calls = calls.join(F.broadcast(ambiguous_shorts), ["repo", "dst"], "left_anti")
-    calls = salt_probe(calls)
+    calls = salt_probe(
+        code_e.where(F.col("rel") == "calls").join(
+            F.broadcast(ambiguous_shorts), ["repo", "dst"], "left_anti"
+        )
+    )
     # the symbol/module dictionaries GROW WITH THE CORPUS (unlike the NL alias
     # dictionary) — broadcasting them would serialize a driver-side hash-build
     # of millions of rows, and shuffle-hash joins OOM because their build side
@@ -274,18 +269,19 @@ def code_triples(resolved: DataFrame) -> DataFrame:
     # the dedup exchange moves the whole triple set — sha rides it narrowed;
     # resolve_code_edges already carries the narrow pair, so reuse it (the
     # widen it also exposes is pruned away) instead of re-unhexing per row
-    if SHA_BIN in resolved.columns:
-        sha_bin, sha_raw = F.col(SHA_BIN), F.col(SHA_RAW)
+    if SHA.bin in resolved.columns:
+        sha_bin, sha_raw = F.col(SHA.bin), F.col(SHA.raw)
     else:
-        sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
-    return sha_distinct(
+        sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
+    return SHA.distinct(
         resolved.select(
             normalize_identity_col(F.concat_ws(":", "repo", "src")).alias("subj"),
             normalize_identity_col(F.col("rel")).alias("pred"),
             qualify_obj.alias("obj"),
             "repo", "path", "lang",
-            sha_bin.alias(SHA_BIN), sha_raw.alias(SHA_RAW),
-        )
+            sha_bin.alias(SHA.bin), sha_raw.alias(SHA.raw),
+        ),
+        "content_sha",
     )
 
 
@@ -318,13 +314,17 @@ _PAIR_SCORE_SCHEMA = T.StructType(
 )
 
 
-def _score_pairs(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _score_pairs(
+    batches: Iterable[pd.DataFrame], out_cols: Sequence[str] = ("a", "b", "score")
+) -> Iterator[pd.DataFrame]:
+    """difflib-ratio ``score`` of each (a, b) pair; yields ``out_cols``, so
+    passenger columns ride along when the caller names them."""
     from cognee_spark.functions.similarity import name_similarity
 
     for pdf in batches:
         pdf = pdf.copy()
         pdf["score"] = [name_similarity(a, b) for a, b in zip(pdf["a"], pdf["b"])]
-        yield pdf[["a", "b", "score"]]
+        yield pdf[list(out_cols)]
 
 
 _PAIR_PASSTHROUGH_SCHEMA = T.StructType(
@@ -334,16 +334,6 @@ _PAIR_PASSTHROUGH_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType()),
     ]
 )
-
-
-def _score_pairs_passthrough(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Like _score_pairs but keeps (name, onto_canonical) passenger columns."""
-    from cognee_spark.functions.similarity import name_similarity
-
-    for pdf in batches:
-        pdf = pdf.copy()
-        pdf["score"] = [name_similarity(a, b) for a, b in zip(pdf["a"], pdf["b"])]
-        yield pdf[["name", "onto_canonical", "score"]]
 
 
 def alias_map(
@@ -404,7 +394,10 @@ def alias_map(
             )
             .distinct()
         )
-        fuzzy_scored = cand.mapInPandas(_score_pairs_passthrough, _PAIR_PASSTHROUGH_SCHEMA)
+        fuzzy_scored = cand.mapInPandas(
+            partial(_score_pairs, out_cols=_PAIR_PASSTHROUGH_SCHEMA.fieldNames()),
+            _PAIR_PASSTHROUGH_SCHEMA,
+        )
         fuzzy_hit = (
             fuzzy_scored.where(F.col("score") >= F.lit(SIMILARITY_CUTOFF))
             .groupBy("name")
@@ -502,8 +495,8 @@ def nl_triples(raw_edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """NL raw edges + broadcast alias map → canonical (subj, pred, obj)."""
     edges = raw_edges.where(F.col("mode") == "nl")
     m = F.broadcast(mapping)
-    sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
-    return sha_distinct(
+    sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
+    return SHA.distinct(
         edges.join(m.withColumnRenamed("name", "src").withColumnRenamed("canonical", "subj"), "src")
         .join(m.withColumnRenamed("name", "dst").withColumnRenamed("canonical", "obj"), "dst")
         .select(
@@ -511,6 +504,7 @@ def nl_triples(raw_edges: DataFrame, mapping: DataFrame) -> DataFrame:
             normalize_identity_col(F.col("rel")).alias("pred"),
             "obj",
             "repo", "path", "lang",
-            sha_bin.alias(SHA_BIN), sha_raw.alias(SHA_RAW),
-        )
+            sha_bin.alias(SHA.bin), sha_raw.alias(SHA.raw),
+        ),
+        "content_sha",
     )

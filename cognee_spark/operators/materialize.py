@@ -26,20 +26,7 @@ from cognee_spark.functions.ids import (
     id_for_col,
     normalize_identity_col,
 )
-from cognee_spark.functions.sha import (
-    SHA_BIN,
-    SHA_RAW,
-    sha_min,
-    sha_min_agg,
-    sha_narrow,
-    sha_widen,
-)
-from cognee_spark.functions.uuids import (
-    UUID_BIN,
-    UUID_RAW,
-    uuid_narrow,
-    uuid_widen,
-)
+from cognee_spark.functions.narrow import SHA, UUID
 from cognee_spark.operators.components import connected_components
 
 
@@ -102,15 +89,15 @@ def build_structural_edges(mentions: DataFrame) -> DataFrame:
     is already the chunk's deterministic DataPoint id, and dedup runs on the
     narrow natural keys BEFORE any uuid5 derivation.
     """
-    sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
-    cid_bin, cid_raw = uuid_narrow(F.col("chunk_id"))
+    sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
+    cid_bin, cid_raw = UUID.narrow(F.col("chunk_id"))
     base = mentions.where(F.col("chunk_id").isNotNull()).select(
-        cid_bin.alias(UUID_BIN),
-        cid_raw.alias(UUID_RAW),
+        cid_bin.alias(UUID.bin),
+        cid_raw.alias(UUID.raw),
         F.col("canonical_name").alias("entity_name"),
         F.col("kind").alias("kind"),
-        sha_bin.alias(SHA_BIN),
-        sha_raw.alias(SHA_RAW),
+        sha_bin.alias(SHA.bin),
+        sha_raw.alias(SHA.raw),
     )
     # ONE full-width exchange shared by both families: pre-reduce on the
     # finest key (container, entity, kind) — map-side combine collapses
@@ -127,11 +114,11 @@ def build_structural_edges(mentions: DataFrame) -> DataFrame:
     # narrowed binary form (32 + 16 bytes instead of 64 + 36 chars);
     # grouping on the (bin, raw) pair equals grouping on the original
     # strings because the narrowing is injective.
-    pre = base.groupBy(UUID_BIN, UUID_RAW, "entity_name", "kind").agg(*sha_min_agg())
-    container_id = uuid_widen(F.col(UUID_BIN), F.col(UUID_RAW))
+    pre = base.groupBy(UUID.bin, UUID.raw, "entity_name", "kind").agg(*SHA.min_agg())
+    container_id = UUID.widen(F.col(UUID.bin), F.col(UUID.raw))
     exists_in = (
-        pre.groupBy(UUID_BIN, UUID_RAW, "kind")
-        .agg(*sha_min_agg())
+        pre.groupBy(UUID.bin, UUID.raw, "kind")
+        .agg(*SHA.min_agg())
         .select(
             container_id.alias("source_node_id"),
             id_for_col("EntityType", F.col("kind")).alias("target_node_id"),
@@ -140,12 +127,12 @@ def build_structural_edges(mentions: DataFrame) -> DataFrame:
             F.concat(F.col("kind"), F.lit(" exists in "), container_id, F.lit("."))
             .alias("edge_text"),
             F.lit("structural").alias("edge_kind"),
-            sha_min(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
+            SHA.min(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
         )
     )
     mentioned_in = (
-        pre.groupBy(UUID_BIN, UUID_RAW, "entity_name")
-        .agg(*sha_min_agg())
+        pre.groupBy(UUID.bin, UUID.raw, "entity_name")
+        .agg(*SHA.min_agg())
         .select(
             container_id.alias("source_node_id"),
             id_for_col("Entity", F.col("entity_name")).alias("target_node_id"),
@@ -155,7 +142,7 @@ def build_structural_edges(mentions: DataFrame) -> DataFrame:
                 F.col("entity_name"), F.lit(" mentioned in "), container_id, F.lit(".")
             ).alias("edge_text"),
             F.lit("structural").alias("edge_kind"),
-            sha_min(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
+            SHA.min(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
         )
     )
     out = exists_in.unionByName(mentioned_in)
@@ -183,11 +170,11 @@ def build_edges(triples: DataFrame, nodes: DataFrame) -> DataFrame:
     # shuffle the derived wide rows. min(content_sha) keeps the surviving
     # provenance deterministic (dropDuplicates picks an arbitrary row); the
     # sha crosses the exchange as a 32-byte digest, not 64-char hex.
-    sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
+    sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
     content = (
-        triples.select("subj", "pred", "obj", sha_bin.alias(SHA_BIN), sha_raw.alias(SHA_RAW))
+        triples.select("subj", "pred", "obj", sha_bin.alias(SHA.bin), sha_raw.alias(SHA.raw))
         .groupBy("subj", "pred", "obj")
-        .agg(*sha_min_agg())
+        .agg(*SHA.min_agg())
         .select(
             id_for_col("Entity", F.col("subj")).alias("source_node_id"),
             id_for_col("Entity", F.col("obj")).alias("target_node_id"),
@@ -198,7 +185,7 @@ def build_edges(triples: DataFrame, nodes: DataFrame) -> DataFrame:
                 F.lit(" "), F.col("obj"), F.lit("."),
             ).alias("edge_text"),
             F.lit("content").alias("edge_kind"),
-            sha_min(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
+            SHA.min(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
         )
         .withColumn(
             "edge_object_id",
@@ -246,23 +233,23 @@ def build_contains_edges(mentions: DataFrame) -> DataFrame:
     binary form (chunk-id containers as 16-byte digests; repo:path
     containers ride the overflow string)."""
     src = F.coalesce(F.col("chunk_id"), F.concat_ws(":", "repo", "path"))
-    sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
-    cid_bin, cid_raw = uuid_narrow(src)
+    sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
+    cid_bin, cid_raw = UUID.narrow(src)
     return (
         mentions.select(
-            cid_bin.alias(UUID_BIN),
-            cid_raw.alias(UUID_RAW),
+            cid_bin.alias(UUID.bin),
+            cid_raw.alias(UUID.raw),
             F.col("canonical_name").alias("entity_name"),
-            sha_bin.alias(SHA_BIN),
-            sha_raw.alias(SHA_RAW),
+            sha_bin.alias(SHA.bin),
+            sha_raw.alias(SHA.raw),
         )
         .distinct()
         .select(
-            uuid_widen(F.col(UUID_BIN), F.col(UUID_RAW)).alias("container_id"),
+            UUID.widen(F.col(UUID.bin), F.col(UUID.raw)).alias("container_id"),
             id_for_col("Entity", F.col("entity_name")).alias("entity_id"),
             "entity_name",
             F.lit("contains").alias("relationship_name"),
-            sha_widen(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
+            SHA.widen(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
         )
     )
 

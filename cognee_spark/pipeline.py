@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -82,28 +81,9 @@ def _ontology_fingerprint(ontology: DataFrame | None) -> str:
     """Content fingerprint of the ontology frame for the stage signature:
     re-running against the same store with a DIFFERENT ontology must
     recompute, not reuse stale alias/triple tables. The ontology is
-    dictionary-sized by contract, so two tiny aggregates are negligible next
-    to any stage.
-
-    Order-free but MULTIPLICITY-SENSITIVE: a plain xor of per-row hashes
-    cancels duplicate rows pairwise ({A,A,B,B} and {C,C,D,D} would both
-    collapse to 0), so the xor runs over hash(row_hash, per-row count) after
-    a groupBy — changing any row's multiplicity changes the fingerprint."""
-    if ontology is None:
-        return "0"
-    row_hash = F.conv(
-        F.substring(F.md5(F.to_json(F.struct(*sorted(ontology.columns)))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    agg = (
-        ontology.select(row_hash.alias("h"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum("c").alias("n"), F.expr("bit_xor(xxhash64(h, c))").alias("x"))
-        .first()
-    )
-    return f"{agg.n}x{agg.x}"
+    dictionary-sized by contract, so the two tiny aggregates are negligible
+    next to any stage."""
+    return "0" if ontology is None else content_signature(ontology, "ont")
 
 
 def run_pipeline(
@@ -203,7 +183,8 @@ def run_pipeline(
 
     chunks = stage("chunks", build_chunks, partition_by=["lang"])
 
-    pool = ThreadPoolExecutor(max_workers=6)
+    # the pool serves only summaries; every other stage runs on this thread
+    pool = ThreadPoolExecutor(max_workers=1)
     try:
         # E4/E5 summarization runs CONCURRENTLY with the extract→link→
         # materialize spine (the reference's extract_graph_and_summarize
@@ -286,22 +267,11 @@ def run_pipeline(
         # the overlapped pair at 1,310 CPU core-s vs 733 run back-to-back
         # (1.79x), combined wall 209s vs 105s (BENCH/attrib_4exec_*.txt).
         # Sequential is also never slower at low parallelism (2 cores have
-        # no idle slots for a second job to fill), so it is the default;
-        # COGNEE_SPINE_OVERLAP=1 restores the overlap to reproduce the A/B.
-        if os.environ.get("COGNEE_SPINE_OVERLAP") == "1":
-            triples_future = pool.submit(
-                stage, "triples", build_triples, partition_by=["pred"]
-            )
-            mentions_future = pool.submit(
-                stage, "mentions", build_canonical_mentions, partition_by=["mode"]
-            )
-            canonical_mentions = mentions_future.result()
-            triples = triples_future.result()
-        else:
-            triples = stage("triples", build_triples, partition_by=["pred"])
-            canonical_mentions = stage(
-                "mentions", build_canonical_mentions, partition_by=["mode"]
-            )
+        # no idle slots for a second job to fill).
+        triples = stage("triples", build_triples, partition_by=["pred"])
+        canonical_mentions = stage(
+            "mentions", build_canonical_mentions, partition_by=["mode"]
+        )
 
         # K1-K4 materialize: nodes BEFORE edges (O9 write ordering). The
         # spine through nodes runs ALONE: co-scheduling leaf writes against
@@ -461,15 +431,26 @@ def run_custom_pipeline(
 
 def content_signature(df: DataFrame, prefix: str = "content") -> str:
     """Order-free, MULTIPLICITY-SENSITIVE content fingerprint of a frame —
-    the one signature every content-keyed stage should derive from. A plain
-    xor of per-row hashes cancels duplicate rows pairwise ({A,A} and {B,B}
-    both collapse to 0), so the xor runs over hash(row_hash, per-row count)
-    after a groupBy, the _ontology_fingerprint rule. The prefix is part of
-    the identity ONLY when two verbs must not share commits; verbs that
-    re-derive the same tables from the same corpus (cognify, update) share
-    the default so an unchanged corpus resumes across them."""
+    the one signature every content-keyed stage (and the ontology part of the
+    cognify signature) derives from.
+
+    - A plain xor of per-row hashes cancels duplicate rows pairwise ({A,A}
+      and {B,B} both collapse to 0), so the xor runs over hash(row_hash,
+      per-row count) after a groupBy.
+    - xxhash64 SKIPS nulls, so hashing the values alone would collide when a
+      value moves between a null column and a non-null one (("x", NULL) vs
+      (NULL, "x")); one isNull flag per column pins which column is null.
+    - Columns hash in name order, so the fingerprint does not depend on
+      the frame's column order.
+
+    The prefix is part of the identity ONLY when two verbs must not share
+    commits; verbs that re-derive the same tables from the same corpus
+    (cognify, update) share the default so an unchanged corpus resumes
+    across them."""
+    cols = sorted(df.columns)
+    row_hash = F.xxhash64(*cols, *[F.col(c).isNull() for c in cols])
     agg = (
-        df.select(F.xxhash64(*df.columns).alias("h"))
+        df.select(row_hash.alias("h"))
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(F.sum("c").alias("n"), F.expr("bit_xor(xxhash64(h, c))").alias("x"))

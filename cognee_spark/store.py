@@ -246,6 +246,8 @@ def run_stage(
 
     if not force and store.is_complete(stage, signature) and store.exists(stage):
         return _read_committed()
+    sc = spark.sparkContext
+    prev_description = sc.getLocalProperty("spark.job.description")
     store.acquire_stage_lock(stage)
     try:
         # a concurrent builder may have committed while we waited on the lock
@@ -253,8 +255,10 @@ def run_stage(
             return _read_committed()
         started = time.time()
         # thread-local job description → Spark UI / event-log attribution of
-        # every job this stage submits (works under concurrent stage submission)
-        spark.sparkContext.setLocalProperty("spark.job.description", f"stage:{stage}")
+        # every job this stage submits (works under concurrent stage
+        # submission); restored on exit so later jobs on this thread are not
+        # filed under this stage
+        sc.setLocalProperty("spark.job.description", f"stage:{stage}")
         df = build()
         metrics: dict = {}
         if count_rows:
@@ -271,4 +275,5 @@ def run_stage(
         store.checkpoint(stage, signature, **metrics)
         return spark.read.schema(df.schema).parquet(store.path(stage))
     finally:
+        sc.setLocalProperty("spark.job.description", prev_description)
         store.release_stage_lock(stage)

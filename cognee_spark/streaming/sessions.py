@@ -111,22 +111,24 @@ def _ms(series: pd.Series) -> np.ndarray:
 # (tests/test_streaming_sessions.py::test_tracker_fold_matches_reference).
 
 
-def _numeric(series: pd.Series) -> np.ndarray:
+def _numeric(series: pd.Series, mask: np.ndarray) -> np.ndarray:
+    """``series[mask]`` as numbers. Object columns coerce only the masked
+    rows, so a non-numeric value in a row the mask drops never raises."""
     vals = series.to_numpy()
     if vals.dtype == object:
-        vals = pd.to_numeric(series).to_numpy()
-    return vals
+        return pd.to_numeric(series[mask]).to_numpy()
+    return vals[mask]
 
 
 def _int_sum(series: pd.Series, mask: np.ndarray) -> int:
     """int(pd.to_numeric(series[mask]).fillna(0).sum())"""
-    vals = _numeric(series)[mask]
+    vals = _numeric(series, mask)
     return int(np.nansum(vals)) if vals.dtype.kind == "f" else int(vals.sum())
 
 
 def _cost_nanos(series: pd.Series, mask: np.ndarray) -> int:
     """int((pd.to_numeric(series[mask]).fillna(0.0) * 1e9).round().sum())"""
-    vals = _numeric(series)[mask].astype("float64", copy=False)
+    vals = _numeric(series, mask).astype("float64", copy=False)
     vals = np.where(np.isnan(vals), 0.0, vals)
     return int(np.round(vals * 1e9).sum())
 

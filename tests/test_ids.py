@@ -101,7 +101,9 @@ def test_uuid_narrow_widen_round_trip(spark):
 
     from pyspark.sql import functions as F
 
-    from cognee_spark.functions.uuids import UUID_BIN, UUID_RAW, uuid_narrow, uuid_widen
+    from cognee_spark.functions.narrow import UUID
+
+    UUID_BIN, UUID_RAW, uuid_narrow, uuid_widen = UUID.bin, UUID.raw, UUID.narrow, UUID.widen
 
     vals = [
         str(_uuid.uuid5(_uuid.NAMESPACE_OID, "x")),

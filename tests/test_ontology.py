@@ -101,20 +101,32 @@ def test_pipeline_with_ontology(spark, tmp_path):
 def test_ontology_fingerprint_is_multiplicity_sensitive(spark):
     """Round-3 ADVICE: a plain xor of per-row hashes cancels even-multiplicity
     rows pairwise ({A,A,B,B} vs {C,C,D,D} → same signature → stale-table
-    reuse). The fingerprint must distinguish content AND multiplicity."""
-    from cognee_spark.pipeline import _ontology_fingerprint
+    reuse). The fingerprint must distinguish content AND multiplicity, and
+    which column holds a null, and must not depend on column order. The
+    ontology fingerprint is the content signature, so both are pinned."""
+    from cognee_spark.pipeline import _ontology_fingerprint, content_signature
 
     cols = "name string, canonical string, parent string"
     a = ("A", "A", None)
     b = ("B", "B", None)
     c = ("C", "C", None)
     d = ("D", "D", None)
-    fp = lambda rows: _ontology_fingerprint(spark.createDataFrame(rows, cols))
-    # the xor-cancellation pair: both all-even multiplicities, same n
-    assert fp([a, a, b, b]) != fp([c, c, d, d])
-    # multiplicity change alone must change the fingerprint
-    assert fp([a, b]) != fp([a, a, b, b])
-    assert fp([a, a, b]) != fp([a, b, b])
-    # order-free: same multiset → same fingerprint
-    assert fp([a, b, a]) == fp([a, a, b])
-    assert fp([a, b]) == fp([b, a])
+    for sign in (_ontology_fingerprint, content_signature):
+        fp = lambda rows: sign(spark.createDataFrame(rows, cols))
+        # the xor-cancellation pair: both all-even multiplicities, same n
+        assert fp([a, a, b, b]) != fp([c, c, d, d])
+        # multiplicity change alone must change the fingerprint
+        assert fp([a, b]) != fp([a, a, b, b])
+        assert fp([a, a, b]) != fp([a, b, b])
+        # order-free: same multiset → same fingerprint
+        assert fp([a, b, a]) == fp([a, a, b])
+        assert fp([a, b]) == fp([b, a])
+        # a value moving between a null and a non-null column (hash
+        # functions that skip nulls collide here)
+        assert fp([("x", None, None)]) != fp([(None, "x", None)])
+        # the frame's column order is not part of its content
+        df = spark.createDataFrame([a, b, ("x", None, "y")], cols)
+        assert sign(df) == sign(df.select("parent", "name", "canonical"))
+    df = spark.createDataFrame([a, b], cols)
+    assert _ontology_fingerprint(df) == content_signature(df, "ont")
+    assert _ontology_fingerprint(None) == "0"

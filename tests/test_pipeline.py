@@ -128,32 +128,3 @@ def test_salted_resolution_joins_identical_output(spark, tmp_path):
     assert _triple_set(plain["tables"]["triples"]) == _triple_set(
         salted["tables"]["triples"]
     )
-
-
-def test_spine_overlap_knob_identical_output(spark, tmp_path, monkeypatch):
-    """COGNEE_SPINE_OVERLAP=1 restores the concurrent triples/mentions
-    submission (the pre-round-6 scheduling, kept to reproduce the A/B in
-    BENCH/attrib_4exec_3200000*.txt); outputs are bit-identical to the
-    sequential default on every shared table."""
-    repos = build_repos_df(spark, N)
-    monkeypatch.delenv("COGNEE_SPINE_OVERLAP", raising=False)
-    serial = run_pipeline(
-        spark, repos, str(tmp_path / "serial"), f"sp:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
-    monkeypatch.setenv("COGNEE_SPINE_OVERLAP", "1")
-    overlap = run_pipeline(
-        spark, repos, str(tmp_path / "overlap"), f"sp:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
-    assert _triple_set(serial["tables"]["triples"]) == _triple_set(
-        overlap["tables"]["triples"]
-    )
-    for name in ("mentions", "nodes", "edges"):
-        a = serial["tables"][name]
-        b = overlap["tables"][name]
-        cols = sorted(a.columns)
-        assert sorted(b.columns) == cols, name
-        sym_diff = a.select(*cols).exceptAll(b.select(*cols)).count() + \
-            b.select(*cols).exceptAll(a.select(*cols)).count()
-        assert sym_diff == 0, name

@@ -125,7 +125,7 @@ def test_sha_rides_exchanges_narrowed(spark):
     """The provenance sha must cross the dedup/aggregation exchanges as a
     32-byte digest, never as 64-char hex: every Exchange line in the plans of
     the sha-carrying operators mentions `_sha_bin`, not `content_sha`
-    (functions/sha.py — 25-30% of those rows' shuffle bytes at scale)."""
+    (functions/narrow.py — 25-30% of those rows' shuffle bytes at scale)."""
     from cognee_spark.operators.extraction import extract_from_files, mentions_of, raw_edges_of
     from cognee_spark.operators.linking import code_triples, resolve_code_edges
     from cognee_spark.operators.materialize import (
@@ -172,7 +172,7 @@ def test_sha_rides_exchanges_narrowed(spark):
             # below, which cover what actually crosses those exchanges.
             assert "content_sha" not in ln, ln
             # chunk-id container keys cross as 16-byte _uuid_bin, never as
-            # the 36-char uuid string (functions/uuids.py)
+            # the 36-char uuid string (functions/narrow.py)
             assert "container_id" not in ln, ln
         assert "min(content_sha" not in plan, plan
         if expects_min:

@@ -1,4 +1,4 @@
-"""Shuffle-narrowed sha lineage (functions/sha.py) — exactness pins.
+"""Shuffle-narrowed sha lineage (functions/narrow.py, SHA codec) — exactness pins.
 
 The narrow/widen pair must be bit-identical for every input class the engine
 and its test fixtures produce: real sha2 hex digests, short fixture strings
@@ -10,10 +10,15 @@ mix of those classes inside one group.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import functions as F
 
-from cognee_spark.functions.sha import SHA_BIN, SHA_RAW, sha_min, sha_narrow, sha_widen
+from cognee_spark.functions.narrow import SHA
+
+SHA_BIN, SHA_RAW = SHA.bin, SHA.raw
+sha_narrow, sha_widen, sha_min = SHA.narrow, SHA.widen, SHA.min
+sha_distinct = partial(SHA.distinct, name="content_sha")
 
 
 def _real(s: str) -> str:
@@ -99,8 +104,6 @@ def test_min_agg_matches_python_min_across_classes(spark):
 
 
 def test_sha_distinct_dedups_and_restores_schema(spark):
-    from cognee_spark.functions.sha import sha_distinct
-
     vals = [
         ("a", _real("x")), ("a", _real("x")),   # duplicate hex pair
         ("b", "sha1"), ("b", "sha1"),           # duplicate overflow pair

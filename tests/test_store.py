@@ -211,3 +211,30 @@ def test_empty_stage_table_resumes_with_schema(spark, tmp_path):
     resumed = run_stage(store, spark, "empty", "v", lambda: 1 / 0)
     assert resumed.count() == 0
     assert [f.name for f in resumed.schema.fields] == ["id", "s"]
+
+
+def test_run_stage_restores_job_description(spark, tmp_path):
+    """run_stage labels its jobs ``stage:<name>`` and hands the thread's
+    previous description back when it returns — set or unset — so later jobs
+    on the thread are not filed under the last stage."""
+    from cognee_spark.store import run_stage
+
+    sc = spark.sparkContext
+    store = TableStore(str(tmp_path))
+    seen = []
+
+    def build():
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return spark.range(3)
+
+    prev = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setLocalProperty("spark.job.description", "caller")
+        run_stage(store, spark, "labelled", "v", build)
+        assert seen == ["stage:labelled"]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        sc.setLocalProperty("spark.job.description", None)
+        run_stage(store, spark, "unlabelled", "v", build)
+        assert sc.getLocalProperty("spark.job.description") is None
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

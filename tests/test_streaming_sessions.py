@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType,
@@ -93,6 +94,15 @@ def test_tracker_fold_matches_reference():
                 "err": pd.Series([1, None, 0], dtype=object),
             }
         ),
+        # a non-numeric value in a row that only the all-true mask keeps:
+        # the other masks must not coerce (and raise on) it
+        pd.DataFrame(
+            {
+                "tokens": pd.Series([5, "n/a", 7], dtype=object),
+                "cost": pd.Series([0.15, "n/a", 2.5], dtype=object),
+                "err": pd.Series([1, None, 0], dtype=object),
+            }
+        ),
     ]
     masks = [
         np.array([True, True, True]),
@@ -101,6 +111,13 @@ def test_tracker_fold_matches_reference():
     ]
     for rows in frames:
         for mask in masks:
+            if "n/a" in list(rows["tokens"][mask]):
+                # the reference coercion raises too: nothing to compare
+                with pytest.raises(ValueError):
+                    _int_sum(rows["tokens"], mask)
+                with pytest.raises(ValueError):
+                    _cost_nanos(rows["cost"], mask)
+                continue
             assert _int_sum(rows["tokens"], mask) == int(
                 pd.to_numeric(rows["tokens"][mask]).fillna(0).sum()
             )
@@ -336,3 +353,31 @@ def test_terminal_freezes_stragglers(spark, tmp_path):
     assert rows[0].status == "failed"
     assert rows[0].n_calls == 1
     assert rows[0].tokens_in == 100
+
+
+def test_lifecycle_drain_without_timeout_batch_fails_loudly(spark, tmp_path):
+    """Every lifecycle record emits from the trailing no-data micro-batch.
+    With no-data batches disabled that batch never runs: the drain must
+    raise instead of returning an empty frame."""
+    import __spark_entry__ as entry
+
+    sf_dir = tmp_path / "sf"
+    spark.createDataFrame(
+        [
+            (0, T0, 1, "view", 1.0, "{}"),
+            (1, T0 + dt.timedelta(minutes=5), 1, "purchase", 2.0, "{}"),
+            (2, T0 + dt.timedelta(minutes=7), 2, "view", 3.0, "{}"),
+        ],
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double, props string",
+    ).write.parquet(str(sf_dir / "events.parquet"))
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="emitted no records"):
+            entry.stream_session_lifecycle(spark, str(sf_dir))
+    finally:
+        spark.conf.set(key, prev)
+    # the same input drains normally once the timeout batch runs
+    assert entry.stream_session_lifecycle(spark, str(sf_dir)).count() == 2
