@@ -85,17 +85,3 @@ def estimate_dry_run(
             6,
         ),
     }
-
-
-def sum_max_output(n_chunks: int, chunk_tokens: int) -> int:
-    """Mean-chunk approximation of Σ max(MIN_GRAPH_OUTPUT, ratio·chunk_size).
-
-    max(·) is convex, so applying it to the mean chunk size is a LOWER bound
-    on the per-chunk sum (exact only for uniformly sized chunks). Kept for
-    callers that have only the two aggregate numbers; ``estimate_dry_run``
-    computes the exact distributed sum instead."""
-    if n_chunks == 0:
-        return 0
-    mean = chunk_tokens / n_chunks
-    per_chunk = max(MIN_GRAPH_OUTPUT_TOKENS_PER_CHUNK, GRAPH_OUTPUT_TOKEN_RATIO * mean)
-    return int(per_chunk * n_chunks)

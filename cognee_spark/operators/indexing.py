@@ -9,8 +9,8 @@ as EdgeType points (cognee/tasks/storage/index_graph_edges.py:39-52).
 
 Spark re-expression: one tall ``embeddings`` table
 (collection, item_id, text, embedding) built with select/union over the
-already-committed nodes / entity_types / triples / summaries tables; the
-embedding itself is a deterministic hash embedding computed in codegen
+committed nodes / triples / summaries tables and the entity_types frame
+derived from nodes; the embedding itself is a deterministic hash embedding computed in codegen
 (functions/embeddings.py — the pluggable encoder seam). Dedup is a
 dropDuplicates on (collection, item_id) — deterministic ids make the upsert
 a merge by construction. Retrieval (R1/R6) then runs

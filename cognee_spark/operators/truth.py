@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 from cognee_spark.functions.ids import NAMESPACE_OID
 
 TRUTH_CENTROID_COLLECTION = "TruthCentroid_vector"
-TRUTH_NODE_SET = "session_learnings"
 DEFAULT_K = 8
 
 # collected (learning_id, vector) pairs are driver state; cap like the
@@ -57,11 +56,6 @@ DEFAULT_MAX_LEARNINGS = 100_000
 # Java's default \s — ASCII whitespace only (no NBSP etc.), matching the
 # codegen regexp_replace in build_truth_subspace
 _ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
-def truth_session_node_set(session_id: str) -> str:
-    """Per-session learning node set name (constants.py:6-7)."""
-    return f"{TRUTH_NODE_SET}:{session_id}"
 
 
 # --- pure alignment math (align.py) — python + codegen twins -----------------

@@ -1,29 +1,36 @@
-"""The cognify pipeline — chunk → extract(∥summarize) → link → canonicalize →
+"""The cognify pipeline — chunk → summarize → extract → link → canonicalize →
 materialize → index.
 
 Spark re-expression of cognee's default pipeline
 (cognee/api/v1/cognify/cognify.py:350-376: classify_documents →
 extract_chunks_from_documents → extract_graph_and_summarize →
-add_data_points, then index_data_points/index_graph_edges): every task
-boundary is a checkpointed table commit, every row carries lineage columns
+add_data_points, then index_data_points/index_graph_edges): every resume
+point is a checkpointed table commit, every row carries lineage columns
 (source_pipeline / source_task / content_sha — run_tasks_base.py:33-117
 provenance stamping), and a killed run resumes from the last committed stage.
 
 Stage order and write ordering (nodes before edges) follow SURVEY §7.1/O9.
 
-Scheduling: the stage DAG is wider than a chain — summarization is
-independent of extraction (the reference runs them as parallel tasks over the
-same chunks, extract_graph_and_summarize.py:12-37), triples and mentions both
-depend only on aliases+extractions, and the five graph leaf tables depend
-only on nodes/triples/mentions. Summarization (small, chunk-scoped) still
-overlaps the spine from its own thread, but the HEAVY stages run one at a
-time: co-scheduling two shuffle-heavy jobs lets their tasks evict each
-other's cache/allocator working sets — event-log attribution at 3.2M files
-measured the overlapped triples∥mentions pair at 1.79x the CPU and 2x the
-wall of the same stages run back-to-back (BENCH/attrib_4exec_3200000*.txt),
-and sequential leaf writes were measured faster the same way in round 4.
-A saturated executor gains nothing from a second concurrent job; an idle
-one is better fed by AQE-sized partitions of the one running stage.
+Scheduling: stages run one at a time, in one fixed order, on the caller's
+thread. The stage DAG is wider than a chain — summarization is independent
+of extraction (the reference runs them as parallel tasks over the same
+chunks, extract_graph_and_summarize.py:12-37), triples and mentions both
+depend only on aliases+extractions, and the graph leaf tables depend only on
+nodes/triples/mentions — but overlapping stages buys nothing: co-scheduling
+two shuffle-heavy jobs lets their tasks evict each other's cache/allocator
+working sets — event-log attribution at 3.2M files measured the overlapped
+triples∥mentions pair at 1.79x the CPU and 2x the wall of the same stages
+run back-to-back (BENCH/attrib_4exec_3200000*.txt), and sequential leaf
+writes were measured faster the same way in round 4. A saturated executor
+gains nothing from a second concurrent job; an idle one is better fed by
+AQE-sized partitions of the one running stage.
+
+Only resume points are committed: documents, chunks, summaries, extractions,
+entity_aliases, triples, mentions and nodes, plus the leaf tables edges,
+contains_edges and embeddings. ``entity_types`` and ``edge_type_histogram``
+are one-pass derivations of a committed table (nodes, triples) that nothing
+resumes from, so they are returned as lazy frames and recomputed by whoever
+reads them.
 
 Run via spark-submit:
     spark-submit --py-files cognee_spark.zip -m cognee_spark.pipeline ...
@@ -35,7 +42,6 @@ from __future__ import annotations
 import argparse
 import json
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,12 +126,10 @@ def run_pipeline(
         f"|nlx={nl_extractor if isinstance(nl_extractor, str) else 'custom'}"
     )
 
-    def stage(name, build, *, signature=sig, partition_by=None, count_rows=True,
-              extra_metrics=None):
+    def stage(name, build, *, signature=sig, partition_by=None, extra_metrics=None):
         return run_stage(
             store, spark, name, signature, build,
-            partition_by=partition_by, force=force, count_rows=count_rows,
-            extra_metrics=extra_metrics,
+            partition_by=partition_by, force=force, extra_metrics=extra_metrics,
         )
 
     # S1-S4 ingest/identify/classify: content identity via sha256 (the per-row
@@ -183,161 +187,138 @@ def run_pipeline(
 
     chunks = stage("chunks", build_chunks, partition_by=["lang"])
 
-    # the pool serves only summaries; every other stage runs on this thread
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        # E4/E5 summarization runs CONCURRENTLY with the extract→link→
-        # materialize spine (the reference's extract_graph_and_summarize
-        # parallel task pair, extract_graph_and_summarize.py:12-37).
-        summaries_future = None
-        if with_summaries:
-
-            def build_summaries() -> DataFrame:
-                return _stamp(summarize_chunks(chunks), "summarize")
-
-            summaries_future = pool.submit(stage, "summaries", build_summaries)
-
-        # E1/E6/E8 extraction — one tall table, parsed once. The code and NL
-        # branches are independent inputs of one union write job, so Spark
-        # already runs their stages concurrently inside that job.
-        from cognee_spark.registry import NL_EXTRACTORS, resolve
-
-        extract_nl_stage = resolve(NL_EXTRACTORS, nl_extractor)
-
-        def build_extractions() -> DataFrame:
-            code = extract_from_files(documents)
-            nl = extract_nl_stage(chunks.where(~F.col("lang").isin(*CODE_LANGS)))
-            return _stamp(code.unionByName(nl), "extract")
-
-        extractions = stage(
-            "extractions", build_extractions, partition_by=["mode"],
-            # kernels with side counters (e.g. the LLM extractor's skipped-row
-            # accumulators) surface them into the stage checkpoint row
-            extra_metrics=getattr(extract_nl_stage, "stage_metrics", None),
+    # E4/E5 summarization: the reference runs it as a parallel task beside
+    # extraction (extract_graph_and_summarize.py:12-37); here it is a
+    # shuffle-free projection of the committed chunks, run in turn
+    summaries = None
+    if with_summaries:
+        summaries = stage(
+            "summaries", lambda: _stamp(summarize_chunks(chunks), "summarize")
         )
-        mentions = mentions_of(extractions)
-        raw_edges = raw_edges_of(extractions)
 
-        # L1-L9 linking + canonicalization
-        def build_aliases() -> DataFrame:
-            return _stamp(
-                alias_map(mentions.where(F.col("mode") == "nl"), ontology=ontology),
-                "link",
-            )
+    # E1/E6/E8 extraction — one tall table, parsed once. The code and NL
+    # branches are independent inputs of one union write job, so Spark
+    # already runs their stages concurrently inside that job.
+    from cognee_spark.registry import NL_EXTRACTORS, resolve
 
-        aliases = stage("entity_aliases", build_aliases).select("name", "canonical")
+    extract_nl_stage = resolve(NL_EXTRACTORS, nl_extractor)
 
-        def build_triples() -> DataFrame:
-            # skew_salts spreads hot (repo, name) keys in the resolution
-            # joins; output is identical (tests pin it), so it's not part of
-            # the stage signature
-            resolved = resolve_code_edges(mentions, raw_edges, skew_salts=skew_salts)
-            ct = code_triples(resolved)
-            nt = nl_triples(raw_edges, aliases)
-            out = ct.unionByName(nt)
-            if ontology is not None:
-                from cognee_spark.operators.linking import ontology_is_a_triples
+    def build_extractions() -> DataFrame:
+        code = extract_from_files(documents)
+        nl = extract_nl_stage(chunks.where(~F.col("lang").isin(*CODE_LANGS)))
+        return _stamp(code.unionByName(nl), "extract")
 
-                out = out.unionByName(ontology_is_a_triples(nt, ontology))
-            return _stamp(out, "materialize_triples")
+    extractions = stage(
+        "extractions", build_extractions, partition_by=["mode"],
+        # kernels with side counters (e.g. the LLM extractor's skipped-row
+        # accumulators) surface them into the stage checkpoint row
+        extra_metrics=getattr(extract_nl_stage, "stage_metrics", None),
+    )
+    mentions = mentions_of(extractions)
+    raw_edges = raw_edges_of(extractions)
 
-        # canonical mention names (for contains edges + node kinds)
-        def build_canonical_mentions() -> DataFrame:
-            code_m = mentions.where(F.col("mode") == "code").withColumn(
+    # L1-L9 linking + canonicalization
+    def build_aliases() -> DataFrame:
+        return _stamp(
+            alias_map(mentions.where(F.col("mode") == "nl"), ontology=ontology),
+            "link",
+        )
+
+    aliases = stage("entity_aliases", build_aliases).select("name", "canonical")
+
+    def build_triples() -> DataFrame:
+        # skew_salts spreads hot (repo, name) keys in the resolution
+        # joins; output is identical (tests pin it), so it's not part of
+        # the stage signature
+        resolved = resolve_code_edges(mentions, raw_edges, skew_salts=skew_salts)
+        ct = code_triples(resolved)
+        nt = nl_triples(raw_edges, aliases)
+        out = ct.unionByName(nt)
+        if ontology is not None:
+            from cognee_spark.operators.linking import ontology_is_a_triples
+
+            out = out.unionByName(ontology_is_a_triples(nt, ontology))
+        return _stamp(out, "materialize_triples")
+
+    # canonical mention names (for contains edges + node kinds)
+    def build_canonical_mentions() -> DataFrame:
+        code_m = mentions.where(F.col("mode") == "code").withColumn(
+            "canonical_name",
+            F.when(
+                F.col("kind").isin("dependency", "route"),
+                normalize_identity_col(F.col("name")),
+            ).otherwise(normalize_identity_col(F.concat_ws(":", "repo", "name"))),
+        )
+        nl_m = (
+            mentions.where(F.col("mode") == "nl")
+            .join(F.broadcast(aliases), "name", "left")
+            .withColumn(
                 "canonical_name",
-                F.when(
-                    F.col("kind").isin("dependency", "route"),
-                    normalize_identity_col(F.col("name")),
-                ).otherwise(normalize_identity_col(F.concat_ws(":", "repo", "name"))),
+                F.coalesce("canonical", normalize_identity_col(F.col("name"))),
             )
-            nl_m = (
-                mentions.where(F.col("mode") == "nl")
-                .join(F.broadcast(aliases), "name", "left")
-                .withColumn(
-                    "canonical_name",
-                    F.coalesce("canonical", normalize_identity_col(F.col("name"))),
-                )
-                .drop("canonical")
-            )
-            return _stamp(code_m.unionByName(nl_m), "canonicalize")
-
-        # triples and mentions share only `aliases`, so they COULD overlap —
-        # but two concurrent shuffle-heavy jobs thrash each other's working
-        # sets: event-log attribution at 3.2M files / 4 executors measured
-        # the overlapped pair at 1,310 CPU core-s vs 733 run back-to-back
-        # (1.79x), combined wall 209s vs 105s (BENCH/attrib_4exec_*.txt).
-        # Sequential is also never slower at low parallelism (2 cores have
-        # no idle slots for a second job to fill).
-        triples = stage("triples", build_triples, partition_by=["pred"])
-        canonical_mentions = stage(
-            "mentions", build_canonical_mentions, partition_by=["mode"]
+            .drop("canonical")
         )
+        return _stamp(code_m.unionByName(nl_m), "canonicalize")
 
-        # K1-K4 materialize: nodes BEFORE edges (O9 write ordering). The
-        # spine through nodes runs ALONE: co-scheduling leaf writes against
-        # it steals its cores under FIFO (measured: +6s on triples, +25s on
-        # nodes at local[4]) — leaves are all terminal, so they run together
-        # at the end where stealing cannot lengthen the critical path.
-        mention_kinds = (
-            canonical_mentions.groupBy(F.col("canonical_name").alias("name"))
-            .agg(F.min("kind").alias("kind"))
-        )
+    # triples and mentions share only `aliases`, so they COULD overlap —
+    # but two concurrent shuffle-heavy jobs thrash each other's working
+    # sets: event-log attribution at 3.2M files / 4 executors measured
+    # the overlapped pair at 1,310 CPU core-s vs 733 run back-to-back
+    # (1.79x), combined wall 209s vs 105s (BENCH/attrib_4exec_*.txt).
+    # Sequential is also never slower at low parallelism (2 cores have
+    # no idle slots for a second job to fill).
+    triples = stage("triples", build_triples, partition_by=["pred"])
+    canonical_mentions = stage(
+        "mentions", build_canonical_mentions, partition_by=["mode"]
+    )
 
-        nodes = stage("nodes", lambda: _stamp(build_nodes(triples, mention_kinds), "nodes"))
+    # K1-K4 materialize: nodes BEFORE edges (O9 write ordering)
+    mention_kinds = (
+        canonical_mentions.groupBy(F.col("canonical_name").alias("name"))
+        .agg(F.min("kind").alias("kind"))
+    )
 
-        entity_types = stage(
-            "entity_types",
-            lambda: _stamp(build_entity_types(nodes), "entity_types"),
-            count_rows=False,
-        )
+    nodes = stage("nodes", lambda: _stamp(build_nodes(triples, mention_kinds), "nodes"))
 
-        # terminal leaf tables run SEQUENTIALLY, largest first: each is a
-        # wide allocation-heavy write that saturates the cluster alone, and
-        # running them concurrently inflates their combined task CPU
-        # (event-log measured at 3.2M files / local[16]: edges 468→1158
-        # core-s, contains 420→703 when co-scheduled — GC/allocator
-        # contention, zero spill). Sequential leaves are faster at every
-        # measured size ≥800k files. nodes is already durable, preserving
-        # the nodes-before-edges write ordering.
-        leaves = {
-            "edges": stage(
+    # one-pass derivations of a committed table that nothing resumes from:
+    # returned lazily, never committed
+    entity_types = _stamp(build_entity_types(nodes), "entity_types")
+    edge_types = _stamp(edge_type_histogram(triples), "edge_types")
+
+    # terminal leaf tables, largest first: each is a wide allocation-heavy
+    # write that saturates the cluster alone, and running them concurrently
+    # inflates their combined task CPU (event-log measured at 3.2M files /
+    # local[16]: edges 468→1158 core-s, contains 420→703 when co-scheduled
+    # — GC/allocator contention, zero spill). Sequential leaves are faster
+    # at every measured size ≥800k files.
+    leaves = {
+        "edges": stage(
+            "edges",
+            # content + is_a + the exists_in/mentioned_in structural
+            # families (retrieve_existing_edges.py) in one edge table
+            lambda: _stamp(
+                build_edges(triples, nodes).unionByName(
+                    build_structural_edges(canonical_mentions)
+                ),
                 "edges",
-                # content + is_a + the exists_in/mentioned_in structural
-                # families (retrieve_existing_edges.py) in one edge table
-                lambda: _stamp(
-                    build_edges(triples, nodes).unionByName(
-                        build_structural_edges(canonical_mentions)
-                    ),
-                    "edges",
-                ),
-                count_rows=False,
             ),
-            "contains_edges": stage(
-                "contains_edges",
-                lambda: _stamp(build_contains_edges(canonical_mentions), "contains"),
-                count_rows=False,
+        ),
+        "contains_edges": stage(
+            "contains_edges",
+            lambda: _stamp(build_contains_edges(canonical_mentions), "contains"),
+        ),
+    }
+    if with_index:
+        # index stage (index_data_points.py:10-68): per-(type,field)
+        # embedding collections over the committed graph tables
+        leaves["embeddings"] = stage(
+            "embeddings",
+            lambda: _stamp(
+                build_index(nodes, entity_types, triples, summaries=summaries),
+                "index",
             ),
-            "edge_type_histogram": stage(
-                "edge_type_histogram",
-                lambda: _stamp(edge_type_histogram(triples), "edge_types"),
-                count_rows=False,
-            ),
-        }
-        summaries = summaries_future.result() if summaries_future else None
-        if with_index:
-            # index stage (index_data_points.py:10-68): per-(type,field)
-            # embedding collections over the committed graph tables
-            leaves["embeddings"] = stage(
-                "embeddings",
-                lambda: _stamp(
-                    build_index(nodes, entity_types, triples, summaries=summaries),
-                    "index",
-                ),
-                partition_by=["collection"],
-                count_rows=False,
-            )
-    finally:
-        pool.shutdown(wait=False)
+            partition_by=["collection"],
+        )
 
     metrics: dict = {"wall_sec": round(time.time() - t0, 3), "stages": store.checkpoints()}
     if compute_metrics:
@@ -352,6 +333,7 @@ def run_pipeline(
         "mentions": canonical_mentions,
         "nodes": nodes,
         "entity_types": entity_types,
+        "edge_type_histogram": edge_types,
         **leaves,
     }
     if summaries is not None:

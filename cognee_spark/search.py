@@ -167,6 +167,13 @@ def search(
     >= the entity count the two paths return the same ranking. Without an
     index, the bootstrap fallback scores every distinct endpoint name
     (hash_node_distances).
+
+    Truncation: with an ``Entity_name`` index, the default ``fragment_m=256``
+    restricts GRAPH_COMPLETION and the rest of the graph-completion family
+    to the 256 entities nearest the query on stores with more entities; only
+    triples with both endpoints inside that fragment are ranked.
+    Callers that need the exhaustive ranking pass ``fragment_m`` >= the
+    entity count (``tables["nodes"].count()``).
     """
     st = search_type.upper()
     if st == "FEELING_LUCKY":
@@ -262,17 +269,10 @@ def search(
         )
     if st == "TRIPLET_COMPLETION":
         from cognee_spark.operators.indexing import build_triplet_index
-        from cognee_spark.functions.embeddings import hash_embedding_py
-        from cognee_spark.operators.similarity_search import brute_force_topk
 
-        idx = build_triplet_index(tables["triples"].select("subj", "pred", "obj"))
-        queries = spark.createDataFrame(
-            [("q0", hash_embedding_py(query))], ["query_id", "query_vec"]
-        )
-        top = brute_force_topk(idx, queries, k=top_k, id_col="item_id", vec_col="embedding")
-        texts = idx.select(F.col("item_id").alias("vec_id"), "text")
-        return top.join(texts, "vec_id").select(
-            "rank", F.col("vec_id").alias("item_id"), "text"
+        return _vector_topk(
+            spark, None, query, top_k, "item_id", "text",
+            index=build_triplet_index(tables["triples"].select("subj", "pred", "obj")),
         )
     if st == "GRAPH_COMPLETION":
         from cognee_spark.operators.retrieval import graph_completion_context

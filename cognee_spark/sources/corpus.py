@@ -54,11 +54,6 @@ NL_KIND = ["Service", "Registry", "Daemon", "Hub"]
 NL_VERBS = [("uses", "uses"), ("depends on", "depends_on"), ("calls into", "calls_into"), ("extends", "extends")]
 
 
-def nl_entity(idx: int) -> str:
-    """Canonical CamelCase name of NL entity ``idx`` (0..47)."""
-    return NL_FIRST[idx % len(NL_FIRST)] + NL_KIND[(idx // len(NL_FIRST)) % len(NL_KIND)]
-
-
 def nl_variant(idx: int, variant: int) -> str:
     """Deterministic surface form ``variant`` (0..4) of NL entity ``idx``.
 

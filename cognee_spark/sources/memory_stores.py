@@ -333,11 +333,6 @@ def zep_records(spark: SparkSession, data, source_system: str = "zep") -> DataFr
     return _finish(episodes).unionByName(_finish(entities)).unionByName(_finish(facts))
 
 
-def graphiti_records(spark: SparkSession, data) -> DataFrame:
-    """OSS-Graphiti alias — same export shape as Zep (zep.py:140-143)."""
-    return zep_records(spark, data, source_system="graphiti")
-
-
 # --------------------------------------------------------------------------
 # Letta / MemGPT agent files (sources/letta.py:57-155)
 # --------------------------------------------------------------------------

@@ -205,22 +205,22 @@ def run_stage(
     build,
     partition_by: list[str] | None = None,
     force: bool = False,
-    count_rows: bool = True,
     extra_metrics=None,
 ) -> DataFrame:
     """Execute one checkpointed stage: skip when committed, else build+commit.
 
-    ``build`` is a thunk returning the stage's DataFrame; row count and wall
-    time land in the checkpoint row (cognee's @task_summary analog,
-    run_tasks_base.py:21-30). The returned frame always reads from the
-    committed table (downstream consumers scan parquet, never recompute).
+    ``build`` is a thunk returning the stage's DataFrame; wall time, row
+    count and part-file count land in the checkpoint row of every stage
+    (cognee's @task_summary analog, run_tasks_base.py:21-30). The returned
+    frame always reads from the committed table (downstream consumers scan
+    parquet, never recompute).
 
     The row count rides on the WRITE job via ``DataFrame.observe`` — no
     read-back scan. Round 1 measured the per-stage count()+getNumPartitions
     read-backs as a serial floor that capped N→4N scaling efficiency; the
     observation metric is aggregated by the same tasks that write the files,
-    so the commit costs exactly one job. ``count_rows=False`` additionally
-    skips the observation for LEAF tables nothing reads back.
+    so the commit costs exactly one job, and the partition count is a
+    directory listing of the committed files.
 
     ``extra_metrics`` is an optional thunk invoked AFTER the write action —
     kernels that accumulate side metrics during the job (e.g. the LLM
@@ -259,16 +259,14 @@ def run_stage(
         # submission); restored on exit so later jobs on this thread are not
         # filed under this stage
         sc.setLocalProperty("spark.job.description", f"stage:{stage}")
-        df = build()
-        metrics: dict = {}
-        if count_rows:
-            obs = Observation(f"rows_{stage}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        obs = Observation(f"rows_{stage}")
+        df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
         store.write(df, stage, partition_by=partition_by)
-        metrics["wall_sec"] = round(time.time() - started, 3)
-        if count_rows:
-            metrics["rows"] = obs.get["rows"]
-            metrics["partitions"] = _count_part_files(store.path(stage))
+        metrics: dict = {
+            "wall_sec": round(time.time() - started, 3),
+            "rows": obs.get["rows"],
+            "partitions": _count_part_files(store.path(stage)),
+        }
         if extra_metrics is not None:
             metrics.update(extra_metrics())
         metrics["schema"] = df.schema.json()

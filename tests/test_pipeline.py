@@ -11,12 +11,25 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cognee_spark.functions.ids import id_for_py
+from cognee_spark.operators.materialize import graph_metrics
 from cognee_spark.pipeline import run_pipeline
 from cognee_spark.sources.corpus import build_repos_df
-from cognee_spark.sources.golden import golden_triples
+from cognee_spark.sources.golden import (
+    golden_edge_type_histogram,
+    golden_nodes,
+    golden_triples,
+)
 from cognee_spark.store import TableStore
 
 N = 210
+
+# the committed resume points; entity_types and edge_type_histogram are
+# derived frames and never reach the ledger
+SPINE_STAGES = {
+    "documents", "chunks", "extractions", "entity_aliases", "triples",
+    "mentions", "nodes", "edges", "contains_edges",
+}
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +76,68 @@ def test_no_duplicate_ids(result):
     assert edges.count() == edges.select("edge_object_id").distinct().count()
 
 
+def test_ledger_lists_resume_points_with_rows_and_partitions(result, spark, tmp_path):
+    store = TableStore(result["root"])
+    ledger = store.checkpoints()
+    assert {c["stage"] for c in ledger} == SPINE_STAGES | {"summaries", "embeddings"}
+    # every commit observes its row count on the write job, leaves included
+    for c in ledger:
+        assert c["rows"] == store.read(spark, c["stage"]).count(), c["stage"]
+        assert c["partitions"] >= 1, c["stage"]
+    assert result["metrics"]["stages"] == ledger
+
+    spine = run_pipeline(
+        spark, build_repos_df(spark, N), str(tmp_path / "spine"), f"synthetic:{N}",
+        compute_metrics=False, with_summaries=False, with_index=False,
+    )
+    assert {c["stage"] for c in spine["metrics"]["stages"]} == SPINE_STAGES
+    assert "summaries" not in spine["tables"] and "embeddings" not in spine["tables"]
+
+
+def test_derived_frames_match_oracle(result):
+    tables = result["tables"]
+    hist = tables["edge_type_histogram"]
+    assert hist.columns == [
+        "relationship_name", "number_of_edges", "source_pipeline", "source_task"
+    ]
+    rows = hist.collect()
+    assert [
+        (r.relationship_name, r.number_of_edges) for r in rows
+    ] == golden_edge_type_histogram(N)
+    assert {r.source_task for r in rows} == {"edge_types"}
+
+    types = tables["entity_types"]
+    assert types.columns == ["type_id", "name", "source_pipeline", "source_task"]
+    kinds = {kind for _id, _name, kind in golden_nodes(N)}
+    assert sorted((r.type_id, r.name) for r in types.collect()) == sorted(
+        (id_for_py("EntityType", k), k) for k in kinds
+    )
+
+
+def test_graph_metrics_match_python_over_golden_triples(result):
+    triples = golden_triples(N)
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, _p, o in triples:
+        parent[find(s)] = find(o)
+    sizes: dict[str, int] = {}
+    for node in list(parent):
+        root = find(node)
+        sizes[root] = sizes.get(root, 0) + 1
+
+    got = graph_metrics(result["tables"]["triples"])
+    assert got["num_nodes"] == len(parent)
+    assert got["num_edges"] == len(triples)
+    assert got["num_connected_components"] == len(sizes)
+    assert got["largest_component_size"] == max(sizes.values())
+
+
 def test_resume_skips_committed_stages(result, spark):
     root = result["root"]
     store = TableStore(root)
@@ -78,8 +153,8 @@ def test_invalidate_and_rebuild_identical(result, spark):
     store = TableStore(root)
     baseline = _triple_set(result["tables"]["triples"])
     # simulate a kill after extraction commit: downstream stages lost
-    for stage in ("entity_aliases", "triples", "mentions", "nodes", "entity_types",
-                  "edges", "contains_edges", "edge_type_histogram"):
+    for stage in ("entity_aliases", "triples", "mentions", "nodes", "edges",
+                  "contains_edges"):
         store.invalidate(stage)
     repos = build_repos_df(spark, N)
     out = run_pipeline(spark, repos, root, f"synthetic:{N}", compute_metrics=False)
