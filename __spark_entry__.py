@@ -1830,11 +1830,20 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-order-independent, so this emits row-for-row what the previous
     three-run drain (one run per arrival wave) emitted, at a third of the
     stream-startup + state-store-commit cost; multi-run incremental arrival
-    stays pinned by tests/test_streaming_sessions.py."""
+    stays pinned by tests/test_streaming_sessions.py.
+
+    The fold groups sessions into ``sessions.N_BUCKETS`` hash buckets, so
+    each micro-batch makes at most one Python call per bucket rather than
+    one per session: about 2 × N_BUCKETS calls per drain instead of one per
+    (session, batch). The state store holds one row per bucket. Every drain
+    starts from a fresh temporary checkpoint, so the bucketed state layout
+    never meets a checkpoint written with one group per session."""
     import datetime as _dt
     import os
     import shutil
     import tempfile
+
+    import pandas as pd
 
     from cognee_spark.operators.lifecycle import priced_calls
     from cognee_spark.streaming.sessions import stream_session_records
@@ -1857,14 +1866,17 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch 0 folds everything at watermark 0 (nothing can be
         # late-dropped), the trailing no-data batch times every real session
         # out, and hb-2 keeps hb-1's own session expirable — one stream
-        # start + two micro-batches instead of three starts + six
-        spark.createDataFrame(
+        # start + two micro-batches instead of three starts + six. They go
+        # in as a pandas frame (Arrow, converted in the JVM): a list of rows
+        # becomes a Python RDD, one Python task per core just to write them.
+        heartbeats = pd.DataFrame(
             [
                 (f"hb-{i}", "hb", max_ts + _dt.timedelta(days=days), "o3", 1, 0, False, None)
                 for i, days in enumerate((30, 60), start=1)
             ],
-            schema,
-        ).write.mode("append").parquet(in_dir)
+            columns=schema.fieldNames(),
+        )
+        spark.createDataFrame(heartbeats, schema).write.mode("append").parquet(in_dir)
 
         stream = spark.readStream.schema(schema).parquet(in_dir)
         q = (

@@ -19,4 +19,11 @@ expressions (whole-stage codegen), Python appears only inside Arrow-batched
 pandas UDFs (chunking, extraction), and every join that can broadcast does.
 """
 
+from cognee_spark import _zipimport
+
+# Python workers import this package when they unpickle any of its UDFs, so
+# every reused worker stops re-reading its zip directories on each task from
+# then on (see _zipimport and session.py).
+_zipimport.install()
+
 __version__ = "0.1.0"

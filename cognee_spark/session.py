@@ -9,6 +9,20 @@ Settings rationale (100 TB target, tested at local[32]):
   100 chunks/LLM call (cognee/api/v1/cognify/cognify.py:345-348) scaled up for
   a deterministic extractor: 10_000 rows/Arrow batch keeps pandas-UDF overhead
   amortized without blowing executor memory on long `content` strings.
+
+Per-task Python worker floor: every Python task starts with PySpark's
+``setup_spark_files``, which calls ``importlib.invalidate_caches()``. Up to
+Python 3.12 that re-reads the whole directory of every zip archive the
+worker imports from (``pyspark.zip`` and each of its imported subpackages,
+``py4j``, the shipped ``cognee_spark`` zip): 0.23-0.33 s of CPU per task on
+a 4-vCPU host, paid again by every task of a reused worker. Importing
+``cognee_spark`` installs ``_zipimport``'s stat-checked
+``invalidate_caches``, which re-reads an archive only when it changed.
+Executors import the package whenever they unpickle one of its UDFs, so a
+reused worker stops paying from its second task on, with no conf or
+environment setting to carry. Python tasks that run only PySpark's own
+code, such as ``createDataFrame`` over a list of rows, were measured still
+paying it: their workers never unpickle one of the package's UDFs.
 """
 
 from __future__ import annotations

@@ -124,9 +124,9 @@ def test_tracker_fold_matches_reference():
             assert _cost_nanos(rows["cost"], mask) == int(
                 (pd.to_numeric(rows["cost"][mask]).fillna(0.0) * 1e9).round().sum()
             )
-            assert _true_count(rows["err"], mask) == int(
-                rows["err"][mask].fillna(False).astype(bool).sum()
-            )
+            with pd.option_context("future.no_silent_downcasting", True):
+                want = rows["err"][mask].fillna(False).infer_objects()
+            assert _true_count(rows["err"], mask) == int(want.astype(bool).sum())
 
 
 def test_stream_session_records(spark, tmp_path):
@@ -353,6 +353,99 @@ def test_terminal_freezes_stragglers(spark, tmp_path):
     assert rows[0].status == "failed"
     assert rows[0].n_calls == 1
     assert rows[0].tokens_in == 100
+
+
+def _buckets(spark, ids):
+    from cognee_spark.streaming.sessions import N_BUCKETS
+
+    rows = (
+        spark.createDataFrame([(i,) for i in ids], "sid string")
+        .select("sid", F.pmod(F.xxhash64("sid"), F.lit(N_BUCKETS)).alias("b"))
+        .collect()
+    )
+    return {r.sid: r.b for r in rows}
+
+
+def test_quiet_session_expires_in_its_bucket_mates_data_batch(spark, tmp_path):
+    """Two sessions share one state bucket. In one micro-batch the active one
+    gets a call while the quiet one has no rows and its deadline is below the
+    watermark: the quiet one emits exactly once, in that batch, and the active
+    one keeps accruing. Once both emitted and the tombstone is GC'd, the
+    bucket holds no state row."""
+    buckets = _buckets(spark, [f"s{i}" for i in range(200)] + [f"hb{i}" for i in range(50)])
+    by_bucket = {}
+    for sid in (k for k in buckets if k.startswith("s")):
+        by_bucket.setdefault(buckets[sid], []).append(sid)
+    shared = next(b for b, ids in sorted(by_bucket.items()) if len(ids) >= 2)
+    quiet, active = by_bucket[shared][:2]
+    hb1, hb2, hb3 = [k for k in buckets if k.startswith("hb") and buckets[k] != shared][:3]
+
+    input_dir = str(tmp_path / "calls")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir, exist_ok=True)
+    emitted = []  # (batch id, session_id, status, n_calls)
+
+    def sink(df, batch_id):
+        for r in df.collect():
+            emitted.append((batch_id, r.session_id, r.status, r.n_calls))
+
+    def run():
+        # one file per micro-batch: the watermark moves between data batches
+        stream = (
+            spark.readStream.schema(INPUT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(input_dir)
+        )
+        q = (
+            stream_session_records(priced_calls(stream), gap_seconds=120, watermark="10 seconds")
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q.recentProgress
+
+    # gap 120s, watermark 10s: both deadlines are 0 + 120 = 120
+    _emit(
+        spark,
+        input_dir,
+        [
+            (quiet, "alice", _sec(0), "gpt-4o", "x" * 400, "y" * 40, None),
+            (active, "bob", _sec(0), "gpt-4o", "x" * 40, "y" * 4, None),
+        ],
+    )
+    # a heartbeat in another bucket moves the next batch's watermark to 130
+    _emit(spark, input_dir, [(hb1, "carol", _sec(140), "o3", "x" * 4, None, None)])
+    # batch 2 (watermark 130): the active session's call is the only input
+    _emit(spark, input_dir, [(active, "bob", _sec(150), "gpt-4o", "x" * 40, "y" * 4, None)])
+    progress = run()
+    data_batch = next(p for p in progress if p.batchId == 2)
+    assert data_batch.numInputRows == 1
+    assert emitted == [(2, quiet, "abandoned", 1)]
+
+    # the active session completes; far heartbeats expire it, GC its
+    # tombstone and time out hb1 and hb2
+    _emit(
+        spark,
+        input_dir,
+        [
+            (active, "bob", _sec(160), "gpt-4o", None, None, "completed"),
+            (hb2, "carol", _sec(1000), "o3", "x" * 4, None, None),
+        ],
+    )
+    run()
+    _emit(spark, input_dir, [(hb3, "carol", _sec(2000), "o3", "x" * 4, None, None)])
+    progress = run()
+
+    mine = [e for e in emitted if e[1] in (quiet, active)]
+    assert sorted(e[1:] for e in mine) == sorted(
+        [(quiet, "abandoned", 1), (active, "completed", 2)]
+    )
+    assert sorted(e[1] for e in emitted) == sorted([quiet, active, hb1, hb2])
+    # only hb3's bucket still holds a state row: the shared bucket's row was
+    # removed once its last session (the tombstone) was GC'd
+    assert progress[-1].stateOperators[0].numRowsTotal == 1
 
 
 def test_lifecycle_drain_without_timeout_batch_fails_loudly(spark, tmp_path):
