@@ -6,8 +6,7 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 Also runs the KG-construction pipeline end-to-end on a deterministic synthetic
 corpus sized to the scale factor and reports triples/sec (the BASELINE.json
-headline metric). Scaling-efficiency evidence (local[8] vs local[32]) is
-produced by bench_scaling.py → BENCH/BASELINE.md.
+headline metric).
 """
 
 from __future__ import annotations
@@ -252,8 +251,8 @@ def main() -> None:
     n_files = max(210, int(sf * 50_000))
     root = tempfile.mkdtemp(prefix="cognee_bench_kg")
     try:
-        # pre-materialize the synthetic corpus OUTSIDE the timer (the
-        # bench_scaling.py protocol): generating rows in Python is harness
+        # pre-materialize the synthetic corpus OUTSIDE the timer:
+        # generating rows in Python is harness
         # cost, not engine work — measured ~30% of the 5k-file wall
         corpus_dir = os.path.join(root, "_corpus")
         build_repos_df(spark, n_files).write.mode("overwrite").parquet(corpus_dir)

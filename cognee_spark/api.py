@@ -10,6 +10,11 @@ corpus rows to a staging parquet under the store root (the reference's
 ingest tables), ``cognify`` re-derives under a content-derived signature
 (so an unchanged corpus resumes committed stages), and the graph tables a
 verb needs are the last cognify's committed outputs.
+
+``add`` is the one way data comes in: ``update`` is add + cognify (a
+re-added ``(repo, path)`` replaces the staged row, last batch wins), and
+``streaming.incremental.incremental_cognify`` adds each micro-batch and
+cognifies once per drain.
 """
 
 from __future__ import annotations
@@ -79,23 +84,36 @@ class Cognee:
         ).parquet(self._staging)
         return n
 
+    def _staged(self) -> bool:
+        """Whether anything was ever added under this store root."""
+        return os.path.isdir(self._staging)
+
     def _next_batch(self) -> int:
-        try:
-            staged = self.spark.read.schema(
-                CORPUS_SCHEMA + ", _batch long"
-            ).parquet(self._staging)
-            return int(staged.agg(F.max("_batch")).first()[0] or 0) + 1
-        except Exception:
+        # a read error of an existing staging table must raise: restarting
+        # the numbering at 1 would make new rows lose last-batch-wins to
+        # older batches and serve stale content with no error
+        if not self._staged():
             return 1
+        staged = self.spark.read.schema(CORPUS_SCHEMA + ", _batch long").parquet(
+            self._staging
+        )
+        return int(staged.agg(F.max("_batch")).first()[0] or 0) + 1
 
     def corpus(self) -> DataFrame:
-        """Everything added so far; re-adds resolve last-batch-wins."""
+        """Everything added so far; re-adds resolve last-batch-wins.
+
+        Two rows of one ``(repo, path)`` in the same batch tie on
+        ``_batch``; the tie goes to the smallest ``(commit, lang, content)``,
+        so the winner (and ``content_signature`` of the corpus) does not
+        depend on scan order."""
         from pyspark.sql.window import Window
 
         docs = self.spark.read.schema(CORPUS_SCHEMA + ", _batch long").parquet(
             self._staging
         )
-        w = Window.partitionBy("repo", "path").orderBy(F.desc("_batch"))
+        w = Window.partitionBy("repo", "path").orderBy(
+            F.desc("_batch"), "commit", "lang", "content"
+        )
         return (
             docs.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
@@ -111,8 +129,8 @@ class Cognee:
         from cognee_spark.pipeline import content_signature, run_pipeline
 
         corpus = self.corpus()
-        # the same content-keyed signature update_data uses, so a cognify
-        # after an update of the identical corpus resumes instead of
+        # content-keyed signature: a cognify of an identical corpus (after a
+        # no-op update, or a drain with no new files) resumes instead of
         # rebuilding byte-identical tables
         out = run_pipeline(
             self.spark, corpus, self.root, content_signature(corpus),
@@ -154,16 +172,21 @@ class Cognee:
         )
 
     def update(self, new_rows: DataFrame, **pipeline_kwargs) -> dict:
-        """``cognee.update`` — replace matching items and re-derive."""
-        from cognee_spark.pipeline import update_data
+        """``cognee.update`` (api/v1/update/update.py:12-108: delete → add →
+        cognify) — replace matching items and re-derive.
 
-        out = update_data(
-            self.spark, self.root, self.corpus(), new_rows, **pipeline_kwargs
-        )
-        # break lineage before overwriting the staging path the plan reads
-        refreshed = out["corpus"].localCheckpoint(eager=True)
-        refreshed.write.mode("overwrite").parquet(self._staging)
-        self.tables = out["tables"]
+        ``new_rows`` carries the corpus schema; rows whose ``(repo, path)``
+        is already staged replace it (last batch wins), the rest are plain
+        adds. Returns the ``cognify`` dict plus ``replaced`` (staged rows
+        whose key was among ``new_rows``') and ``corpus``."""
+        replaced = 0
+        if self._staged():
+            keys = new_rows.select("repo", "path").distinct()
+            replaced = self.corpus().join(keys, ["repo", "path"], "left_semi").count()
+        self.add(new_rows)
+        out = self.cognify(**pipeline_kwargs)
+        out["replaced"] = replaced
+        out["corpus"] = self.corpus()
         return out
 
     def improve(self, **kwargs) -> dict:

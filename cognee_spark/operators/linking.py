@@ -84,11 +84,7 @@ def _components_hybrid(spark, pairs: DataFrame) -> DataFrame:
 # --- code-mode resolution ------------------------------------------------------
 
 
-def resolve_code_edges(
-    mentions: DataFrame,
-    raw_edges: DataFrame,
-    skew_salts: int | None = None,
-) -> DataFrame:
+def resolve_code_edges(mentions: DataFrame, raw_edges: DataFrame) -> DataFrame:
     """Raw code edges → resolved (repo, src, rel, dst) qualified-name edges.
 
     All joins key on (repo, name): high-cardinality composite keys, so repo
@@ -99,14 +95,8 @@ def resolve_code_edges(
     matches SMJs whose sorts sit directly on shuffle stages, and the
     dictionary sides (symbols/shorts/modules) end in aggregates (measured:
     the same hot key splits 1→3 in a plain two-key SMJ but never in the
-    aggregate-adjacent form, even with forceOptimizeSkewedJoin).
-
-    ``skew_salts=S`` is the explicit handling the north rule names: the probe
-    side gets a deterministic salt hash(path, src) % S, the dictionary sides
-    are replicated ×S, and the joins key on (repo, name, salt) — the hot key
-    spreads over S partitions at the cost of an S-fold dictionary shuffle
-    (dictionaries are the small side, so this is cheap relative to the
-    straggler). Semantics are identical; tests pin equality.
+    aggregate-adjacent form, even with forceOptimizeSkewedJoin). The
+    hot-key prefilter below drops the bare calls that cause it.
 
     Output schema contract: alongside the public columns (repo, src, rel,
     dst, content_sha, ...) the frame carries the INTERNAL narrowed-sha pair
@@ -137,23 +127,6 @@ def resolve_code_edges(
         F.col(SHA.raw),
     )
 
-    def salt_probe(df: DataFrame) -> DataFrame:
-        if not skew_salts:
-            return df
-        return df.withColumn(
-            "_salt", F.pmod(F.xxhash64("path", "src"), F.lit(skew_salts)).cast("int")
-        )
-
-    def salt_dict(df: DataFrame) -> DataFrame:
-        if not skew_salts:
-            return df
-        return df.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(skew_salts - 1)))
-        )
-
-    def salt_cond(left, right):
-        return [left["_salt"] == right["_salt"]] if skew_salts else []
-
     symbols = (
         code_m.where(F.col("kind").isin("class", "function", "method"))
         .select("repo", F.col("name").alias("qualified"))
@@ -181,39 +154,34 @@ def resolve_code_edges(
     # it BEFORE any (repo, dst) shuffle. This is where real-corpus hot keys
     # live (everybody defines and calls `helper`/`main`/`init`): the mega-repo
     # skew corpus measured a ~1M-row hot partition in the resolution SMJs
-    # that AQE cannot split (aggregate-adjacent sides) and that salting fixes
-    # only at a x S dictionary-replication cost; the broadcast anti-join
-    # kills those rows at the scan instead. Bare shorts contain no dots, so
+    # that AQE cannot split (aggregate-adjacent sides) and that salting fixed
+    # only at a x S dictionary-replication cost, slower end to end
+    # (BENCH/BASELINE.md); the broadcast anti-join kills those rows at the
+    # scan instead. Bare shorts contain no dots, so
     # no row that could match the exact (qualified, dotted) join is touched.
-    calls = salt_probe(
-        code_e.where(F.col("rel") == "calls").join(
-            F.broadcast(ambiguous_shorts), ["repo", "dst"], "left_anti"
-        )
+    calls = code_e.where(F.col("rel") == "calls").join(
+        F.broadcast(ambiguous_shorts), ["repo", "dst"], "left_anti"
     )
     # the symbol/module dictionaries GROW WITH THE CORPUS (unlike the NL alias
     # dictionary) — broadcasting them would serialize a driver-side hash-build
     # of millions of rows, and shuffle-hash joins OOM because their build side
     # cannot spill; sort-merge spills gracefully
-    exact_side = salt_dict(
-        symbols.select(F.col("repo").alias("x_repo"), F.col("qualified").alias("dst_exact"))
+    exact_side = symbols.select(
+        F.col("repo").alias("x_repo"), F.col("qualified").alias("dst_exact")
     ).hint("merge")
-    suffix_side = salt_dict(
-        unique_shorts.select(
-            F.col("repo").alias("s_repo"), F.col("short").alias("s_short"),
-            F.col("qualified").alias("dst_suffix"),
-        )
+    suffix_side = unique_shorts.select(
+        F.col("repo").alias("s_repo"), F.col("short").alias("s_short"),
+        F.col("qualified").alias("dst_suffix"),
     ).hint("merge")
     resolved_calls = (
         calls.join(
             exact_side,
-            on=[calls["repo"] == exact_side["x_repo"], calls["dst"] == exact_side["dst_exact"]]
-            + salt_cond(calls, exact_side),
+            on=[calls["repo"] == exact_side["x_repo"], calls["dst"] == exact_side["dst_exact"]],
             how="left",
         )
         .join(
             suffix_side,
-            on=[calls["repo"] == suffix_side["s_repo"], calls["dst"] == suffix_side["s_short"]]
-            + salt_cond(calls, suffix_side),
+            on=[calls["repo"] == suffix_side["s_repo"], calls["dst"] == suffix_side["s_short"]],
             how="left",
         )
         .withColumn("dst_resolved", F.coalesce("dst_exact", "dst_suffix"))
@@ -224,15 +192,14 @@ def resolve_code_edges(
         )
     )
 
-    imports = salt_probe(code_e.where(F.col("rel") == "imports_raw"))
-    module_side = salt_dict(
-        modules.select(F.col("repo").alias("m_repo"), F.col("module_name"))
+    imports = code_e.where(F.col("rel") == "imports_raw")
+    module_side = modules.select(
+        F.col("repo").alias("m_repo"), F.col("module_name")
     ).hint("merge")
     resolved_imports = (
         imports.join(
             module_side,
-            on=[imports["repo"] == module_side["m_repo"], imports["dst"] == module_side["module_name"]]
-            + salt_cond(imports, module_side),
+            on=[imports["repo"] == module_side["m_repo"], imports["dst"] == module_side["module_name"]],
             how="left",
         )
         .select(

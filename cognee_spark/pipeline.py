@@ -105,7 +105,6 @@ def run_pipeline(
     with_index: bool = True,
     ontology: DataFrame | None = None,
     nl_extractor: str = "default",
-    skew_salts: int | None = None,
 ) -> dict:
     """Execute all stages over a repos(repo,path,commit,lang,content) frame.
 
@@ -227,11 +226,7 @@ def run_pipeline(
     aliases = stage("entity_aliases", build_aliases).select("name", "canonical")
 
     def build_triples() -> DataFrame:
-        # skew_salts spreads hot (repo, name) keys in the resolution
-        # joins; output is identical (tests pin it), so it's not part of
-        # the stage signature
-        resolved = resolve_code_edges(mentions, raw_edges, skew_salts=skew_salts)
-        ct = code_triples(resolved)
+        ct = code_triples(resolve_code_edges(mentions, raw_edges))
         nt = nl_triples(raw_edges, aliases)
         out = ct.unionByName(nt)
         if ontology is not None:
@@ -426,9 +421,9 @@ def content_signature(df: DataFrame, prefix: str = "content") -> str:
       the frame's column order.
 
     The prefix is part of the identity ONLY when two verbs must not share
-    commits; verbs that re-derive the same tables from the same corpus
-    (cognify, update) share the default so an unchanged corpus resumes
-    across them."""
+    commits. Every way data comes in (``Cognee.cognify``, ``Cognee.update``,
+    ``incremental_cognify``) cognifies the staged corpus under the default,
+    so an unchanged corpus resumes whichever verb committed it."""
     cols = sorted(df.columns)
     row_hash = F.xxhash64(*cols, *[F.col(c).isNull() for c in cols])
     agg = (
@@ -439,41 +434,6 @@ def content_signature(df: DataFrame, prefix: str = "content") -> str:
         .first()
     )
     return f"{prefix}:{agg.n or 0}:{agg.x}"
-
-
-def update_data(
-    spark: SparkSession,
-    store_root: str,
-    repos: DataFrame,
-    new_rows: DataFrame,
-    id_cols: tuple[str, ...] = ("repo", "path"),
-    **pipeline_kwargs,
-) -> dict:
-    """The ``cognee.update`` verb (api/v1/update/update.py:12-108):
-    ``delete_data(data_id)`` → ``add(new data)`` → ``cognify(incremental)``
-    over one data item.
-
-    Spark re-expression: replace = one anti-join on the item's identity
-    columns + union of the replacement rows; re-derive = ``run_pipeline``
-    under a CONTENT-derived signature, so derived tables recompute exactly
-    when the corpus changed and resume untouched otherwise. The reference's
-    ``incremental_loading`` content-hash skip becomes idempotent upsert:
-    unchanged documents re-derive byte-identical rows (deterministic ids),
-    so the merged graph is the same one an item-level skip would produce.
-
-    ``new_rows`` must carry the corpus schema; rows whose ``id_cols`` match
-    existing rows REPLACE them, unmatched rows are plain adds. Returns the
-    ``run_pipeline`` dict plus {"corpus": updated_frame, "replaced": n}.
-    """
-    keys = new_rows.select(*id_cols).distinct()
-    replaced = repos.join(keys, list(id_cols), "left_semi").count()
-    updated = repos.join(keys, list(id_cols), "left_anti").unionByName(new_rows)
-    out = run_pipeline(
-        spark, updated, store_root, content_signature(updated), **pipeline_kwargs
-    )
-    out["corpus"] = updated
-    out["replaced"] = replaced
-    return out
 
 
 def main() -> None:

@@ -79,6 +79,32 @@ def _index_slice(tables, collection: str):
     return sliced if sliced.take(1) else None
 
 
+def _query_frame(spark, query: str) -> DataFrame:
+    """The one-row (query_id, query_vec) frame of the hash-embedded query.
+    Built from a pandas frame with an explicit schema, so it goes through
+    Arrow into the JVM: a list of rows would become a Python RDD, with one
+    Python task per core just to ship one vector."""
+    import pandas as pd
+
+    from cognee_spark.functions.embeddings import hash_embedding_py
+
+    return spark.createDataFrame(
+        pd.DataFrame({"query_id": ["q0"], "query_vec": [hash_embedding_py(query)]}),
+        "query_id string, query_vec array<double>",
+    )
+
+
+def _query_topk(spark, emb: DataFrame, query: str, k: int) -> DataFrame:
+    """Exact top-k rows of ``emb`` (item_id, text, embedding) by cosine to
+    ``query``: (vec_id, query_id, cosine, rank, text)."""
+    from cognee_spark.operators.similarity_search import brute_force_topk
+
+    top = brute_force_topk(
+        emb, _query_frame(spark, query), k=k, id_col="item_id", vec_col="embedding"
+    )
+    return top.join(emb.select(F.col("item_id").alias("vec_id"), "text"), "vec_id")
+
+
 def _vector_topk(spark, frame, query, k, id_col, text_col, index=None, ivf=None):
     """R1 for the dispatch: probe the committed index when one is present,
     hash-embed on the fly only when not.
@@ -89,28 +115,23 @@ def _vector_topk(spark, frame, query, k, id_col, text_col, index=None, ivf=None)
     embeddings slice, no re-embedding) → on-the-fly hash embedding of
     ``frame`` (demo/bootstrap path — the only one that re-embeds the
     corpus per query)."""
-    from cognee_spark.functions.embeddings import hash_embedding_col, hash_embedding_py
-    from cognee_spark.operators.similarity_search import brute_force_topk, ivf_topk
+    from cognee_spark.functions.embeddings import hash_embedding_col
+    from cognee_spark.operators.similarity_search import ivf_topk
 
-    queries = spark.createDataFrame([("q0", hash_embedding_py(query))], ["query_id", "query_vec"])
     if ivf is not None:
         assigned = ivf["assigned"]
         top = ivf_topk(
-            assigned, ivf["centroids"], queries, k=k,
+            assigned, ivf["centroids"], _query_frame(spark, query), k=k,
             nprobe=ivf.get("nprobe", 4), id_col="item_id", vec_col="embedding",
-        )
-        texts = assigned.select(F.col("item_id").alias("vec_id"), "text")
+        ).join(assigned.select(F.col("item_id").alias("vec_id"), "text"), "vec_id")
     else:
         emb = index if index is not None else frame.select(
             F.col(id_col).alias("item_id"),
             F.col(text_col).alias("text"),
             hash_embedding_col(F.col(text_col)).alias("embedding"),
         )
-        top = brute_force_topk(emb, queries, k=k, id_col="item_id", vec_col="embedding")
-        texts = emb.select(F.col("item_id").alias("vec_id"), "text")
-    return top.join(texts, "vec_id").select(
-        "rank", F.col("vec_id").alias("item_id"), "text"
-    )
+        top = _query_topk(spark, emb, query, k)
+    return top.select("rank", F.col("vec_id").alias("item_id"), "text")
 
 
 def select_search_type(query: str, llm=None) -> str:
@@ -182,17 +203,7 @@ def search(
     def _default_dist(q):
         idx = _index_slice(tables, "Entity_name")
         if idx is not None:
-            from cognee_spark.functions.embeddings import hash_embedding_py
-            from cognee_spark.operators.similarity_search import brute_force_topk
-
-            queries = spark.createDataFrame(
-                [("q0", hash_embedding_py(q))], ["query_id", "query_vec"]
-            )
-            top = brute_force_topk(
-                idx, queries, k=fragment_m, id_col="item_id", vec_col="embedding"
-            )
-            names = idx.select(F.col("item_id").alias("vec_id"), "text")
-            return top.join(names, "vec_id").select(
+            return _query_topk(spark, idx, q, fragment_m).select(
                 F.col("text").alias("name"),
                 (1.0 - F.col("cosine")).alias("distance"),
             )

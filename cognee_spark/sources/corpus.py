@@ -81,17 +81,11 @@ def nl_variant(idx: int, variant: int) -> str:
 
 
 @lru_cache(maxsize=8)
-def _repo_boundaries(n_files: int, skew: str | None = None) -> list[int]:
+def _repo_boundaries(n_files: int) -> list[int]:
     # memoized: file_spec calls this per file; without the cache corpus
     # generation is O(n_files * n_repos) — hours at millions of files
     n_repos = max(5, n_files // 150 + 5)
     weights = [1.0 / (r + 1) ** 1.1 for r in range(n_repos)]
-    if skew == "mega":
-        # one pathological repo holding 30% of ALL files (the north rule's
-        # AQE-skew-join scenario): every join keyed on (repo, ...) gets a
-        # hot partition that AQE must split
-        rest = sum(weights[1:])
-        weights[0] = 0.30 / 0.70 * rest
     total = sum(weights)
     bounds, acc = [], 0.0
     for w in weights:
@@ -128,8 +122,8 @@ def _rng(index: int) -> random.Random:
     return random.Random(seed)
 
 
-def file_spec(index: int, n_files: int, skew: str | None = None) -> FileSpec:
-    bounds = _repo_boundaries(n_files, skew)
+def file_spec(index: int, n_files: int) -> FileSpec:
+    bounds = _repo_boundaries(n_files)
     repo_idx = bisect.bisect_right(bounds, index)
     start = bounds[repo_idx - 1] if repo_idx > 0 else 0
     within = index - start
@@ -171,15 +165,6 @@ def file_spec(index: int, n_files: int, skew: str | None = None) -> FileSpec:
         spec.imports_in_repo.append(prev)
         spec.calls.append((spec.functions[0], f"fn_{repo_idx}_{within - 1}_0"))
     spec.external_deps = [EXTERNAL_DEPS[(index + k) % len(EXTERNAL_DEPS)] for k in range(2)]
-    if skew == "mega" and repo_idx == 0:
-        # EVERY function of EVERY mega-repo file calls the same ambiguous
-        # bare symbol: the resolution join's probe side gets one hot
-        # (repo, "helper") key — hash-partitioning on high-cardinality
-        # (repo, name) spreads repo VOLUME on its own, so genuine join skew
-        # needs a hot KEY. The calls stay unresolved (helper is ambiguous),
-        # so emitted triples are unaffected; only the shuffle distribution is.
-        for fn in spec.functions:
-            spec.calls.append((fn, "helper"))
     # every 4th file defines `helper`; ambiguous within the repo when >= 2 such
     # files exist, in which case bare `helper` calls must be skipped.
     spec.defines_helper = within % 4 == 0
@@ -338,13 +323,11 @@ def build_repos_df(
     spark: SparkSession,
     n_files: int,
     partitions: int | None = None,
-    skew: str | None = None,
 ) -> DataFrame:
     """Distributed deterministic generation of the repos table.
 
     spark.range is evenly split; each task renders its own index range with no
     driver-side data movement, so generation scales linearly with cores.
-    ``skew="mega"`` makes repo 0 hold 30% of all files (AQE skew evidence).
     """
     partitions = partitions or spark.sparkContext.defaultParallelism
 
@@ -352,7 +335,7 @@ def build_repos_df(
         for pdf in batches:
             rows = []
             for index in pdf["id"]:
-                spec = file_spec(int(index), n_files, skew)
+                spec = file_spec(int(index), n_files)
                 commit = hashlib.sha1(f"{spec.repo}:42".encode()).hexdigest()
                 rows.append(
                     {
@@ -369,8 +352,7 @@ def build_repos_df(
 
 
 def write_repos_table(
-    spark: SparkSession, n_files: int, out_dir: str, n_salts: int = 8,
-    skew: str | None = None,
+    spark: SparkSession, n_files: int, out_dir: str, n_salts: int = 8
 ) -> None:
     """Materialize the corpus partitioned by (lang, salt(repo,path)).
 
@@ -379,6 +361,6 @@ def write_repos_table(
     On a real deployment this is an Iceberg table with identity(lang) +
     bucket(repo) partition spec; parquet directory layout stands in here.
     """
-    df = build_repos_df(spark, n_files, skew=skew)
+    df = build_repos_df(spark, n_files)
     df = df.withColumn("salt", F.pmod(F.xxhash64("repo", "path"), F.lit(n_salts)).cast("int"))
     df.repartition("lang", "salt").write.mode("overwrite").partitionBy("lang", "salt").parquet(out_dir)

@@ -8,30 +8,22 @@ exactly-once file-source tracking:
 - `stream_repos`: readStream over a repos parquet directory — new files are
   discovered incrementally; the stream checkpoint IS the pipeline_status
   ledger.
-- `incremental_cognify`: foreachBatch micro-batch → the SAME batch operators
-  (chunk/extract/resolve) → anti-join against already-persisted triples by
-  deterministic key → append only new rows. Deterministic ids make re-delivery
-  idempotent (at-least-once + idempotent write = exactly-once table).
+- `incremental_cognify`: each micro-batch is staged with `Cognee.add`, and
+  the drain ends in one `Cognee.cognify` — the same spine, ledger and tables
+  as a batch cognify. A replayed micro-batch re-adds identical rows, which
+  last-batch-wins makes a no-op on the staged corpus; a crash between drain
+  and cognify is repaired by the next call, which cognifies the whole staged
+  corpus under its content signature (an unchanged corpus resumes every
+  stage).
 - `windowed_event_counts`: watermarked sliding-window aggregation — the
   streaming-analytics operator shape (late data handled by the watermark).
-
-Production sink is an Iceberg MERGE per micro-batch; parquet append +
-anti-join reproduces it here.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cognee_spark.operators.extraction import (
-    extract_from_files,
-    mentions_of,
-    raw_edges_of,
-)
-from cognee_spark.operators.linking import code_triples, resolve_code_edges
 from cognee_spark.sources.corpus import REPOS_SCHEMA
 
 
@@ -48,38 +40,28 @@ def incremental_cognify(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-) -> None:
-    """Process newly arrived repo files into the triples table, exactly once.
+) -> dict | None:
+    """Stage newly arrived repo files into the ``Cognee`` store at
+    ``output_dir``, then cognify the whole staged corpus once.
 
-    Code-mode only per micro-batch (NL linking needs a global alias dictionary;
-    it runs as the periodic batch job). Runs with availableNow and returns
-    when the backlog is drained.
+    Runs with availableNow and cognifies after the backlog is drained — once
+    per drain, not per micro-batch, which would recompute the graph for
+    every ``maxFilesPerTrigger`` files. Returns the ``Cognee.cognify`` dict
+    (tables at ``output_dir/<name>``, e.g. ``triples``, each with its ledger
+    row), or None when nothing was ever staged.
     """
-    triples_path = os.path.join(output_dir, "triples")
+    from cognee_spark.api import Cognee
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.withColumn("content_sha", F.sha2("content", 256))
-        extractions = extract_from_files(docs)
-        mentions = mentions_of(extractions)
-        raw_edges = raw_edges_of(extractions)
-        fresh = code_triples(resolve_code_edges(mentions, raw_edges))
-        spark_l = batch_df.sparkSession
-        has_existing = os.path.isdir(triples_path) and any(
-            name.endswith(".parquet") for name in os.listdir(triples_path)
-        )
-        if has_existing:
-            existing = spark_l.read.parquet(triples_path).select("subj", "pred", "obj")
-            fresh = fresh.join(existing, ["subj", "pred", "obj"], "left_anti")
-        fresh.write.mode("append").parquet(triples_path)
-
+    engine = Cognee(spark, output_dir)
     query = (
         stream_repos(spark, input_dir)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(lambda batch_df, _batch_id: engine.add(batch_df))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     query.awaitTermination()
+    return engine.cognify() if engine._staged() else None
 
 
 def windowed_event_counts(

@@ -5,11 +5,12 @@ store root."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from cognee_spark.api import Cognee
+from cognee_spark.api import CORPUS_SCHEMA, Cognee
 
 
 def test_add_cognify_search_roundtrip(spark, tmp_path):
@@ -92,3 +93,30 @@ def test_memify_defaults_build_triplet_collection(spark, tmp_path):
     assert {r.text for r in scoped["result"].collect()} == {
         "gamma-›depends_on-›delta"
     }
+
+
+def test_add_raises_on_an_unreadable_staging_table(spark, tmp_path):
+    # restarting the batch numbering at 1 would let older batches win
+    # last-batch-wins over the new rows: a read error must surface
+    engine = Cognee(spark, str(tmp_path / "kg"))
+    os.makedirs(engine._staging)
+    with open(os.path.join(engine._staging, "part-0.txt"), "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        engine.add(["text"])
+
+
+def test_corpus_breaks_same_batch_ties_on_the_row(spark, tmp_path):
+    # two rows of one (repo, path) in ONE add tie on the batch: the smallest
+    # (commit, lang, content) wins, however the batch is partitioned
+    rows = [
+        ("r", "a.md", "c2", "md", "newer commit"),
+        ("r", "a.md", "c1", "md", "zeta"),
+        ("r", "a.md", "c1", "md", "alpha"),
+        ("r", "b.md", "c0", "md", "other"),
+    ]
+    for n in (1, 8):
+        engine = Cognee(spark, str(tmp_path / f"kg{n}"))
+        engine.add(spark.createDataFrame(rows, CORPUS_SCHEMA).repartition(n))
+        got = {(r.path, r.commit, r.content) for r in engine.corpus().collect()}
+        assert got == {("a.md", "c1", "alpha"), ("b.md", "c0", "other")}

@@ -184,22 +184,3 @@ def test_structural_edge_families(result, spark):
         .select("relationship_name").distinct().collect()
     }
     assert kinds == {"is_a", "exists_in", "mentioned_in"}
-
-
-def test_salted_resolution_joins_identical_output(spark, tmp_path):
-    """Explicit skew salting of the resolution joins (skew_salts=4) spreads
-    hot (repo, name) keys without changing a single emitted triple — over the
-    SKEWED corpus where the hot key actually exists."""
-    repos = build_repos_df(spark, N, skew="mega")
-    plain = run_pipeline(
-        spark, repos, str(tmp_path / "plain"), f"sk:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
-    salted = run_pipeline(
-        spark, repos, str(tmp_path / "salted"), f"sk:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-        skew_salts=4,
-    )
-    assert _triple_set(plain["tables"]["triples"]) == _triple_set(
-        salted["tables"]["triples"]
-    )

@@ -1,12 +1,14 @@
-"""Structured Streaming incremental ingest: exactly-once triples, late-data
-windowed aggregation."""
+"""Structured Streaming incremental ingest through the one cognify spine,
+late-data windowed aggregation."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from cognee_spark.pipeline import run_pipeline
 from cognee_spark.sources.corpus import build_repos_df
 from cognee_spark.streaming.incremental import incremental_cognify, windowed_event_counts
 
@@ -20,6 +22,15 @@ def _write_slice(spark, repos, lo, hi, input_dir):
     ).write.mode("append").parquet(input_dir)
 
 
+def _rows(df):
+    cols = sorted(df.columns)
+    return cols, sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def _ledger_ts(out):
+    return {c["stage"]: c["ts"] for c in out["metrics"]["stages"]}
+
+
 def test_incremental_matches_batch(spark, tmp_path):
     input_dir = str(tmp_path / "incoming")
     output_dir = str(tmp_path / "out")
@@ -27,40 +38,35 @@ def test_incremental_matches_batch(spark, tmp_path):
     os.makedirs(input_dir, exist_ok=True)
 
     repos = build_repos_df(spark, N).withColumn(
-        "_idx", F.row_number().over(__import__("pyspark").sql.window.Window.orderBy("repo", "path"))
+        "_idx", F.row_number().over(Window.orderBy("repo", "path"))
     ).localCheckpoint()
 
-    # batch reference over the full corpus
-    from cognee_spark.operators.extraction import extract_from_files, mentions_of, raw_edges_of
-    from cognee_spark.operators.linking import code_triples, resolve_code_edges
-
-    full = repos.drop("_idx").withColumn("content_sha", F.sha2("content", 256))
-    ex = extract_from_files(full)
-    expected = {
-        (r.subj, r.pred, r.obj)
-        for r in code_triples(resolve_code_edges(mentions_of(ex), raw_edges_of(ex)))
-        .select("subj", "pred", "obj")
-        .collect()
-    }
+    # nothing has arrived yet: nothing is staged, nothing is cognified
+    assert incremental_cognify(spark, input_dir, output_dir, checkpoint) is None
 
     # two arrivals
     _write_slice(spark, repos, 1, 61, input_dir)
     incremental_cognify(spark, input_dir, output_dir, checkpoint)
     _write_slice(spark, repos, 61, N + 1, input_dir)
-    incremental_cognify(spark, input_dir, output_dir, checkpoint)
-    # re-run with no new data: must be a no-op (exactly-once)
-    incremental_cognify(spark, input_dir, output_dir, checkpoint)
+    got = incremental_cognify(spark, input_dir, output_dir, checkpoint)
 
-    got_df = spark.read.parquet(f"{output_dir}/triples")
-    rows = got_df.count()
-    got = {(r.subj, r.pred, r.obj) for r in got_df.select("subj", "pred", "obj").collect()}
-    assert rows == len(got), "duplicate triples appended"
-    # NOTE: incremental resolution sees only per-batch symbols; cross-batch
-    # suffix resolution can drop edges whose target arrived in another batch.
-    # Everything it emits must be a subset of batch output, and same-batch
-    # relations must all be present.
-    assert got <= expected
-    assert len(got) >= 0.7 * len(expected)
+    # every table equals a from-scratch cognify over the final corpus
+    expected = run_pipeline(
+        spark, repos.drop("_idx"), str(tmp_path / "batch"), f"batch:{N}",
+        compute_metrics=False,
+    )
+    assert set(got["tables"]) == set(expected["tables"])
+    for name, table in expected["tables"].items():
+        assert _rows(got["tables"][name]) == _rows(table), name
+    # the triples are a committed store table with their ledger row
+    assert spark.read.parquet(f"{output_dir}/triples").count() == (
+        expected["tables"]["triples"].count()
+    )
+    assert "triples" in _ledger_ts(got)
+
+    # re-run with no new data: no stage is recomputed (exactly-once)
+    again = incremental_cognify(spark, input_dir, output_dir, checkpoint)
+    assert _ledger_ts(again) == _ledger_ts(got)
 
 
 def test_windowed_event_counts_schema(spark, tmp_path):

@@ -1,22 +1,22 @@
-"""update_data (pipeline.py) vs the reference's update verb
-(api/v1/update/update.py:12-108): delete+add+cognify as replace-rows +
-content-signature re-derive."""
+"""Cognee.update (api.py) vs the reference's update verb
+(api/v1/update/update.py:12-108): delete+add+cognify as a staged add
+(last batch wins on the item key) + content-signature re-derive."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cognee_spark.pipeline import run_pipeline, update_data
+from cognee_spark.api import Cognee
 from cognee_spark.sources.corpus import build_repos_df
+
+SPINE = {"with_summaries": False, "with_index": False}
 
 
 def test_update_replaces_item_and_rederives(spark, tmp_path):
-    root = str(tmp_path / "kg")
+    engine = Cognee(spark, str(tmp_path / "kg"))
     repos = build_repos_df(spark, 12)
-    before = run_pipeline(
-        spark, repos, root, "v1",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
+    engine.add(repos)
+    before = engine.cognify(**SPINE)
     target = repos.select("repo", "path").first()
     old_triples = {
         (r.subj, r.pred, r.obj) for r in before["tables"]["triples"].collect()
@@ -26,10 +26,7 @@ def test_update_replaces_item_and_rederives(spark, tmp_path):
     new_rows = repos.where(
         (F.col("repo") == target.repo) & (F.col("path") == target.path)
     ).withColumn("content", F.lit(""))
-    out = update_data(
-        spark, root, repos, new_rows,
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
+    out = engine.update(new_rows, **SPINE)
     assert out["replaced"] == 1
     assert out["corpus"].count() == repos.count()  # replace, not append
     after = {(r.subj, r.pred, r.obj) for r in out["tables"]["triples"].collect()}
@@ -44,33 +41,27 @@ def test_update_replaces_item_and_rederives(spark, tmp_path):
 
 
 def test_update_with_unmatched_rows_is_an_add(spark, tmp_path):
-    root = str(tmp_path / "kg")
+    engine = Cognee(spark, str(tmp_path / "kg"))
     repos = build_repos_df(spark, 8)
+    engine.add(repos)
     added = repos.limit(1).select(
         F.lit("new_repo").alias("repo"), F.lit("brand/new.py").alias("path"),
         *[c for c in repos.columns if c not in ("repo", "path")],
     )
-    out = update_data(
-        spark, root, repos, added,
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
+    out = engine.update(added, **SPINE)
     assert out["replaced"] == 0
     assert out["corpus"].count() == repos.count() + 1
 
 
 def test_noop_update_resumes_committed_stages(spark, tmp_path):
-    root = str(tmp_path / "kg")
+    engine = Cognee(spark, str(tmp_path / "kg"))
     repos = build_repos_df(spark, 8)
+    engine.add(repos)
     one = repos.limit(1)
-    first = update_data(
-        spark, root, repos, one,
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
+    first = engine.update(one, **SPINE)
     # same corpus again → same content signature → stages resume, not rebuild
-    second = update_data(
-        spark, root, repos, one,
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
+    second = engine.update(one, **SPINE)
+
     def _ts(out):
         return {
             c["stage"]: c["ts"] for c in out["metrics"]["stages"]

@@ -1,8 +1,8 @@
 """Per-stage executor-time attribution for one pipeline leg.
 
-Runs the north-rule pipeline once (same protocol as bench_scaling.py: fresh
-JVM, pre-materialized input scan, warm-up excluded) with the Spark event log
-enabled, then folds the log into a per-stage table:
+Runs the north-rule pipeline once (fresh JVM, pre-materialized input scan,
+warm-up excluded) with the Spark event log enabled, then folds the log into
+a per-stage table:
 
     stage | wall(s) | run(core-s) | cpu(core-s) | gc(s) | shuf_w | shuf_r | input | tasks
 
@@ -30,6 +30,18 @@ from collections import defaultdict
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+
+PREPARE = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from cognee_spark.session import get_spark
+from cognee_spark.sources.corpus import write_repos_table
+
+spark = get_spark(app_name="attrib_prepare", master="local[32]", shuffle_partitions=32)
+write_repos_table(spark, {n_files}, {input_dir!r})
+print("prepared")
+spark.stop()
+"""
 
 RUNNER = r"""
 import json, sys, tempfile, time, shutil
@@ -79,15 +91,25 @@ spark.stop()
 """
 
 
-def run_leg(n_files: int, cpus: int, mode: str, input_dir: str, evdir: str) -> dict:
-    code = RUNNER.format(repo=str(REPO), cpus=cpus, mode=mode,
-                         input_dir=input_dir, n_files=n_files, evdir=evdir)
+def _run_code(code: str) -> str:
+    """Run ``code`` in a fresh Python (own JVM); return its last stdout line."""
     env = dict(os.environ, PYTHONPATH=str(REPO))
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, env=env, timeout=3600)
     if out.returncode != 0:
         raise RuntimeError(out.stderr[-3000:])
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    return out.stdout.strip().splitlines()[-1]
+
+
+def prepare_input(n_files: int, input_dir: str) -> None:
+    """Write the deterministic n-file repos table to ``input_dir``."""
+    _run_code(PREPARE.format(repo=str(REPO), n_files=n_files, input_dir=input_dir))
+
+
+def run_leg(n_files: int, cpus: int, mode: str, input_dir: str, evdir: str) -> dict:
+    return json.loads(_run_code(RUNNER.format(
+        repo=str(REPO), cpus=cpus, mode=mode, input_dir=input_dir,
+        n_files=n_files, evdir=evdir)))
 
 
 def attribute(evdir: str) -> dict[str, dict]:
@@ -189,8 +211,6 @@ def main() -> None:
     if args.report_only:
         print_report(None, attribute(args.report_only))
         return
-
-    from bench_scaling import prepare_input  # noqa: E402 (repo root on path)
 
     if args.input_dir:
         input_dir, cleanup = args.input_dir, False
