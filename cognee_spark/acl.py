@@ -39,7 +39,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cognee_spark.functions.ids import id_for_col, node_id_col
+from cognee_spark.functions.ids import id_for_col
+from cognee_spark.operators.indexing import triplet_id_col
 
 _log = logging.getLogger("cognee_spark.acl")
 
@@ -117,9 +118,10 @@ def scope_tables(
       chunk containers (``is_a`` targets, ``exists_in``/``mentioned_in``
       sources);
     - embeddings                  → per-collection: Entity_name from scoped
-      nodes, TextSummary_text from scoped summaries, Triplet_text re-derived
-      from scoped triples, dictionary collections pass through, unknown
-      collections are DROPPED (fail closed);
+      nodes, TextSummary_text from scoped summaries, DocumentChunk_text from
+      scoped chunks, Triplet_text re-derived from scoped triples, dictionary
+      collections pass through, unknown collections are DROPPED (fail
+      closed);
     - anything unrecognized       → dropped from the result dict.
     """
     out: dict[str, DataFrame] = {}
@@ -182,17 +184,18 @@ def scope_tables(
                 else None
             )
             triplet_ids = triples.select(
-                node_id_col(
-                    F.concat(
-                        id_for_col("Entity", F.col("subj")),
-                        F.col("pred"),
-                        id_for_col("Entity", F.col("obj")),
-                    )
-                ).alias("item_id")
+                triplet_id_col(F.col("subj"), F.col("pred"), F.col("obj")).alias(
+                    "item_id"
+                )
             )
             live_items = entity_ids.union(triplet_ids)
             if summary_ids is not None:
                 live_items = live_items.union(summary_ids)
+            if out.get("chunks") is not None:
+                # DocumentChunk_text vectors of the scoped chunks
+                live_items = live_items.union(
+                    out["chunks"].select(F.col("chunk_id").alias("item_id"))
+                )
             scoped_emb = embeddings.where(
                 ~F.col("collection").isin(*DICTIONARY_COLLECTIONS)
             ).join(live_items.distinct(), "item_id", "semi")

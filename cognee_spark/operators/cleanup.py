@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cognee_spark.operators.indexing import triplet_id_col
+
 
 def unused_documents(
     data: DataFrame,
@@ -52,8 +54,9 @@ def gc_graph(
     Reachability, each step one semi-join:
       live docs → their chunks → the mentions in those chunks → the entity
       NAMES still referenced → live nodes → live triples (BOTH endpoints
-      live) → live embeddings (item_id still among live node/type ids — a
-      collection whose item vanished is swept with it).
+      live) → live embeddings (item_id still among its collection's live
+      ids: node/type/predicate/triplet ids, kept summaries and kept
+      chunks — a collection whose item vanished is swept with it).
 
     Returns {"chunks", "mentions", "nodes", "triples", "embeddings"} → the
     KEPT frames; orphans are (table minus kept), materialized by the caller
@@ -117,9 +120,15 @@ def gc_graph(
             .union(
                 kept_triples.select("subj", "pred", "obj").distinct().select(
                     F.lit("Triplet_text").alias("collection"),
-                    _triplet_id(F.col("subj"), F.col("pred"), F.col("obj")).alias(
+                    triplet_id_col(F.col("subj"), F.col("pred"), F.col("obj")).alias(
                         "item_id"
                     ),
+                )
+            )
+            .union(
+                kept_chunks.select(
+                    F.lit("DocumentChunk_text").alias("collection"),
+                    F.col("chunk_id").alias("item_id"),
                 )
             )
         )
@@ -132,7 +141,7 @@ def gc_graph(
             )
         known = [
             "Entity_name", "EntityType_name", "EdgeType_relationship_name",
-            "Triplet_text", "TextSummary_text",
+            "Triplet_text", "TextSummary_text", "DocumentChunk_text",
         ]
         swept = embeddings.where(F.col("collection").isin(known)).join(
             live_pairs.distinct(), ["collection", "item_id"], "left_semi"
@@ -152,15 +161,6 @@ def _edge_type_id(pred):
     from cognee_spark.functions.ids import id_for_col
 
     return id_for_col("EdgeType", pred)
-
-
-def _triplet_id(subj, pred, obj):
-    """The Triplet_text collection's id rule (indexing.build_triplet_index)."""
-    from cognee_spark.functions.ids import id_for_col, node_id_col
-
-    return node_id_col(
-        F.concat(id_for_col("Entity", subj), pred, id_for_col("Entity", obj))
-    )
 
 
 def cleanup_report(

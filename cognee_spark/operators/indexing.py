@@ -9,14 +9,25 @@ as EdgeType points (cognee/tasks/storage/index_graph_edges.py:39-52).
 
 Spark re-expression: one tall ``embeddings`` table
 (collection, item_id, text, embedding) built with select/union over the
-committed nodes / triples / summaries tables and the entity_types frame
-derived from nodes; the embedding itself is a deterministic hash embedding computed in codegen
-(functions/embeddings.py — the pluggable encoder seam). Dedup is a
-dropDuplicates on (collection, item_id) — deterministic ids make the upsert
-a merge by construction. Retrieval (R1/R6) then runs
-similarity_search.brute_force_topk / ivf_topk over a collection slice, which
-is a partition-pruned scan because the table is written partitioned by
-collection.
+committed nodes / triples / summaries / chunks tables and the entity_types
+frame derived from nodes. Its collections:
+
+- ``Entity_name``                 — node names (nodes.entity_id);
+- ``EntityType_name``             — node kinds (entity_types.type_id);
+- ``EdgeType_relationship_name``  — distinct predicates;
+- ``Triplet_text``                — one ``subj-›pred-›obj`` row per distinct
+  triple (build_triplet_index's projection, the memify collection);
+- ``DocumentChunk_text``          — chunk texts (chunks.chunk_id);
+- ``TextSummary_text``            — chunk summaries, when given.
+
+The embedding itself is a deterministic hash embedding computed in codegen
+(functions/embeddings.py — the pluggable encoder seam), applied once over
+the union. Dedup is a dropDuplicates on (collection, item_id) —
+deterministic ids make the upsert a merge by construction. Retrieval (R1/R6)
+then runs similarity_search.brute_force_topk / ivf_topk over a collection
+slice, which is a partition-pruned scan because the table is written
+partitioned by collection; every vector search type reads that slice and
+embeds on the fly only when a store has no index.
 """
 
 from __future__ import annotations
@@ -25,19 +36,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cognee_spark.functions.embeddings import DEFAULT_DIM, hash_embedding_col
-from cognee_spark.functions.ids import id_for_col
+from cognee_spark.functions.ids import id_for_col, node_id_col
+
+
+def triplet_id_col(subj, pred, obj):
+    """The ``Triplet_text`` item id: generate_node_id(start_id +
+    relationship_name + end_id) over the endpoints' Entity ids
+    (get_triplet_datapoints.py:100-167). The one copy of the rule — the
+    index build, the GC sweep and the ACL scoping all derive it here."""
+    return node_id_col(
+        F.concat(id_for_col("Entity", subj), pred, id_for_col("Entity", obj))
+    )
+
+
+def _triplet_rows(triples: DataFrame) -> DataFrame:
+    """(collection, item_id, text) rows of the ``Triplet_text`` collection."""
+    return triples.select(
+        F.lit("Triplet_text").alias("collection"),
+        triplet_id_col(F.col("subj"), F.col("pred"), F.col("obj")).alias("item_id"),
+        F.concat_ws("-›", "subj", "pred", "obj").alias("text"),
+    )
+
+
+def _embedded(rows: DataFrame, dim: int) -> DataFrame:
+    """Upsert-by-deterministic-id, then embed each surviving row once."""
+    return rows.dropDuplicates(["collection", "item_id"]).withColumn(
+        "embedding", hash_embedding_col(F.col("text"), dim=dim)
+    )
 
 
 def build_index(
     nodes: DataFrame,
     entity_types: DataFrame,
     triples: DataFrame,
+    chunks: DataFrame,
     summaries: DataFrame | None = None,
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """(collection, item_id, text, embedding) rows for every indexable field.
 
     Collections mirror index_data_points.py naming: ``{Type}_{field}``.
+    ``TextSummary_text`` is built only when ``summaries`` are given.
     """
     entity_name = nodes.select(
         F.lit("Entity_name").alias("collection"),
@@ -58,7 +97,18 @@ def build_index(
             "text",
         )
     )
-    out = entity_name.unionByName(type_name).unionByName(edge_types)
+    out = (
+        entity_name.unionByName(type_name)
+        .unionByName(edge_types)
+        .unionByName(_triplet_rows(triples))
+        .unionByName(
+            chunks.select(
+                F.lit("DocumentChunk_text").alias("collection"),
+                F.col("chunk_id").alias("item_id"),
+                F.col("text"),
+            )
+        )
+    )
     if summaries is not None:
         out = out.unionByName(
             summaries.select(
@@ -67,9 +117,7 @@ def build_index(
                 F.col("summary").alias("text"),
             )
         )
-    return out.dropDuplicates(["collection", "item_id"]).withColumn(
-        "embedding", hash_embedding_col(F.col("text"), dim=dim)
-    )
+    return _embedded(out, dim)
 
 
 def build_triplet_index(triples: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
@@ -79,25 +127,17 @@ def build_triplet_index(triples: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame
     becomes a Triplet datapoint whose embeddable text is
     ``{start_text}-›{rel_text}-›{end_text}`` (node texts from their
     index_fields — Entity.name here — relationship text from the edge) and
-    whose id is generate_node_id(start_id + relationship_name + end_id);
-    Triplet.metadata.index_fields = ["text"], so the collection is
-    ``Triplet_text``. The reference pages the graph through the driver in
-    batches of 100 (get_triplets_batch offset/limit) — here the whole build
-    is one narrow projection over the triples table; dedup by item_id is the
-    same upsert-by-deterministic-id the other collections use."""
-    from cognee_spark.functions.ids import node_id_col
+    whose id is :func:`triplet_id_col`; Triplet.metadata.index_fields =
+    ["text"], so the collection is ``Triplet_text``. The reference pages the
+    graph through the driver in batches of 100 (get_triplets_batch
+    offset/limit) — here the whole build is one narrow projection over the
+    triples table; dedup by item_id is the same upsert-by-deterministic-id
+    the other collections use.
 
-    start_id = id_for_col("Entity", F.col("subj"))
-    end_id = id_for_col("Entity", F.col("obj"))
-    return (
-        triples.select(
-            F.lit("Triplet_text").alias("collection"),
-            node_id_col(F.concat(start_id, F.col("pred"), end_id)).alias("item_id"),
-            F.concat_ws("-›", "subj", "pred", "obj").alias("text"),
-        )
-        .dropDuplicates(["collection", "item_id"])
-        .withColumn("embedding", hash_embedding_col(F.col("text"), dim=dim))
-    )
+    The cognify ``embeddings`` stage commits the same rows inside
+    :func:`build_index`, so search reads them from the committed index;
+    this standalone build serves memify and stores without an index."""
+    return _embedded(_triplet_rows(triples), dim)
 
 
 GRAPHITI_INDEX_FIELDS = ("name", "summary", "content")  # GraphitiNode metadata
@@ -168,11 +208,7 @@ def reindex_graphiti_objects(
         id_for_col("EdgeType", F.col("relationship_name")).alias("item_id"),
         F.col("relationship_name").alias("text"),
     )
-    index = (
-        node_points.unionByName(edge_points)
-        .dropDuplicates(["collection", "item_id"])
-        .withColumn("embedding", hash_embedding_col(F.col("text"), dim=dim))
-    )
+    index = _embedded(node_points.unionByName(edge_points), dim)
     return {
         "nodes": norm_nodes,
         "edges": norm_edges,

@@ -75,10 +75,14 @@ def _components_hybrid(spark, pairs: DataFrame) -> DataFrame:
         ra, rb = find(row.a), find(row.b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    mapping = [(node, find(node)) for node in parent]
-    if not mapping:
-        return spark.createDataFrame([], "node string, component string")
-    return spark.createDataFrame(mapping, ["node", "component"])
+    # a pandas frame with an explicit schema goes into the JVM through
+    # Arrow; a list of rows would become a Python RDD, one Python task per
+    # core (the empty mapping takes the same path)
+    nodes = list(parent)
+    mapping = pd.DataFrame(
+        {"node": nodes, "component": [find(n) for n in nodes]}, dtype=object
+    )
+    return spark.createDataFrame(mapping, "node string, component string")
 
 
 # --- code-mode resolution ------------------------------------------------------

@@ -9,8 +9,9 @@
   feedback-blended (CogneeGraph.py:470-540), as a join + window rank
 - resolve_edges_to_text: triples → "A --[rel]--> B (edge_text)" context
   lines (resolve_edges_to_text.py:12-107)
-- bm25_score: lexical retrieval (bm25_retriever.py:9-57) — idf/tf computed
-  with groupBy, score per (query_term, doc) via broadcast join
+- bm25_score: lexical retrieval (bm25_retriever.py:9-57) — per-document
+  length and query-term counts in one groupBy, corpus constants in one
+  broadcast 1-row frame
 """
 
 from __future__ import annotations
@@ -550,42 +551,42 @@ def bm25_score(
 ) -> DataFrame:
     """BM25 top-k documents for a bag of query terms, all native ops.
 
-    tf/df/avgdl from groupBy aggregates; idf uses the standard
-    ln(1 + (N - df + 0.5)/(df + 0.5)) form (bm25_retriever.py semantics)."""
+    One aggregate per document gives its length and the count of each query
+    term; one 1-row frame of corpus constants (N, avgdl, each term's df) is
+    crossed into the scoring plan, so the whole score is one lazy plan with
+    no driver action. idf uses the standard ln(1 + (N - df + 0.5)/(df + 0.5))
+    form (bm25_retriever.py semantics); documents holding no query term are
+    not scored."""
+    terms = list(dict.fromkeys(query_terms))
     tokens = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("term"),
     ).where(F.col("term") != "")
-    doc_len = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    # one driver action for both corpus constants (two 1-row aggregates)
-    stats = (
-        doc_len.agg(F.avg("dl").alias("avgdl"))
-        .crossJoin(docs.agg(F.count(F.lit(1)).alias("n_docs")))
-        .first()
+    per_doc = tokens.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("dl"),
+        F.array(*[F.count(F.when(F.col("term") == t, 1)) for t in terms]).alias("tf"),
     )
-    n_docs, avgdl = stats.n_docs, stats.avgdl or 1.0
+    stats = per_doc.agg(
+        F.avg("dl").alias("avgdl"),
+        F.array(*[F.count(F.when(F.col("tf")[i] > 0, 1)) for i in range(len(terms))])
+        .alias("df"),
+    ).crossJoin(docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs")))
 
-    q = F.array(*[F.lit(t) for t in query_terms])
-    tf = (
-        tokens.where(F.array_contains(q, F.col("term")))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = df_.withColumn(
-        "idf", F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    )
+    def term_score(acc, x):
+        idf = F.log(1.0 + (F.col("n_docs") - x["df"] + 0.5) / (x["df"] + 0.5))
+        norm = k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+        # a term the document lacks scores exactly 0.0 (tf = 0, idf > 0)
+        return acc + idf * (x["tf"] * (k1 + 1)) / (x["tf"] + norm)
+
     scored = (
-        tf.join(F.broadcast(idf), "term")
-        .join(doc_len, "doc_id")
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))),
+        per_doc.where(F.exists("tf", lambda n: n > 0))
+        .crossJoin(F.broadcast(stats))
+        .select(
+            "doc_id",
+            F.round(
+                F.aggregate(F.arrays_zip("tf", "df"), F.lit(0.0), term_score), 9
+            ).alias("bm25"),
         )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 9).alias("bm25"))
     )
     # distributed top-k: TakeOrderedAndProject, then rank over the k survivors
     top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)

@@ -305,13 +305,18 @@ def run_pipeline(
     }
     if with_index:
         # index stage (index_data_points.py:10-68): per-(type,field)
-        # embedding collections over the committed graph tables
+        # embedding collections over the committed graph tables, including
+        # Triplet_text and DocumentChunk_text, so every vector search reads
+        # the committed vectors instead of embedding per query. The stage
+        # has its own signature: a store whose index predates those two
+        # collections rebuilds it instead of resuming it.
         leaves["embeddings"] = stage(
             "embeddings",
             lambda: _stamp(
-                build_index(nodes, entity_types, triples, summaries=summaries),
+                build_index(nodes, entity_types, triples, chunks, summaries=summaries),
                 "index",
             ),
+            signature=f"{sig}|idx=2",
             partition_by=["collection"],
         )
 

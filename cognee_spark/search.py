@@ -113,8 +113,13 @@ def _vector_topk(spark, frame, query, k, id_col, text_col, index=None, ivf=None)
     similarity_search.ivf_topk over the prebuilt cell-assigned index, the
     scale path) → ``index`` (brute-force cosine over the committed
     embeddings slice, no re-embedding) → on-the-fly hash embedding of
-    ``frame`` (demo/bootstrap path — the only one that re-embeds the
-    corpus per query)."""
+    ``frame`` (the fallback for stores without an index — the only path
+    that re-embeds the corpus per query).
+
+    The cognify ``embeddings`` stage commits every collection the dispatch
+    reads (TextSummary_text, DocumentChunk_text, Triplet_text, Entity_name),
+    so on a store built with ``with_index=True`` every vector search type
+    takes the ``index`` path."""
     from cognee_spark.functions.embeddings import hash_embedding_col
     from cognee_spark.operators.similarity_search import ivf_topk
 
@@ -279,12 +284,14 @@ def search(
             truth=truth, q_coords=q_coords, truth_epoch=truth_epoch,
         )
     if st == "TRIPLET_COMPLETION":
-        from cognee_spark.operators.indexing import build_triplet_index
+        index = _index_slice(tables, "Triplet_text")
+        if index is None:
+            # no committed index (with_index=False, or a store whose index
+            # predates the collection): embed the triples for this query
+            from cognee_spark.operators.indexing import build_triplet_index
 
-        return _vector_topk(
-            spark, None, query, top_k, "item_id", "text",
-            index=build_triplet_index(tables["triples"].select("subj", "pred", "obj")),
-        )
+            index = build_triplet_index(tables["triples"].select("subj", "pred", "obj"))
+        return _vector_topk(spark, None, query, top_k, "item_id", "text", index=index)
     if st == "GRAPH_COMPLETION":
         from cognee_spark.operators.retrieval import graph_completion_context
 

@@ -113,6 +113,8 @@ def _graph_tables(spark):
             ("TextSummary_text", "sA", "about alice", [3.0]),
             ("TextSummary_text", "sC", "about carol", [4.0]),
             ("EntityType_name", id_for_py("EntityType", "person"), "person", [5.0]),
+            ("DocumentChunk_text", "chA", "alice builds engines", [7.0]),
+            ("DocumentChunk_text", "chC", "carol paints engines", [8.0]),
             ("Mystery_blob", "m1", "??", [6.0]),  # unknown collection
         ],
         "collection string, item_id string, text string, embedding array<double>",
@@ -154,6 +156,8 @@ def test_scope_tables_narrows_every_provenance_family(spark):
     assert ("Entity_name", id_for_py("Entity", "alice")) in emb
     assert ("TextSummary_text", "sA") in emb
     assert ("TextSummary_text", "sC") not in emb  # carol's summary gone
+    assert ("DocumentChunk_text", "chA") in emb  # in-scope chunk vector kept
+    assert ("DocumentChunk_text", "chC") not in emb  # carol's chunk vector gone
     assert ("EntityType_name", id_for_py("EntityType", "person")) in emb  # dictionary
     assert not any(c == "Mystery_blob" for c, _ in emb)  # unknown fails CLOSED
 

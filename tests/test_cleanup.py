@@ -85,6 +85,19 @@ def test_hard_delete_cascade_removes_orphans_and_only_orphans(spark, tmp_path):
     assert any(c == "EdgeType_relationship_name" for c, _ in kept_items)
     assert any(c == "TextSummary_text" for c, _ in kept_items)
 
+    # chunk vectors are live exactly while their chunk is: B's go, A's stay
+    def chunk_vectors(emb):
+        return {
+            r.item_id
+            for r in emb.where(F.col("collection") == "DocumentChunk_text").collect()
+        }
+
+    all_chunks = {r.chunk_id for r in tables["chunks"].collect()}
+    kept_chunks = {r.chunk_id for r in kept["chunks"].collect()}
+    assert chunk_vectors(tables["embeddings"]) == all_chunks
+    assert kept_chunks and kept_chunks < all_chunks
+    assert chunk_vectors(kept["embeddings"]) == kept_chunks
+
 
 def test_report_counts_totals_kept_orphaned(spark, tmp_path):
     tables = _pipeline_tables(spark, tmp_path)

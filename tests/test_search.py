@@ -257,3 +257,66 @@ def test_graph_completion_fragment_seeded_from_index(spark, tables):
     )
     # a 1-entity fragment cannot cover both endpoints of any triple
     assert "--[" not in tight
+
+
+@pytest.fixture(scope="module")
+def store_tables(spark, tmp_path_factory):
+    """A cognify store over a small synthetic corpus, index committed."""
+    from cognee_spark.pipeline import run_pipeline
+    from cognee_spark.sources.corpus import build_repos_df
+
+    out = run_pipeline(
+        spark, build_repos_df(spark, 40), str(tmp_path_factory.mktemp("kg") / "store"),
+        "search-index", compute_metrics=False, with_index=True,
+    )
+    return out["tables"]
+
+
+def test_embeddings_stage_commits_triplet_and_chunk_collections(spark, store_tables):
+    """The embeddings stage holds one Triplet_text row per distinct triplet id
+    and one DocumentChunk_text row per chunk, so vector search never has to
+    embed the triples or chunks per query."""
+    from cognee_spark.operators.indexing import triplet_id_col
+
+    emb = store_tables["embeddings"]
+    triplet_ids = {
+        r.item_id
+        for r in store_tables["triples"].select(
+            triplet_id_col(F.col("subj"), F.col("pred"), F.col("obj")).alias("item_id")
+        ).distinct().collect()
+    }
+    committed = [
+        r.item_id for r in emb.where(F.col("collection") == "Triplet_text").collect()
+    ]
+    assert triplet_ids and len(committed) == len(triplet_ids)
+    assert set(committed) == triplet_ids
+
+    chunk_ids = [r.chunk_id for r in store_tables["chunks"].select("chunk_id").collect()]
+    committed = [
+        r.item_id
+        for r in emb.where(F.col("collection") == "DocumentChunk_text").collect()
+    ]
+    assert chunk_ids and sorted(committed) == sorted(chunk_ids)
+
+
+@pytest.mark.parametrize(
+    "query", ["ZephyrService uses QuokkaRegistry", "maple hub depends on onyx daemon"]
+)
+def test_committed_index_answers_equal_on_the_fly(spark, store_tables, query):
+    """Every vector search type returns the same rows from the committed index
+    as from the on-the-fly embedding of a tables dict without one."""
+    bare = {k: v for k, v in store_tables.items() if k != "embeddings"}
+
+    def rows(tables, search_type):
+        out = search(spark, tables, search_type, query, top_k=5)
+        if isinstance(out, str):
+            return out
+        return sorted(tuple(r) for r in out.collect())
+
+    for search_type in (
+        "SUMMARIES", "CHUNKS", "RAG_COMPLETION", "HYBRID_COMPLETION",
+        "TRIPLET_COMPLETION",
+    ):
+        via_index = rows(store_tables, search_type)
+        assert via_index, search_type
+        assert via_index == rows(bare, search_type), search_type
