@@ -137,11 +137,15 @@ def _best_of(trials: list[dict]) -> dict:
 
 
 def _ab_baseline(
-    names: list[str], sf_dir: str, cpus: int, trials: int = 2
+    names: list[str], sf_dir: str, cpus: int, trials: int = 3
 ) -> dict | None:
     """Interleaved best-of-N A/B: head vs previous-round commit, identical
-    runners. Returns {"ref", "head", "base", "ratio_total"} — ratio_total is
-    head/base on the shared query set (1.0 ± noise when code didn't change)."""
+    runners. N = 3 trials per arm by default (best-of-2 let one unlucky pair
+    of runs show a phantom ratio above 1.05), and the arm that runs first
+    alternates from trial to trial so neither always gets the warmer host.
+    Returns {"ref", "head", "base", "ratio_total"} — ratio_total is
+    head/base on the shared query set (1.0 ± noise when code didn't
+    change)."""
     import subprocess
 
     repo = str(Path(__file__).resolve().parent)
@@ -155,9 +159,10 @@ def _ab_baseline(
             cwd=repo, capture_output=True, timeout=120, check=True,
         )
         head_trials, base_trials = [], []
-        for _ in range(trials):  # interleave arms within each trial
-            head_trials.append(_run_arm(repo, names, sf_dir, cpus) or {})
-            base_trials.append(_run_arm(worktree, names, sf_dir, cpus) or {})
+        arms = [(repo, head_trials), (worktree, base_trials)]
+        for trial in range(trials):  # interleave arms, both orders
+            for arm_dir, out in arms if trial % 2 == 0 else arms[::-1]:
+                out.append(_run_arm(arm_dir, names, sf_dir, cpus) or {})
         head, base = _best_of(head_trials), _best_of(base_trials)
         shared = sorted(set(head["queries"]) & set(base["queries"]))
         head_shared = sum(head["queries"][n] for n in shared)

@@ -55,12 +55,15 @@ class Cognee:
         if isinstance(data, DataFrame):
             rows = data.select("repo", "path", "commit", "lang", "content")
         else:
+            import pandas as pd
+
             texts = [data] if isinstance(data, str) else list(data)
+            # a pandas frame with an explicit schema goes through Arrow; a
+            # list of rows would become a Python RDD, one Python task per core
             rows = self.spark.createDataFrame(
-                [
-                    (repo, f"doc_{i}.md", "adhoc", lang, t)
-                    for i, t in enumerate(texts)
-                ],
+                pd.DataFrame(
+                    {"repo": repo, "path": "", "commit": "adhoc", "lang": lang, "content": texts}
+                ),
                 CORPUS_SCHEMA,
             )
             # deterministic paths per content so re-adding the same text

@@ -79,17 +79,22 @@ def _index_slice(tables, collection: str):
     return sliced if sliced.take(1) else None
 
 
-def _query_frame(spark, query: str) -> DataFrame:
-    """The one-row (query_id, query_vec) frame of the hash-embedded query.
-    Built from a pandas frame with an explicit schema, so it goes through
-    Arrow into the JVM: a list of rows would become a Python RDD, with one
-    Python task per core just to ship one vector."""
+def _row_frame(spark: SparkSession, row: dict, schema: str) -> DataFrame:
+    """A one-row frame built from a pandas frame with an explicit schema, so
+    it goes through Arrow into the JVM: a list of rows would become a Python
+    RDD, with one Python task per core just to ship one row."""
     import pandas as pd
 
+    return spark.createDataFrame(pd.DataFrame({k: [v] for k, v in row.items()}), schema)
+
+
+def _query_frame(spark, query: str) -> DataFrame:
+    """The one-row (query_id, query_vec) frame of the hash-embedded query."""
     from cognee_spark.functions.embeddings import hash_embedding_py
 
-    return spark.createDataFrame(
-        pd.DataFrame({"query_id": ["q0"], "query_vec": [hash_embedding_py(query)]}),
+    return _row_frame(
+        spark,
+        {"query_id": "q0", "query_vec": hash_embedding_py(query)},
         "query_id string, query_vec array<double>",
     )
 
@@ -399,8 +404,9 @@ def log_query(
     upserts instead of duplicating."""
     from cognee_spark.functions.ids import id_for_col
 
-    return spark.createDataFrame(
-        [(text, query_type, user_id, ts)],
+    return _row_frame(
+        spark,
+        {"text": text, "query_type": query_type, "user_id": user_id, "created_at": ts},
         "text string, query_type string, user_id string, created_at string",
     ).select(
         id_for_col("Query", F.col("user_id"), F.col("created_at"), F.col("text")).alias("id"),
@@ -416,8 +422,9 @@ def log_result(
     (query, user, ts)."""
     from cognee_spark.functions.ids import id_for_col
 
-    return spark.createDataFrame(
-        [(value, query_id, user_id, ts)],
+    return _row_frame(
+        spark,
+        {"value": value, "query_id": query_id, "user_id": user_id, "created_at": ts},
         "value string, query_id string, user_id string, created_at string",
     ).select(
         id_for_col("Result", F.col("query_id"), F.col("user_id"), F.col("created_at")).alias("id"),

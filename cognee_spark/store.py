@@ -197,6 +197,13 @@ def _count_part_files(path: str) -> int:
     return n
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in the driver JVM so far: the count of
+    ``CodegenMetrics``' compilation-time histogram, one py4j read."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def run_stage(
     store: TableStore,
     spark: SparkSession,
@@ -221,6 +228,13 @@ def run_stage(
     observation metric is aggregated by the same tasks that write the files,
     so the commit costs exactly one job, and the partition count is a
     directory listing of the committed files.
+
+    ``codegen_compiles`` is how many generated classes the driver JVM
+    compiled while the stage built and wrote (two py4j reads of
+    ``CodegenMetrics``, no Spark job). The counter spans the whole driver
+    JVM, so stages running concurrently in one session share it and each
+    counts the other's compiles too. Near zero on a rerun in the same
+    session means the codegen cache holds the working set (session.py).
 
     ``extra_metrics`` is an optional thunk invoked AFTER the write action —
     kernels that accumulate side metrics during the job (e.g. the LLM
@@ -254,6 +268,7 @@ def run_stage(
         if not force and store.is_complete(stage, signature) and store.exists(stage):
             return _read_committed()
         started = time.time()
+        compiled = _codegen_compiles(spark)
         # thread-local job description → Spark UI / event-log attribution of
         # every job this stage submits (works under concurrent stage
         # submission); restored on exit so later jobs on this thread are not
@@ -266,6 +281,7 @@ def run_stage(
             "wall_sec": round(time.time() - started, 3),
             "rows": obs.get["rows"],
             "partitions": _count_part_files(store.path(stage)),
+            "codegen_compiles": _codegen_compiles(spark) - compiled,
         }
         if extra_metrics is not None:
             metrics.update(extra_metrics())
