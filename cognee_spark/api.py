@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cognee_spark.session import row_frame
+
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
@@ -55,15 +57,10 @@ class Cognee:
         if isinstance(data, DataFrame):
             rows = data.select("repo", "path", "commit", "lang", "content")
         else:
-            import pandas as pd
-
             texts = [data] if isinstance(data, str) else list(data)
-            # a pandas frame with an explicit schema goes through Arrow; a
-            # list of rows would become a Python RDD, one Python task per core
-            rows = self.spark.createDataFrame(
-                pd.DataFrame(
-                    {"repo": repo, "path": "", "commit": "adhoc", "lang": lang, "content": texts}
-                ),
+            rows = row_frame(
+                self.spark,
+                [(repo, "", "adhoc", lang, t) for t in texts],
                 CORPUS_SCHEMA,
             )
             # deterministic paths per content so re-adding the same text

@@ -100,14 +100,6 @@ def normalize_identity_col(col: Column) -> Column:
     return F.translate(F.lower(col), " '", "_")
 
 
-def normalize_node_name_col(col: Column) -> Column:
-    return F.translate(F.lower(col), "'", "")
-
-
-def normalize_edge_name_col(col: Column) -> Column:
-    return F.translate(F.lower(col), " '", "_")
-
-
 def id_for_col(class_name: str, *value_cols: Column) -> Column:
     """Column twin of :func:`id_for_py`."""
     normalized = [normalize_identity_col(c) for c in value_cols]
@@ -118,11 +110,6 @@ def id_for_col(class_name: str, *value_cols: Column) -> Column:
 def node_id_col(col: Column) -> Column:
     """Column twin of :func:`node_id_py`."""
     return uuid5_col(normalize_identity_col(col))
-
-
-def entity_id_col(name: Column, class_name: str = "Entity") -> Column:
-    """Entity.id_for(name) (cognee/modules/engine/models/Entity.py:20)."""
-    return id_for_col(class_name, name)
 
 
 def edge_object_id_col(src: Column, rel: Column, dst: Column) -> Column:

@@ -83,17 +83,12 @@ def lsh_band_keys(key: str) -> list[str]:
 def is_alias_pair(a: str, b: str) -> bool:
     """Final alias decision over two *match keys* (post exact-merge).
 
-    NOTE: linking semantics are defined as candidate_pair AND this score —
+    NOTE: linking semantics are defined as LSH co-bucketing AND this score —
     a pair the LSH bands never co-bucket is NOT an alias even if its ratio
     clears the cutoff. Pipeline and oracle both apply the full definition, so
     they agree by construction at any scale.
     """
     return name_similarity(a, b) >= SIMILARITY_CUTOFF
-
-
-def candidate_pair(a: str, b: str) -> bool:
-    """True iff LSH banding would co-bucket the two match keys."""
-    return bool(set(lsh_band_keys(a)) & set(lsh_band_keys(b)))
 
 
 def canonical_name(names: set[str]) -> str:

@@ -316,12 +316,3 @@ def create_chunk_associations(
         ),
     )
     return {"edges": edges, "verdicts": verdicts, "pairs": pairs}
-
-
-def merge_association_edges(edges: DataFrame, associations: DataFrame) -> DataFrame:
-    """Merge association edges into a pipeline edges table — the L5
-    existing-edge anti-join (a replayed association run adds nothing), then
-    a union that lets each side keep columns the other lacks (the
-    reference's add_edges upserts property dicts)."""
-    fresh = associations.join(edges, "edge_object_id", "left_anti")
-    return edges.unionByName(fresh, allowMissingColumns=True)

@@ -36,7 +36,6 @@ _CAMEL = re.compile(r"\b[A-Z][a-z0-9]+(?:[A-Z][a-z0-9]+)+\b")
 _CAPSEQ = re.compile(r"\b[A-Z][a-z0-9]+(?: [A-Z][a-z0-9]+)+\b")
 _HYPHEN = re.compile(r"\b[A-Za-z][\w]*(?:-[A-Za-z][\w]*)+\b")
 _REL_ALTERNATION = "uses|depends on|calls into|extends|implements|replaces"
-_REL_PHRASE = re.compile(rf"\b({_REL_ALTERNATION})\b")
 _STATEMENT = re.compile(
     rf"([A-Za-z][\w' -]*?)\s+({_REL_ALTERNATION})\s+([A-Za-z][\w' -]*?)[.!?]"
 )

@@ -41,8 +41,6 @@ import uuid
 SENTENCE_END_CHARS = ".;!?…。！？"
 PARAGRAPH_END_CHARS = "\n\r"
 
-CUT_TYPES = {"paragraph_end", "sentence_end", "sentence_cut", "word", "default"}
-
 
 def count_tokens(word: str) -> int:
     """Deterministic token count: 1 token per word-piece.

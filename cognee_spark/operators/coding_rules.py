@@ -12,17 +12,12 @@ Semantics being matched:
 - ``add_rule_associations`` extracts new rules from a chat transcript with
   an LLM structured-output call (RuleSet{rules}), shows the existing rules
   in the prompt so the model doesn't re-propose them, ids each rule
-  deterministically, tags it with the nodeset, and links every extracted
-  rule to the chat's best-matching origin chunk with a
-  ``rule_associated_from`` edge (top-1 vector search over
-  DocumentChunk_text)
+  deterministically, and tags it with the nodeset
 
 Spark re-expression: rules are one tall (rule_id, rule, node_set) table —
 retrieval is a nodeset-pruned scan; extraction is the engine's usual
 llm-seam shape (a deterministic grammar in pure codegen by default, a
-batched mapInPandas transport when an ``llm`` is plugged); origin edges are
-one brute-force/IVF top-1 per chat (the chat set is the small broadcast
-side — one chat in the serving path, a bounded batch offline)."""
+batched mapInPandas transport when an ``llm`` is plugged)."""
 
 from __future__ import annotations
 
@@ -117,36 +112,4 @@ def extract_rules(
         rule_id_col(F.col("rule")).alias("rule_id"),
         "rule",
         F.lit(nodeset_name).alias("node_set"),
-    )
-
-
-def rule_origin_edges(
-    chats: DataFrame,
-    rules_per_chat: DataFrame,
-    chunks: DataFrame,
-    chat_id_col: str = "chat_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """``rule_associated_from`` edges (get_origin_edges): every rule
-    extracted from a chat links to the chat's top-1 matching chunk by
-    cosine over the chunk index. ``rules_per_chat``: (chat_id, rule_id).
-    Output: (src=rule_id, dst=chunk_id, rel)."""
-    from cognee_spark.functions.embeddings import hash_embedding_col
-    from cognee_spark.operators.similarity_search import brute_force_topk
-
-    emb = chunks.select(
-        F.col("chunk_id").alias("item_id"),
-        hash_embedding_col(F.col(text_col)).alias("embedding"),
-    )
-    queries = chats.select(
-        F.col(chat_id_col).alias("query_id"),
-        hash_embedding_col(F.col(text_col)).alias("query_vec"),
-    )
-    origin = brute_force_topk(emb, queries, k=1, id_col="item_id").select(
-        F.col("query_id").alias(chat_id_col), F.col("vec_id").alias("chunk_id")
-    )
-    return rules_per_chat.join(origin, chat_id_col).select(
-        F.col("rule_id").alias("src"),
-        F.col("chunk_id").alias("dst"),
-        F.lit("rule_associated_from").alias("rel"),
     )

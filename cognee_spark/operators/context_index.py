@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 
 from cognee_spark.functions.embeddings import DEFAULT_DIM, hash_embedding_col
 from cognee_spark.functions.ids import uuid5_col
+from cognee_spark.session import row_frame
 
 GLOBAL_CONTEXT_SUMMARY_COLLECTION = "GlobalContextSummary_text"
 DEFAULT_MAX_BUCKET_SIZE = 20  # global_context_index.py:17 default
@@ -217,8 +218,8 @@ def build_context_index(
     if llm is not None:
         rendered = root_text.first()._rendered
         root_summary_text = llm("root_summary", rendered)
-        root_bucket = spark.createDataFrame(
-            [(level, root_summary_text, True)], "level int, text string, is_root boolean"
+        root_bucket = row_frame(
+            spark, [(level, root_summary_text, True)], "level int, text string, is_root boolean"
         ).select("level", root_id.alias("bucket_id"), "text", "is_root")
     else:
         root_bucket = root_text.select(

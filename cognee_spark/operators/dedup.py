@@ -9,9 +9,9 @@ formulation where the semantics are SQL-expressible:
 
 - exact_duplicates: sha256 groupBy (hash-shuffle, combiner does the heavy
   lifting map-side)
-- minhash_duplicates: char-shingle min-hash band join (the scalable path —
-  candidates only, verify with jaccard)
-- simhash: 64-bit simhash per doc from token hashes (Arrow-vectorized)
+- shingle_min_signatures: per-doc char-shingle min-hash (the scalable
+  candidate key — verify candidates with jaccard)
+- simhash64: 64-bit simhash per doc from token hashes (Arrow-vectorized)
 - ngram_jaccard_pairs: exact verify of candidate pairs
 - embedding_duplicates: cosine >= threshold over an embeddings table via an
   LSH-free blocked self-join (brute force at small scale; IVF blocking at
@@ -19,8 +19,6 @@ formulation where the semantics are SQL-expressible:
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -61,22 +59,6 @@ def shingle_min_signatures(
     )
 
 
-def minhash_duplicate_candidates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Docs sharing a min-shingle bucket: (min_shingle, bucket_size, doc_ids).
-
-    The band-join form of MinHash-LSH with one permutation — the SQL-checkable
-    core; production uses cognee_spark.functions.similarity (24 bands).
-    """
-    sigs = shingle_min_signatures(docs, text_col, id_col)
-    return (
-        sigs.groupBy("min_shingle")
-        .agg(F.count(F.lit(1)).alias("bucket_size"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .where(F.col("bucket_size") > 1)
-    )
-
-
 @F.pandas_udf(T.LongType())
 def simhash64(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over whitespace tokens (Arrow-vectorized).
@@ -107,40 +89,6 @@ def simhash64(texts: pd.Series) -> pd.Series:
         return value - (1 << 64) if value >= 1 << 63 else value  # signed long
 
     return texts.map(one)
-
-
-def simhash_duplicates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block on 4 x 16-bit chunks (any match ⇒
-    hamming <= 3 is guaranteed caught), verify with popcount."""
-    sigs = docs.select(F.col(id_col).alias("doc_id"), simhash64(F.col(text_col)).alias("sig"))
-    chunks = sigs.select(
-        "doc_id", "sig",
-        F.explode(
-            F.array(*[
-                # mask, not %: Spark's % keeps the dividend sign, so negative
-                # signatures (bit 63 set) would get a sign-flipped block-0 key
-                # and break the pigeonhole guarantee
-                F.concat_ws(
-                    ":",
-                    F.lit(i),
-                    F.shiftrightunsigned("sig", 16 * i).bitwiseAND(F.lit(0xFFFF)),
-                )
-                for i in range(4)
-            ])
-        ).alias("block"),
-    )
-    left = chunks.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "block")
-    right = chunks.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "block")
-    pairs = (
-        left.join(right, "block")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.expr("sig_a").bitwiseXOR(F.expr("sig_b"))).alias("hamming"))
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
-    return pairs
 
 
 def ngram_jaccard_pairs(

@@ -1,4 +1,4 @@
-"""Enrichment operators — E4 summarization, L10/L12 cleanup, A4 weights.
+"""Enrichment operators — E4 summarization and title synthesis.
 
 - summarize_chunks: per-chunk TextSummary rows with deterministic ids
   (uuid5(f"{chunk_id}-TextSummary"), cognee/tasks/summarization/
@@ -7,13 +7,6 @@
   call — same batch seam, swap is config.
 - synthesize_titles: first-7-words + top-3 frequent words title
   (resolve_edges_to_text.py:12-45)
-- consolidate_descriptions: per-canonical-entity merge of mention
-  descriptions (memify consolidate_entity_descriptions.py:202-224) as
-  groupBy + sorted concat — the LLM-merge seam is the same aggregation.
-- remove_disconnected_chunks: drop chunks that produced no mentions and
-  entities with no edges (remove_disconnected_chunks.py:5-38)
-- apply_frequency_weights: usage-count → feedback_weight update
-  (memify/apply_frequency_weights.py)
 """
 
 from __future__ import annotations
@@ -63,63 +56,4 @@ def synthesize_titles(docs: DataFrame, text_col: str = "text", id_col: str = "do
     return base.join(top3, "document_id", "left").select(
         "document_id",
         F.concat_ws(" | ", "first_words", "top_words").alias("title"),
-    )
-
-
-def consolidate_descriptions(
-    mentions: DataFrame,
-    name_col: str = "canonical_name",
-    desc_col: str = "name",
-) -> DataFrame:
-    """Per canonical entity: merged, order-independent description."""
-    return (
-        mentions.groupBy(F.col(name_col).alias("canonical_name"))
-        .agg(
-            F.concat_ws("; ", F.array_sort(F.collect_set(F.col(desc_col)))).alias(
-                "consolidated_description"
-            ),
-            F.count(F.lit(1)).alias("mention_count"),
-        )
-    )
-
-
-def remove_disconnected_chunks(chunks: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Keep only chunks that yielded at least one mention (NL mode)."""
-    live = mentions.where(F.col("chunk_id").isNotNull()).select("chunk_id").distinct()
-    return chunks.join(live, "chunk_id", "left_semi")
-
-
-def disconnected_entities(nodes: DataFrame, triples: DataFrame) -> DataFrame:
-    """Entities with zero degree in the content graph (candidates to sweep)."""
-    endpoints = (
-        triples.select(F.col("subj").alias("name"))
-        .union(triples.select(F.col("obj").alias("name")))
-        .distinct()
-    )
-    return nodes.join(endpoints, "name", "left_anti")
-
-
-def apply_frequency_weights(edges: DataFrame, usage: DataFrame) -> DataFrame:
-    """Blend usage counts into feedback_weight:
-    w' = least(0.5 + ln(1+uses)/10, 1.0). usage: (edge_object_id, uses).
-
-    The usage rollup grows with total traffic, not with a dictionary, so the
-    broadcast is probe-guarded; past the bound the join shuffles on the same
-    edge_object_id the edges table already keys."""
-    from cognee_spark.functions.broadcast import bounded_broadcast
-
-    return (
-        edges.join(bounded_broadcast(usage), "edge_object_id", "left")
-        .withColumn(
-            "feedback_weight",
-            F.round(
-                F.least(
-                    F.col("feedback_weight")
-                    + F.log1p(F.coalesce(F.col("uses"), F.lit(0))) / 10.0,
-                    F.lit(1.0),
-                ),
-                6,
-            ),
-        )
-        .drop("uses")
     )

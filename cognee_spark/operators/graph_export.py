@@ -1,29 +1,21 @@
-"""Portable graph export — the reference's migration emitters
-(cognee/modules/migration/formats.py:28-145, export.py:134-308,
-cogx.py:207-268) re-expressed as distributed line rendering.
+"""Portable graph export — the reference's Cypher emitter
+(cognee/modules/migration/formats.py:103-145) re-expressed as distributed
+line rendering.
 
 The reference collects the ENTIRE graph to the driver (``get_graph_data()``
 returns every node and edge as Python tuples) and writes one file with a
 Python loop — the exact pattern that cannot export a 10^12-edge graph. Here
-each emitter is a per-row whole-stage-codegen string projection: every node
-and edge renders its own JSON / GraphML / Cypher line JVM-side, and the
-writer streams part files in parallel (``df.write.text``). Driver work is
-O(1): format headers/footers and the COGX manifest.
+:func:`cypher_lines` is a per-row whole-stage-codegen string projection:
+every node and edge renders its own Cypher line JVM-side, and a writer can
+stream part files in parallel (``df.write.text``). Driver work is O(1): the
+script header.
 
-String escaping stays JVM-side too: JSON escaping comes from ``to_json``
+String escaping stays JVM-side too: JSON quoting comes from ``to_json``
 (:func:`json_quote` — a value wrapped in a 1-element array, brackets
-stripped), XML escaping from a ``regexp_replace`` chain. The JSON formats are
-emitted as JSONL rather than one indented payload (formats.py:30-42 writes a
-single ``json.dumps(indent=2)`` document) — the scale-first shape; a wrapper
-assembling the reference's exact single-document layout would be a driver
-``cat``.
+stripped).
 """
 
 from __future__ import annotations
-
-import json
-import os
-from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,8 +24,6 @@ from pyspark.sql import functions as F
 SKIP_EDGE_KEYS = ("source_node_id", "target_node_id")
 # Shared Cypher label so edge MATCHes are index-backed (formats.py:109).
 SHARED_LABEL = "CogneeNode"
-
-EXPORT_FORMATS = ("jsonl", "graphml", "cypher", "cogx")
 
 
 def json_quote(col: Column) -> Column:
@@ -46,18 +36,6 @@ def json_quote(col: Column) -> Column:
     return arr.substr(F.lit(2), F.length(arr) - 2)
 
 
-def xml_escape(col: Column) -> Column:
-    """xml.sax.saxutils.escape twin: & first, then angle brackets."""
-    out = F.regexp_replace(col, "&", "&amp;")
-    out = F.regexp_replace(out, "<", "&lt;")
-    return F.regexp_replace(out, ">", "&gt;")
-
-
-def _xml_attr(col: Column) -> Column:
-    """quoteattr twin for values we always wrap in double quotes."""
-    return F.concat(F.lit('"'), F.regexp_replace(xml_escape(col), '"', "&quot;"), F.lit('"'))
-
-
 def _cypher_label(col: Column) -> Column:
     """_cypher_label (formats.py:103-105): strip to [A-Za-z0-9_], 'Node' if empty."""
     cleaned = F.regexp_replace(F.coalesce(col, F.lit("Node")), "[^A-Za-z0-9_]", "")
@@ -67,90 +45,6 @@ def _cypher_label(col: Column) -> Column:
 def _prop_cols(df: DataFrame, exclude: tuple[str, ...]) -> list[str]:
     return [c for c in df.columns if c not in exclude]
 
-
-def json_lines(nodes: DataFrame, edges: DataFrame) -> dict[str, DataFrame]:
-    """Full-fidelity JSONL (write_json, formats.py:28-42): one object per
-    node/edge; null-valued properties are omitted (to_json default)."""
-    node_cols = [F.col("id").cast("string").alias("id")] + [
-        F.col(c) for c in _prop_cols(nodes, ("id",))
-    ]
-    node_lines = nodes.select(F.to_json(F.struct(*node_cols)).alias("line"))
-    edge_cols = [
-        F.col("source_id").cast("string").alias("source"),
-        F.col("target_id").cast("string").alias("target"),
-        F.col("relationship_name"),
-    ] + [
-        F.col(c)
-        for c in _prop_cols(edges, ("source_id", "target_id", "relationship_name"))
-        if c not in SKIP_EDGE_KEYS
-    ]
-    edge_lines = edges.select(F.to_json(F.struct(*edge_cols)).alias("line"))
-    return {"nodes": node_lines, "edges": edge_lines}
-
-
-def graphml_parts(nodes: DataFrame, edges: DataFrame) -> dict:
-    """GraphML (write_graphml, formats.py:45-90): declared keys come from the
-    DataFrame schemas (driver-side literals — they are column names, not
-    data); node/edge elements render distributed, one row per element with
-    embedded newlines for the ``<data>`` children."""
-    from xml.sax.saxutils import escape, quoteattr
-
-    node_keys = _prop_cols(nodes, ("id",))
-    edge_keys = [
-        c
-        for c in _prop_cols(edges, ("source_id", "target_id", "relationship_name"))
-        if c not in SKIP_EDGE_KEYS
-    ]
-    header = [
-        '<?xml version="1.0" encoding="UTF-8"?>',
-        '<graphml xmlns="http://graphml.graphdrawing.org/xmlns">',
-    ]
-    header += [
-        f'  <key id="n_{escape(k)}" for="node" attr.name={quoteattr(k)} attr.type="string"/>'
-        for k in node_keys
-    ]
-    header += [
-        f'  <key id="e_{escape(k)}" for="edge" attr.name={quoteattr(k)} attr.type="string"/>'
-        for k in edge_keys
-    ]
-    header.append('  <graph id="cognee" edgedefault="directed">')
-    footer = ["  </graph>", "</graphml>"]
-
-    def data_line(key: str, value: Column, prefix: str) -> Column:
-        return F.when(
-            value.isNotNull(),
-            F.concat(
-                F.lit(f'\n      <data key="{prefix}_{escape(key)}">'),
-                xml_escape(value.cast("string")),
-                F.lit("</data>"),
-            ),
-        ).otherwise(F.lit(""))
-
-    node_line = F.concat(
-        F.lit("    <node id="),
-        _xml_attr(F.col("id").cast("string")),
-        F.lit(">"),
-        *[data_line(k, F.col(k), "n") for k in node_keys],
-        F.lit("\n    </node>"),
-    )
-    edge_line = F.concat(
-        F.lit("    <edge source="),
-        _xml_attr(F.col("source_id").cast("string")),
-        F.lit(" target="),
-        _xml_attr(F.col("target_id").cast("string")),
-        F.lit(">"),
-        F.lit('\n      <data key="e_relationship_name">'),
-        xml_escape(F.col("relationship_name")),
-        F.lit("</data>"),
-        *[data_line(k, F.col(k), "e") for k in edge_keys],
-        F.lit("\n    </edge>"),
-    )
-    return {
-        "header": header,
-        "nodes": nodes.select(node_line.alias("line")),
-        "edges": edges.select(edge_line.alias("line")),
-        "footer": footer,
-    }
 
 
 def cypher_lines(nodes: DataFrame, edges: DataFrame) -> dict:
@@ -217,167 +111,3 @@ def cypher_lines(nodes: DataFrame, edges: DataFrame) -> dict:
         "edges": edges.select(edge_line.alias("line")),
         "footer": [],
     }
-
-
-def cogx_record_frames(
-    nodes: DataFrame,
-    edges: DataFrame,
-    source_system: str = "cognee",
-) -> dict[str, DataFrame]:
-    """Graph tables → typed COGX record frames (_write_cogx, export.py:134-192).
-
-    Entity nodes with a name become entity records; DocumentChunk nodes with
-    text become document records AND raw nodes (preserve-mode restores keep
-    the chunk's topology — export.py:161-175); everything else is a raw node.
-    Every edge becomes a fact with external_id ``source:rel:target``. Records
-    carry an explicit ``seq`` (dense rank over node id / edge key via the
-    two-phase :func:`~cognee_spark.functions.indexing.dense_index` — NOT a
-    single-partition global window) so a re-import's first-wins folds are
-    order-deterministic. Node ids must be unique (they are — the store
-    upserts by id); edges must be unique per (source, relationship, target),
-    which every edge frame this engine materializes is."""
-    from cognee_spark.functions.indexing import dense_index
-
-    nodes = dense_index(nodes, ["id"], "_seq")
-    typ = F.col("type") if "type" in nodes.columns else F.lit(None).cast("string")
-    named = F.col("name") if "name" in nodes.columns else F.lit(None).cast("string")
-    text = F.col("text") if "text" in nodes.columns else F.lit(None).cast("string")
-    seq_n = F.col("_seq")
-
-    is_entity = (typ == "Entity") & named.isNotNull()
-    is_chunk = (typ == "DocumentChunk") & text.isNotNull()
-
-    entities = nodes.where(is_entity).select(
-        F.lit(source_system).alias("external_system"),
-        F.col("id").cast("string").alias("external_id"),
-        seq_n.alias("seq"),
-        named.alias("name"),
-        (F.col("description") if "description" in nodes.columns else F.lit(None).cast("string")).alias("description"),
-    )
-    documents = nodes.where(is_chunk).select(
-        F.lit(source_system).alias("external_system"),
-        F.col("id").cast("string").alias("external_id"),
-        seq_n.alias("seq"),
-        text.alias("content"),
-    )
-    raw_cols = [
-        F.lit("id"), F.col("id").cast("string"),
-        *sum(
-            (
-                [F.lit(c), F.col(c).cast("string")]
-                for c in nodes.columns
-                if c not in ("id", "_seq")
-            ),
-            [],
-        ),
-        F.lit("seq"), seq_n.cast("string"),
-    ]
-    raw_nodes = nodes.where(~is_entity).select(
-        F.to_json(F.map_filter(F.create_map(*raw_cols), lambda k, v: v.isNotNull())).alias("line")
-    )
-
-    edges = dense_index(
-        edges, ["source_id", "relationship_name", "target_id"], "_seq"
-    )
-    seq_e = F.col("_seq")
-    facts = edges.select(
-        F.lit(source_system).alias("external_system"),
-        F.concat_ws(
-            ":",
-            F.col("source_id").cast("string"),
-            F.col("relationship_name"),
-            F.col("target_id").cast("string"),
-        ).alias("external_id"),
-        seq_e.alias("seq"),
-        F.col("source_id").cast("string").alias("subject_ref"),
-        F.col("relationship_name").alias("predicate"),
-        F.col("target_id").cast("string").alias("object_ref"),
-        (F.col("edge_text") if "edge_text" in edges.columns else F.lit(None).cast("string")).alias("fact_text"),
-        (F.col("valid_at") if "valid_at" in edges.columns else F.lit(None).cast("string")).alias("valid_at"),
-        (F.col("invalid_at") if "invalid_at" in edges.columns else F.lit(None).cast("string")).alias("invalid_at"),
-    )
-    return {
-        "entities": entities.select(F.to_json(F.struct(*entities.columns)).alias("line")),
-        "documents": documents.select(F.to_json(F.struct(*documents.columns)).alias("line")),
-        "facts": facts.select(F.to_json(F.struct(*facts.columns)).alias("line")),
-        "raw_nodes": raw_nodes,
-    }
-
-
-def write_cogx_archive(
-    nodes: DataFrame,
-    edges: DataFrame,
-    destination: str,
-    source_system: str = "cognee",
-    notes: list[str] | None = None,
-) -> dict:
-    """Write a COGX archive directory (COGXArchiveWriter, cogx.py:207-268).
-
-    Each record kind lands as a DIRECTORY of part files under the archive
-    (``entities.jsonl/part-*``) written in parallel — ``read_cogx_archive``
-    and any Spark reader consume it transparently; a single-file consumer
-    concatenates the parts. The manifest (counts, version, timestamp) is the
-    only driver-side write."""
-    frames = cogx_record_frames(nodes, edges, source_system=source_system)
-    file_of = {
-        "entities": "entities.jsonl",
-        "documents": "documents.jsonl",
-        "facts": "facts.jsonl",
-        "raw_nodes": "nodes.jsonl",
-    }
-    kind_of = {
-        "entities": "entity",
-        "documents": "document",
-        "facts": "fact",
-        "raw_nodes": "raw_node",
-    }
-    counts: dict[str, int] = {}
-    os.makedirs(destination, exist_ok=True)
-    for key, frame in frames.items():
-        path = os.path.join(destination, file_of[key])
-        frame.write.mode("overwrite").text(path)
-        # manifest counts via a narrow read-back of the written lines (the
-        # reference counts while writing, cogx.py:240; a text count is one
-        # metadata-cheap scan, not a recompute of the export plan)
-        counts[kind_of[key]] = frame.sparkSession.read.text(path).count()
-    manifest = {
-        "cogx_version": "0.1",
-        "source_system": source_system,
-        "exported_at": datetime.now(timezone.utc).isoformat(),
-        "counts": counts,
-        "embedding_model": None,
-        "migration_revision": None,
-        "notes": list(notes or []),
-    }
-    with open(os.path.join(destination, "manifest.json"), "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh, indent=2)
-    return manifest
-
-
-def write_graph_export(
-    nodes: DataFrame, edges: DataFrame, destination: str, format: str = "jsonl"
-) -> None:
-    """export_dataset's file formats (export.py:260-291), written distributed.
-
-    ``jsonl`` → ``nodes.jsonl/`` + ``edges.jsonl/`` part dirs; ``graphml`` /
-    ``cypher`` → ``body.txt/`` part dir plus driver-written ``header.txt`` /
-    ``footer.txt`` (assemble with ``cat header.txt body.txt/part-* footer.txt``
-    for a single-file consumer); ``cogx`` → :func:`write_cogx_archive`."""
-    if format not in EXPORT_FORMATS:
-        raise ValueError(f"Unknown export format {format!r}. Expected one of {EXPORT_FORMATS}.")
-    if format == "cogx":
-        write_cogx_archive(nodes, edges, destination)
-        return
-    os.makedirs(destination, exist_ok=True)
-    if format == "jsonl":
-        parts = json_lines(nodes, edges)
-        parts["nodes"].write.mode("overwrite").text(os.path.join(destination, "nodes.jsonl"))
-        parts["edges"].write.mode("overwrite").text(os.path.join(destination, "edges.jsonl"))
-        return
-    parts = graphml_parts(nodes, edges) if format == "graphml" else cypher_lines(nodes, edges)
-    body = parts["nodes"].unionByName(parts["edges"])
-    body.write.mode("overwrite").text(os.path.join(destination, "body.txt"))
-    with open(os.path.join(destination, "header.txt"), "w", encoding="utf-8") as fh:
-        fh.write("\n".join(parts["header"]) + ("\n" if parts["header"] else ""))
-    with open(os.path.join(destination, "footer.txt"), "w", encoding="utf-8") as fh:
-        fh.write("\n".join(parts["footer"]) + ("\n" if parts["footer"] else ""))

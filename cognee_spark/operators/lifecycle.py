@@ -17,16 +17,12 @@ Semantics being matched:
   sessions attribute cost correctly (metrics.accumulate_usage)
 - terminal sessions are FROZEN: a call that lands after a session ended
   never accrues (metrics.py "Writes to running sessions only")
-- ``abandoned`` is never stored — it is computed AT READ TIME from
-  last_activity_at vs a threshold (metrics.get_effective_status_sql,
-  default 1800 s)
 
 Spark re-expression: the reference mutates rows per call through a
 ContextVar + SQL upsert; a batch engine folds the immutable ``llm_calls``
 log instead — the rollups are ONE groupBy each, the pricing match is a
 chained codegen CASE ordered by prefix length (the reference sorts its
-table the same way at import), and effective status is a read-time case
-expression over the rollup. Nothing here is per-row Python and every
+table the same way at import). Nothing here is per-row Python and every
 aggregate is map-side-combining, so a 100 TB call log rolls up in one
 shuffle keyed exactly like the reference's primary keys.
 """
@@ -54,8 +50,6 @@ DEFAULT_PRICING: dict[str, tuple[float, float]] = {
     "gemini-2.0-flash": (0.10, 0.40),
     "gemini-2.5-flash": (0.30, 2.50),
 }
-
-ABANDON_AFTER_SECONDS = 1800  # metrics._abandon_after_seconds default
 
 
 def estimate_tokens_col(text_col):
@@ -169,45 +163,3 @@ def session_usage(
         F.min("ts").alias("started_at"),
         F.max("ts").alias("last_activity_at"),
     )
-
-
-def cost_by_model(
-    calls: DataFrame,
-    sessions: DataFrame | None = None,
-    pricing=None,
-) -> DataFrame:
-    """SessionModelUsage rows: per-(session_id, user_id, model) token/cost
-    aggregates — the cost-by-model attribution for mixed-model sessions.
-    Calls with no usage to credit (0 tokens and $0) are skipped, mirroring
-    accumulate_usage's gate."""
-    if "cost_usd" not in calls.columns:
-        calls = priced_calls(calls, pricing)
-    calls = _freeze_terminal(calls, sessions)
-    credited = calls.where(
-        F.col("model").isNotNull()
-        & ((F.col("tokens_in") > 0) | (F.col("tokens_out") > 0) | (F.col("cost_usd") > 0))
-    )
-    return credited.groupBy("session_id", "user_id", "model").agg(
-        F.sum("tokens_in").alias("tokens_in"),
-        F.sum("tokens_out").alias("tokens_out"),
-        F.round(F.sum("cost_usd"), 9).alias("cost_usd"),
-        F.max("ts").alias("updated_at"),
-    )
-
-
-def effective_status_col(
-    status_col,
-    last_activity_col,
-    now: str,
-    abandon_after_seconds: int = ABANDON_AFTER_SECONDS,
-):
-    """The read-time ``abandoned`` transition (metrics.
-    get_effective_status_sql): a stored-running session idle past the
-    threshold reports as abandoned without any sweeper writing the row."""
-    idle_cutoff = F.to_timestamp(F.lit(now)) - F.make_dt_interval(
-        secs=F.lit(float(abandon_after_seconds))
-    )
-    return F.when(
-        (status_col == "running") & (last_activity_col < idle_cutoff),
-        F.lit("abandoned"),
-    ).otherwise(status_col)

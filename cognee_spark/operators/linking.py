@@ -40,6 +40,7 @@ from cognee_spark.functions.ids import normalize_identity_col
 from cognee_spark.functions.narrow import SHA
 from cognee_spark.functions.similarity import SIMILARITY_CUTOFF
 from cognee_spark.operators.components import connected_components
+from cognee_spark.session import row_frame
 
 MAX_LSH_BUCKET = 1024  # skew guard: buckets larger than this are dropped from
 # pairing (a bucket that big means a degenerate band key, not real aliases)
@@ -75,14 +76,9 @@ def _components_hybrid(spark, pairs: DataFrame) -> DataFrame:
         ra, rb = find(row.a), find(row.b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    # a pandas frame with an explicit schema goes into the JVM through
-    # Arrow; a list of rows would become a Python RDD, one Python task per
-    # core (the empty mapping takes the same path)
-    nodes = list(parent)
-    mapping = pd.DataFrame(
-        {"node": nodes, "component": [find(n) for n in nodes]}, dtype=object
+    return row_frame(
+        spark, [(n, find(n)) for n in list(parent)], "node string, component string"
     )
-    return spark.createDataFrame(mapping, "node string, component string")
 
 
 # --- code-mode resolution ------------------------------------------------------

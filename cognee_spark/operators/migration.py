@@ -1,6 +1,7 @@
-"""Memory-import translation — the reference's migration loader
-(cognee/modules/migration/loader.py:41-649 + import_source.py:266-318)
-re-expressed as joins and seq-ordered folds.
+"""Memory-import translation — the graph half of the reference's migration
+loader (cognee/modules/migration/loader.py:221-353) re-expressed as joins
+and seq-ordered folds over the memory-store record table
+(sources/memory_stores.RECORD_FIELDS).
 
 The reference translates a stream of COGX records driver-side: a dict-backed
 entity registry merges same-named records one at a time, facts resolve
@@ -9,7 +10,7 @@ refs), and bounded batches flush through ``add_data_points``. None of that
 distributes — the registry and the seen-edge set grow with the corpus and
 live in one process.
 
-Here the same semantics are one dataflow:
+Here the same semantics are one dataflow (:func:`graph_tables`):
 
 - entity merge       → groupBy(node_id) + array_sort(collect_list) + a
                        codegen fold (first record wins, later distinct
@@ -21,20 +22,12 @@ Here the same semantics are one dataflow:
                        node; UUID-looking miss → skip; plain name → stub
                        entity (loader.py:277-292,575-586);
 - edge dedup         → first-wins ``row_number()`` over the resolved
-                       (subject, object, predicate) key (loader.py:299-324);
-- re-derive digests  → windowed grouping of fact lines into 200-line digest
-                       documents plus one entity-descriptions digest
-                       (loader.py:382-414).
+                       (subject, object, predicate) key (loader.py:299-324).
 
 Everything is whole-stage codegen; the only Python is plan construction.
-Content-bearing records (document/episode/memory/memory_block) become data
-items with the reference's deterministic ``uuid5(OID,
-"cogx:{system}:{external_id}")`` ids (loader.py:53-55), rendered with the
-exact templates (episode transcripts loader.py:79-91, category suffixes
-loader.py:129-135). The reference's user/ACL restore, migration re-stamping,
-and pydantic rehydration (import_source.py:45-246, snapshot.py) dissolve:
-this engine has no account database, no ORM revisions, and its nodes are
-already rows.
+The reference's user/ACL restore, migration re-stamping, and pydantic
+rehydration (import_source.py:45-246, snapshot.py) dissolve: this engine has
+no account database, no ORM revisions, and its nodes are already rows.
 """
 
 from __future__ import annotations
@@ -43,191 +36,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cognee_spark.functions.ids import id_for_col, uuid5_col
-from cognee_spark.functions.indexing import dense_index
+from cognee_spark.functions.ids import id_for_col
 from cognee_spark.sources.memory_stores import iso_ts
-
-FACTS_PER_DIGEST = 200
 
 # Canonical 8-4-4-4-12 (plus bare-32-hex) forms. The reference accepts every
 # string uuid.UUID() parses (braces, urn: prefixes); those variants do not
-# occur in the exports these adapters read.
+# occur in the exports the memory-store adapters write.
 _UUID_RE = r"^([0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}|[0-9a-fA-F]{32})$"
 
 
 def looks_like_uuid(col: Column) -> Column:
     """_looks_like_uuid (loader.py:115-120), canonical forms."""
     return col.rlike(_UUID_RE)
-
-
-def record_data_id(system: Column, external_id: Column) -> Column:
-    """record_data_id (loader.py:53-55): uuid5(OID, 'cogx:{system}:{id}')."""
-    return uuid5_col(F.concat(F.lit("cogx:"), system, F.lit(":"), external_id))
-
-
-def _episode_text(title: Column, turns: Column) -> Column:
-    """render_episode (loader.py:79-91): '# title' + stable time-sorted turns.
-
-    Python's ``sorted`` is stable with missing timestamps sorting first
-    (-inf); the fold replicates that by sorting structs on
-    (epoch-or--inf, original index)."""
-    indexed = F.transform(
-        turns,
-        lambda t, i: F.struct(
-            F.coalesce(t["occurred_at"].cast("double"), F.lit(float("-inf"))).alias("k"),
-            i.alias("i"),
-            t["role"].alias("role"),
-            t["content"].alias("content"),
-            t["occurred_at"].alias("occurred_at"),
-        ),
-    )
-    lines = F.transform(
-        F.array_sort(indexed),
-        lambda t: F.concat(
-            t["role"],
-            F.when(
-                t["occurred_at"].isNotNull(),
-                F.concat(F.lit(" ["), iso_ts(t["occurred_at"]), F.lit("]")),
-            ).otherwise(F.lit("")),
-            F.lit(": "),
-            t["content"],
-        ),
-    )
-    body = F.array_join(lines, "\n")
-    return F.when(
-        title.isNotNull(), F.concat(F.lit("# "), title, F.lit("\n"), body)
-    ).otherwise(body)
-
-
-def _fact_line(fact: Column) -> Column:
-    """_render_fact_line (loader.py:94-103)."""
-    line = F.coalesce(
-        fact["fact_text"],
-        F.concat_ws(" ", fact["subject_ref"], fact["predicate"], fact["object_ref"]),
-    )
-    qualifiers = F.filter(
-        F.array(
-            F.when(
-                fact["valid_at"].isNotNull(),
-                F.concat(F.lit("valid from "), iso_ts(fact["valid_at"])),
-            ),
-            F.when(
-                fact["invalid_at"].isNotNull(),
-                F.concat(F.lit("invalid since "), iso_ts(fact["invalid_at"])),
-            ),
-        ),
-        lambda q: q.isNotNull(),
-    )
-    return F.when(
-        F.size(qualifiers) > 0,
-        F.concat(line, F.lit(" ("), F.array_join(qualifiers, ", "), F.lit(")")),
-    ).otherwise(line)
-
-
-def data_items(records: DataFrame, mode: str = "re-derive") -> DataFrame:
-    """Content-bearing records → data items (data_item_from_record,
-    loader.py:123-136), plus the re-derive digest documents.
-
-    Output: (data_id, external_system, external_id, title, content,
-    created_at). In ``re-derive`` mode the source's derived knowledge is
-    rendered into digest documents (one for entity descriptions, one per 200
-    facts) so it is not lost (loader.py:382-414); in preserve/hybrid those
-    records flow to :func:`graph_tables` instead."""
-    base = records.where(
-        F.col("kind").isin("document", "episode", "memory", "memory_block")
-    )
-    content = (
-        F.when(F.col("kind") == "document", F.col("content"))
-        .when(F.col("kind") == "episode", _episode_text(F.col("title"), F.col("turns")))
-        .when(
-            F.col("kind") == "memory",
-            F.concat(
-                F.col("content"),
-                F.when(
-                    F.size(F.coalesce(F.col("categories"), F.array())) > 0,
-                    F.concat(
-                        F.lit("\nCategories: "), F.array_join(F.col("categories"), ", ")
-                    ),
-                ).otherwise(F.lit("")),
-            ),
-        )
-        .otherwise(F.concat(F.col("label"), F.lit(":\n"), F.col("value")))
-    )
-    title = (
-        F.when(F.col("kind") == "memory_block", F.col("label"))
-        .when(F.col("kind") == "memory", F.lit(None))
-        .otherwise(F.col("title"))
-    )
-    items = base.select(
-        record_data_id(F.col("external_system"), F.col("external_id")).alias("data_id"),
-        "external_system",
-        "external_id",
-        title.alias("title"),
-        content.alias("content"),
-        "created_at",
-    )
-    if mode != "re-derive":
-        return items
-
-    described = records.where(
-        (F.col("kind") == "entity") & F.col("description").isNotNull()
-    )
-    entity_digest = described.groupBy().agg(
-        F.min_by("external_system", "seq").alias("external_system"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("seq", "name", "description"))
-                ),
-                lambda x: F.concat(x["name"], F.lit(": "), x["description"]),
-            ),
-            "\n",
-        ).alias("content"),
-    ).where(F.col("content").isNotNull()).select(
-        record_data_id(F.col("external_system"), F.lit("entities-digest")).alias(
-            "data_id"
-        ),
-        "external_system",
-        F.lit("entities-digest").alias("external_id"),
-        F.lit("Imported entity descriptions").alias("title"),
-        "content",
-        F.lit(None).cast("timestamp").alias("created_at"),
-    )
-
-    # two-phase dense rank, not a single-partition global window; seq is
-    # unique per record by construction (memory_stores._seq / exporter seq)
-    facts = dense_index(
-        records.where(F.col("kind") == "fact"), ["seq"], "_rn"
-    )
-    fact_lines = facts.select(
-        "external_system",
-        "seq",
-        (F.col("_rn") / FACTS_PER_DIGEST).cast("long").alias("digest_index"),
-        _fact_line(
-            F.struct("fact_text", "subject_ref", "predicate", "object_ref", "valid_at", "invalid_at")
-        ).alias("line"),
-    )
-    fact_digests = fact_lines.groupBy("digest_index").agg(
-        F.min_by("external_system", "seq").alias("external_system"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "line"))),
-                lambda x: x["line"],
-            ),
-            "\n",
-        ).alias("content"),
-    ).select(
-        record_data_id(
-            F.col("external_system"),
-            F.concat(F.lit("facts-digest-"), F.col("digest_index")),
-        ).alias("data_id"),
-        "external_system",
-        F.concat(F.lit("facts-digest-"), F.col("digest_index")).alias("external_id"),
-        F.lit("Imported facts").alias("title"),
-        "content",
-        F.lit(None).cast("timestamp").alias("created_at"),
-    )
-    return items.unionByName(entity_digest).unionByName(fact_digests)
 
 
 def _merged_entities(records: DataFrame, preserve_source_ids: bool) -> DataFrame:
@@ -473,37 +293,3 @@ def graph_tables(
         "edges": edges,
         "stats": stats,
     }
-
-
-def translate_records(
-    records: DataFrame, mode: str = "re-derive", preserve_source_ids: bool = False
-) -> dict:
-    """translate_records (loader.py:424-431): one entry point per import mode.
-
-    ``re-derive`` → data items only (source graph rendered into digests for
-    cognify to re-extract); ``preserve`` → graph tables plus raw data items
-    (stored, not cognified); ``hybrid`` → both. The ``cognify_data_items``
-    flag mirrors TranslationResult.cognify_data_items (loader.py:49-50)."""
-    if mode not in ("re-derive", "preserve", "hybrid"):
-        raise ValueError(f"Unknown import mode {mode!r}.")
-    out: dict = {
-        "data_items": data_items(records, mode),
-        "cognify_data_items": mode != "preserve",
-    }
-    if mode in ("preserve", "hybrid"):
-        out.update(graph_tables(records, preserve_source_ids=preserve_source_ids))
-    return out
-
-
-def import_repos(items: DataFrame) -> DataFrame:
-    """Data items → the pipeline's repos(repo,path,commit,lang,content) shape,
-    so an import feeds the standard ingest (S1-S4) unchanged: repo =
-    ``import:<system>``, path = the record's external id (deterministic,
-    idempotent re-import — import_source.py:280-283)."""
-    return items.select(
-        F.concat(F.lit("import:"), F.col("external_system")).alias("repo"),
-        F.col("external_id").alias("path"),
-        F.lit("import").alias("commit"),
-        F.lit("text").alias("lang"),
-        F.col("content").alias("content"),
-    )

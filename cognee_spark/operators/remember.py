@@ -407,40 +407,3 @@ def persist_skill_runs(
         .dropDuplicates(["edge_object_id"])
     )
     return {"nodes": nodes, "edges": edges, "unresolved": unresolved}
-
-
-def apply_feedback(qa: DataFrame, feedback: DataFrame) -> DataFrame:
-    """Fold feedback updates onto their QA rows — ``add_feedback``'s
-    update-not-insert semantics (entries.py:63-69): last update per qa_id
-    (by the feedback row's seq) wins; a later FeedbackEntry OVERRIDES any
-    inline feedback the QA row was remembered with; QA rows without either
-    pass through with NULL feedback columns."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qa_id").orderBy(F.desc("seq"))
-    latest = (
-        feedback.where(F.col("qa_id").isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("qa_id").alias("entry_id"),
-            F.col("feedback_text").alias("_fb_text"),
-            F.col("feedback_score").alias("_fb_score"),
-        )
-    )
-    # gate each inline column on ITS OWN presence: a qa frame may carry
-    # feedback_text without feedback_score (text-only inline feedback) or
-    # vice versa — a single-column gate would drop the present one or
-    # reference the absent one (unresolved-column AnalysisException)
-    joined = qa.join(latest, "entry_id", "left")
-    passthrough = [c for c in qa.columns
-                   if c not in ("feedback_text", "feedback_score")]
-    inline_text = (F.col("feedback_text") if "feedback_text" in qa.columns
-                   else F.lit(None).cast("string"))
-    inline_score = (F.col("feedback_score") if "feedback_score" in qa.columns
-                    else F.lit(None).cast("int"))
-    return joined.select(
-        *passthrough,
-        F.coalesce(F.col("_fb_text"), inline_text).alias("feedback_text"),
-        F.coalesce(F.col("_fb_score"), inline_score).alias("feedback_score"),
-    )

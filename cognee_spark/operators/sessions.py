@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SESSION_NODE_SET = "user_sessions_from_cache"
-AGENT_TRACE_NODE_SET = "agent_trace_feedbacks"
 
 
 def session_windows(
@@ -150,49 +149,6 @@ def agent_trace_windows(
         rendered.alias("text"),
         F.size(entries).alias("n_steps"),
     )
-
-
-def persist_agent_traces(
-    spark,
-    store_root: str,
-    traces: DataFrame,
-    raw_trace_content: bool = False,
-    last_n_steps: int | None = None,
-    session_ids: list[str] | None = None,
-    node_set_name: str = AGENT_TRACE_NODE_SET,
-    **pipeline_kwargs,
-) -> dict:
-    """Persist agent-trace feedback into the graph — the memify pipeline
-    flow (extract → cognify under ``node_set_name``). Same commit discipline
-    as persist_sessions: the windows cognify through the REAL pipeline with
-    a content-derived signature; re-running over unchanged traces reuses the
-    committed stages."""
-    from cognee_spark.pipeline import run_pipeline
-
-    windows = agent_trace_windows(
-        traces, raw_trace_content=raw_trace_content,
-        last_n_steps=last_n_steps, session_ids=session_ids,
-    )
-    agg = (
-        windows.select(F.xxhash64("user_id", "session_id", "text").alias("h"))
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("s"))
-        .first()
-    )
-    if agg.n == 0:
-        return {"windows": 0, "tables": None}
-    docs = windows.select(
-        F.concat(F.lit(f"{node_set_name}/"), F.col("user_id").cast("string")).alias("repo"),
-        F.col("session_id").alias("path"),
-        F.col("n_steps").cast("string").alias("commit"),
-        F.lit("md").alias("lang"),
-        F.col("text").alias("content"),
-    )
-    out = run_pipeline(
-        spark, docs, store_root, f"traces:{agg.n}:{agg.s}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-        **pipeline_kwargs,
-    )
-    return {"windows": agg.n, "tables": out["tables"]}
 
 
 def persist_sessions(

@@ -1,31 +1,18 @@
-"""Proposal-first skill improvement — the reference's internal
-``improve_skill`` flow (cognee/modules/memify/skill_improvement.py:58-348):
-find a skill's recent low-scoring/errored SkillRuns, render the failure
-evidence, ask an LLM for a revised procedure, persist a
-``SkillImprovementProposal`` (status "proposed"), and on ``apply`` rewrite
-the skill's procedure/skill_text and mark the proposal "applied".
+"""Failure-run selection — the first step of the reference's internal
+``improve_skill`` flow (cognee/modules/memify/skill_improvement.py:58-348),
+which finds a skill's recent low-scoring or errored SkillRuns before it
+drafts a revised procedure.
 
-The reference improves ONE skill per call (driver-side lookups through the
-vector store). Here the whole dataset improves in one pass: failure
-selection is a window over the runs table, evidence rendering is a groupBy
-fold, the drafting LLM is the engine's batched mapInPandas transport with a
-deterministic double, and apply is a join. A fleet with 100k skills and a
-billion runs proposes in one job.
-
-Determinism deviation, stated: the reference's ``proposal_id`` is uuid4;
-here it is uuid5 over (skill_id, runs_used) so a re-run over the same
-evidence upserts instead of duplicating — the engine's L2 rule.
+The reference selects runs for ONE skill per call (driver-side lookups
+through the vector store). Here :func:`find_failure_runs` selects them for
+every skill at once, as one window over the runs table.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from cognee_spark.functions.ids import id_for_col
 
 SCORE_THRESHOLD = 0.5   # improve_skill signature default
 MAX_RUNS = 5
@@ -53,214 +40,3 @@ def find_failure_runs(
         .where(F.col("_rn") <= int(max_runs))
         .drop("_rn")
     )
-
-
-def _format_procedure(name, procedure):
-    """_format_skill_procedure (skill_improvement.py:51-55): ensure the body
-    leads with a heading."""
-    p = F.trim(F.coalesce(procedure, F.lit("")))
-    return F.when(p.startswith("#"), p).otherwise(
-        F.trim(F.concat(F.lit("# "), name, F.lit("\n\n"), p))
-    )
-
-
-def render_improvement_contexts(
-    failures: DataFrame, skills: DataFrame, dataset_id: str
-) -> DataFrame:
-    """One drafting context per skill with failure evidence — the
-    reference's _generate_proposal prompt context (skill_improvement.py:
-    224-236), evidence lines most-recent-first, as a seq-ordered fold.
-
-    ``skills`` needs (id, name, description, procedure, is_active,
-    dataset_scope); resolution matches ``selected_skill_id`` on name or id
-    (the persist_skill_runs rule). Output: (skill_id, skill_name,
-    old_procedure, runs_used, context)."""
-    from cognee_spark.operators.skills import skill_resolution_keys
-
-    keyed = skill_resolution_keys(
-        skills, dataset_id, cols=("description", "procedure")
-    ).select(
-        "_skill_key",
-        F.col("_skill_id").alias("skill_id"),
-        F.col("_skill_name").alias("skill_name"),
-        F.col("_skill_description").alias("_description"),
-        F.col("_skill_procedure").alias("old_procedure"),
-    )
-    joined = failures.join(
-        keyed, failures["selected_skill_id"] == keyed["_skill_key"]
-    )
-    line = F.concat(
-        F.lit("- run_id="), F.col("run_id"),
-        F.lit("; score="), F.col("success_score").cast("string"),
-        F.lit("; error="),
-        F.coalesce(
-            F.nullif(F.col("error_type"), F.lit("")),
-            F.nullif(F.col("error_message"), F.lit("")),
-            F.lit("none"),
-        ),
-        F.lit("; result="), F.coalesce(F.col("result_summary"), F.lit("")),
-    )
-    per_skill = (
-        joined.select(
-            "skill_id", "skill_name", "_description", "old_procedure",
-            F.struct(
-                (-F.col("started_at_ms")).alias("o1"),
-                F.col("run_id").alias("o2"),
-                F.col("run_id").alias("run_id"),
-                line.alias("line"),
-            ).alias("_e"),
-        )
-        .groupBy("skill_id", "skill_name", "_description", "old_procedure")
-        .agg(F.array_sort(F.collect_list("_e")).alias("_entries"))
-    )
-    # note: o2 asc within equal o1 — the reference sorts recency only; the
-    # id tie-break pins the order under any partitioning
-    return per_skill.select(
-        "skill_id", "skill_name", "old_procedure",
-        F.transform("_entries", lambda e: e["run_id"]).alias("runs_used"),
-        F.concat(
-            F.lit("# Skill\nName: "), F.col("skill_name"),
-            F.lit("\nDescription: "), F.coalesce("_description", F.lit("")),
-            F.lit("\n\n# Current Procedure\n"),
-            F.coalesce("old_procedure", F.lit("")),
-            F.lit("\n\n# Failure Evidence\n"),
-            F.array_join(F.transform("_entries", lambda e: e["line"]), "\n\n"),
-        ).alias("context"),
-    )
-
-
-def propose_skill_improvements(
-    contexts: DataFrame, llm=None
-) -> DataFrame:
-    """Draft one SkillImprovementProposal row per context through the
-    batched executor transport. ``llm("improve_skill", context)`` must
-    return JSON {proposed_procedure, rationale, confidence}; a failing or
-    malformed draft drops only its skill (fail-open, the distillation
-    rule). ``llm=None`` uses the deterministic double.
-
-    Output: (proposal_id, skill_id, skill_name, old_procedure,
-    proposed_procedure, runs_used, confidence, rationale, status) with
-    status "proposed" and the heading-prefixed procedure format."""
-    import pandas as pd
-
-    llm = llm or reference_improvement_llm
-
-    def run(pdfs):
-        for pdf in pdfs:
-            rows = {"skill_id": [], "proposed_procedure": [],
-                    "rationale": [], "confidence": []}
-            for sid, ctx in zip(pdf["skill_id"], pdf["context"]):
-                # the WHOLE draft parse is fail-open: a malformed field
-                # (e.g. confidence: "high") must drop only this skill, not
-                # kill the task after other fields were appended
-                try:
-                    draft = json.loads(llm("improve_skill", ctx))
-                    proposed = str(draft.get("proposed_procedure", "")).strip()
-                    if not proposed:
-                        continue
-                    rationale = str(draft.get("rationale", ""))
-                    confidence = float(draft.get("confidence") or 0.0)
-                except Exception:
-                    continue
-                rows["skill_id"].append(sid)
-                rows["proposed_procedure"].append(proposed)
-                rows["rationale"].append(rationale)
-                rows["confidence"].append(confidence)
-            yield pd.DataFrame(rows, dtype=object)
-
-    drafts = contexts.select("skill_id", "context").mapInPandas(
-        run,
-        "skill_id string, proposed_procedure string, "
-        "rationale string, confidence double",
-    )
-    return contexts.drop("context").join(drafts, "skill_id").select(
-        id_for_col(
-            "SkillImprovementProposal",
-            F.col("skill_id"),
-            F.array_join("runs_used", ","),
-        ).alias("proposal_id"),
-        "skill_id", "skill_name", "old_procedure",
-        _format_procedure(F.col("skill_name"), F.col("proposed_procedure"))
-        .alias("proposed_procedure"),
-        "runs_used", "confidence", "rationale",
-        F.lit("proposed").alias("status"),
-    )
-
-
-def apply_proposals(
-    skills: DataFrame, proposals: DataFrame, proposal_ids: list[str]
-) -> dict[str, DataFrame]:
-    """_apply_proposal (skill_improvement.py:188-221) as one join: rewrite
-    each targeted skill's procedure to the proposal's (heading-formatted),
-    rebuild skill_text/search_text as name+description+procedure, and mark
-    the proposal applied. Non-targeted rows pass through unchanged.
-
-    Returns {"skills", "proposals"}."""
-    chosen = proposals.where(F.col("proposal_id").isin(*proposal_ids)).select(
-        F.col("skill_id").alias("_apply_skill_id"),
-        F.col("proposed_procedure").alias("_new_procedure"),
-    ).dropDuplicates(["_apply_skill_id"])
-    new_proc = _format_procedure(F.col("name"), F.col("_new_procedure"))
-    updated = (
-        skills.join(
-            chosen, skills["id"] == chosen["_apply_skill_id"], "left"
-        )
-        .withColumn(
-            "procedure",
-            F.when(F.col("_apply_skill_id").isNotNull(), new_proc)
-            .otherwise(F.col("procedure")),
-        )
-        .withColumn(
-            "skill_text",
-            F.when(
-                F.col("_apply_skill_id").isNotNull(),
-                F.concat_ws(
-                    "\n\n",
-                    F.nullif(F.col("name"), F.lit("")),
-                    F.nullif(F.col("description"), F.lit("")),
-                    F.nullif(F.col("procedure"), F.lit("")),
-                ),
-            ).otherwise(F.col("skill_text")),
-        )
-        .withColumn(
-            "search_text",
-            F.when(
-                F.col("_apply_skill_id").isNotNull(), F.col("skill_text")
-            ).otherwise(F.col("search_text")),
-        )
-        .drop("_apply_skill_id", "_new_procedure")
-    )
-    marked = proposals.withColumn(
-        "status",
-        F.when(
-            F.col("proposal_id").isin(*proposal_ids), F.lit("applied")
-        ).otherwise(F.col("status")),
-    )
-    return {"skills": updated, "proposals": marked}
-
-
-def reference_improvement_llm(kind: str, prompt: str) -> str:
-    """Deterministic drafting double (the production seam returns the same
-    JSON shape from a real model). Revises the procedure by appending an
-    'Avoid' section derived from the distinct failure errors in the
-    evidence — enough structure to pin formatting, ordering, and apply
-    semantics in tests."""
-    if kind != "improve_skill":
-        raise ValueError(f"unknown improvement llm kind {kind!r}")
-    lines = [ln for ln in prompt.splitlines() if ln.startswith("- run_id=")]
-    errors, seen = [], set()
-    for ln in lines:
-        err = ln.split("; error=", 1)[1].split("; result=", 1)[0]
-        if err != "none" and err not in seen:
-            seen.add(err)
-            errors.append(err)
-    name = prompt.split("Name: ", 1)[1].splitlines()[0] if "Name: " in prompt else ""
-    body = prompt.split("# Current Procedure\n", 1)[1].split("\n\n# Failure Evidence", 1)[0]
-    proposed = f"# {name}\n\n{body}".strip()
-    if errors:
-        proposed += "\n\n## Avoid\n" + "\n".join(f"- {e}" for e in errors)
-    return json.dumps({
-        "proposed_procedure": proposed,
-        "rationale": f"Derived from {len(lines)} failing runs",
-        "confidence": round(min(0.9, 0.5 + 0.1 * len(lines)), 2),
-    })

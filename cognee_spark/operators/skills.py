@@ -1,11 +1,11 @@
-"""Agentic-skills ingestion and lookup — the reference's SKILL.md flow
-(cognee/modules/tools/skill_parser.py:28-196, ingest_skills.py:1-167,
-resolve_skills.py:19-131) re-expressed as distributed parsing.
+"""Agentic-skills parsing and resolution — the reference's SKILL.md flow
+(cognee/modules/tools/skill_parser.py:28-196, resolve_skills.py:19-131)
+re-expressed as distributed parsing.
 
 The reference walks a skills directory on the driver, reads each SKILL.md,
 and parses YAML frontmatter with pyyaml, one file at a time. Here every
-skill file is one row (``spark.read.text(..., wholetext=True)``), and the
-whole parse — frontmatter/body split, alias resolution, description
+skill file is one row (e.g. ``spark.read.text(..., wholetext=True)``), and
+the whole parse — frontmatter/body split, alias resolution, description
 fallback, tool/tag list splitting, deterministic ids, content hash — is
 one whole-stage-codegen projection over higher-order functions: a million
 vendored skills parse at scan speed with zero Python in the row path.
@@ -17,17 +17,17 @@ format) parse as absent, falling back exactly like the reference does for
 missing keys. Parity notes per function; the reference's path-safety
 gatekeeping (trusted_* wrappers, source-root allowlists,
 ingest_skills.py:24-71) is driver-side filesystem policy with no dataflow
-in it — callers pass the glob they are allowed to read.
+in it — callers pass the payloads they are allowed to read.
 """
 
 from __future__ import annotations
 
 import uuid as _uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cognee_spark.functions.ids import id_for_col, uuid5_col
+from cognee_spark.functions.ids import uuid5_col
 
 # skill_parser.py:27 — the reference's fixed skill namespace.
 SKILL_NAMESPACE = _uuid.UUID("a1b2c3d4-e5f6-7890-abcd-ef1234567890")
@@ -99,29 +99,17 @@ def _description(entries: Column, body: Column) -> Column:
     return F.coalesce(explicit, fallback, F.lit(""))
 
 
-def parse_skill_files(
-    spark: SparkSession, skills_root: str, source_repo: str = ""
-) -> DataFrame:
-    """Every ``SKILL.md`` under ``skills_root`` → one Skill row
-    (parse_skills_folder + parse_skill_file, skill_parser.py:128-196).
+def parse_skill_frame(raw: DataFrame, source_repo: str = "") -> DataFrame:
+    """Every SKILL.md payload row (value, source_file) → one Skill row
+    (parse_skill_file, skill_parser.py:128-196); any source of payloads (a
+    ``wholetext`` directory scan, an archive column, a repo table) parses
+    the same way.
 
     name = the parent directory's slug (_skill_slug); id =
     uuid5(SKILL_NAMESPACE, 'skill:{source_dir}:{name}') — bit-compatible
     with the reference's _deterministic_id; content_hash = first 16 hex of
     sha256 (_content_hash); skill_text/search_text = name+description+body
-    (_build_search_text). Empty files drop, as in the reference."""
-    raw = (
-        spark.read.text(f"{skills_root}/*/SKILL.md", wholetext=True)
-        .withColumn("source_file", F.input_file_name())
-    )
-    return parse_skill_frame(raw, source_repo=source_repo)
-
-
-def parse_skill_frame(raw: DataFrame, source_repo: str = "") -> DataFrame:
-    """The parse projection over a (value, source_file) frame — the same
-    codegen :func:`parse_skill_files` applies to a directory scan, exposed
-    so any source of SKILL.md payloads (an archive column, a repo table)
-    parses identically."""
+    (_build_search_text). Empty payloads drop, as in the reference."""
     raw = raw.where(F.trim("value") != "")
     text = F.col("value")
     entries = _entries(text)
@@ -169,35 +157,6 @@ def parse_skill_frame(raw: DataFrame, source_repo: str = "") -> DataFrame:
     )
 
 
-def scope_skills(
-    skills: DataFrame, dataset_id: str, node_set: str = "skills"
-) -> DataFrame:
-    """Dataset-scope parsed skills for persistence (add_skills,
-    ingest_skills.py:119-165): id = uuid5(NAMESPACE_URL,
-    'cognee:skill:{dataset_id}:{source_dir}:{name}') (_scoped_skill_id),
-    dataset_scope = [dataset_id], belongs_to_set = the node-set id
-    (NodeSet id via generate_node_id, as coding_rules does)."""
-    return skills.withColumns(
-        {
-            "id": uuid5_col(
-                F.concat(
-                    F.lit(f"cognee:skill:{dataset_id}:"),
-                    F.col("source_dir"),
-                    F.lit(":"),
-                    F.col("name"),
-                ),
-                namespace=_uuid.NAMESPACE_URL,
-            ),
-            "dataset_scope": F.array(F.lit(dataset_id)),
-            "node_set": F.lit(node_set),
-            "node_set_id": F.lit(
-                None
-            ).cast("string"),  # filled below (constant per call)
-            "is_active": F.lit(True),
-        }
-    ).withColumn("node_set_id", id_for_col("NodeSet", F.lit(node_set)))
-
-
 def skill_resolution_keys(
     skills: DataFrame, dataset_id: str, cols: tuple[str, ...] = ("description",)
 ) -> DataFrame:
@@ -235,32 +194,4 @@ def skill_resolution_keys(
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_prio")
-    )
-
-
-def resolve_skills(
-    skills: DataFrame, names: list[str], dataset_id: str
-) -> DataFrame:
-    """Explicit skill lookup inside one dataset (resolve_skills.py:19-51):
-    active skills whose name is requested and whose scope contains the
-    dataset, deduped by id, in request order (request position joins in as
-    the sort key). Unknown names drop silently, as the reference logs-and-
-    skips."""
-    if not dataset_id:
-        raise ValueError("Skill lookup requires one explicit dataset.")
-    spark = skills.sparkSession
-    first_pos: dict[str, int] = {}
-    for i, n in enumerate(names):
-        first_pos.setdefault(n, i)  # dedupe on first request position
-    wanted = spark.createDataFrame(
-        list(first_pos.items()), "name string, req_pos int"
-    )
-    return (
-        skills.where(
-            F.col("is_active") & F.array_contains("dataset_scope", dataset_id)
-        )
-        .join(F.broadcast(wanted), "name")
-        .dropDuplicates(["id"])
-        .orderBy("req_pos")
-        .drop("req_pos")
     )

@@ -40,7 +40,6 @@ _DATE_ISO = re.compile(r"\b(\d{4})-(\d{2})-(\d{2})\b")
 _RANGE_YEARS = re.compile(r"\bfrom\s+(\d{4})\s+to\s+(\d{4})\b", re.IGNORECASE)
 _IN_YEAR = re.compile(r"\b(?:in|since|until|by)\s+([12]\d{3})\b", re.IGNORECASE)
 _SENTENCE_SPLIT = re.compile(r"(?<=[.!?])\s+")
-_CAMEL = re.compile(r"\b([A-Z][a-z0-9]+(?:[A-Z][a-z0-9]+)+)\b")
 
 
 def _ts(year: int, month: int = 1, day: int = 1) -> str:

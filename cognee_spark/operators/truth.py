@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cognee_spark.functions.ids import NAMESPACE_OID
+from cognee_spark.session import row_frame
 
 TRUTH_CENTROID_COLLECTION = "TruthCentroid_vector"
 DEFAULT_K = 8
@@ -351,7 +352,8 @@ def build_truth_subspace(
         node_coords_col(vec_col, basis).alias("truth_alignment"),
         F.lit(current_epoch).alias("truth_epoch"),
     )
-    centroid_rows = spark.createDataFrame(
+    centroid_rows = row_frame(
+        spark,
         [
             (
                 TRUTH_CENTROID_COLLECTION,

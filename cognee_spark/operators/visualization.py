@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cognee_spark.session import row_frame
+
 DEFAULT_NEIGHBORHOOD_DEPTH = 2  # subgraph_data.py:22
 DEFAULT_SEED_TOP_K = 10  # subgraph_data.py:23
 DEFAULT_MAX_NODES = 500  # subgraph_data.py:24
@@ -85,9 +87,7 @@ def resolve_seed_ids(
         for node_id in seed_node_ids:
             if str(node_id) not in seen:
                 seen.append(str(node_id))
-        frame = spark.createDataFrame(
-            [(s,) for s in seen[:seed_top_k]], "node_id string"
-        )
+        frame = row_frame(spark, [(s,) for s in seen[:seed_top_k]], "node_id string")
         return frame, "explicit"
     if recall is not None and "node_ids" in recall.columns:
         exploded = recall.select(
@@ -190,84 +190,3 @@ def bounded_subgraph(
         )
     )
     return {"nodes": kept_nodes, "edges": kept_edges}
-
-
-# type_name -> indexed field; the vector collection is f"{type}_{field}"
-# (embedding_join.py:37-43 DEFAULT_INDEX_FIELDS).
-DEFAULT_INDEX_FIELDS: dict[str, str] = {
-    "Entity": "name",
-    "EntityType": "name",
-    "TextSummary": "text",
-    "DocumentChunk": "text",
-    "TextDocument": "name",
-}
-
-
-def node_embeddings(
-    nodes: DataFrame,
-    embeddings: DataFrame,
-    node_id: str = "entity_id",
-    type_col: str | None = None,
-    index_fields: dict[str, str] | None = None,
-) -> DataFrame:
-    """(node_id, vector) for every node the vector store can supply —
-    ``fetch_node_embeddings`` (cognee/modules/visualization/
-    embedding_join.py:124-189) as ONE equi-join against the embeddings
-    table instead of per-collection batched retrieves.
-
-    The reference exploits "graph node id is stored verbatim as the
-    vector-row id"; here that is literally the join key
-    ``(collection, item_id)``. Nodes whose type has no indexed-field
-    mapping (embedding_join.py's ``unmapped_types``) or whose vector is
-    absent are simply missing from the output — the layout handles them.
-    Without ``type_col`` every node is an Entity (this engine's node
-    table), so the collection is the constant ``Entity_name``."""
-    fields = index_fields or DEFAULT_INDEX_FIELDS
-    if type_col is not None:
-        mapping = F.create_map(
-            *[F.lit(x) for kv in sorted(fields.items()) for x in kv]
-        )
-        coll = F.concat(F.col(type_col), F.lit("_"), mapping[F.col(type_col)])
-    else:
-        coll = F.lit("Entity_name")
-    keyed = nodes.select(
-        F.col(node_id).alias("node_id"), coll.alias("collection")
-    ).where(F.col("collection").isNotNull())
-    return keyed.join(
-        embeddings.select(
-            "collection",
-            F.col("item_id").alias("node_id"),
-            F.col("embedding").alias("vector"),
-        ),
-        ["collection", "node_id"],
-    ).select("node_id", "vector")
-
-
-def semantic_positions(
-    subgraph: dict[str, DataFrame],
-    embeddings: DataFrame,
-    node_id: str = "entity_id",
-    src: str = "source_node_id",
-    dst: str = "target_node_id",
-    type_col: str | None = None,
-) -> DataFrame:
-    """Pinned 2-D coordinates for a bounded subgraph — the semantic-map
-    assembly (cognee_network_visualization.py:53-60: fetch_node_embeddings
-    → semantic_layout.compute_positions) over :func:`bounded_subgraph`
-    output.
-
-    The reference bounds this path at SEMANTIC_NODE_CAP=2000
-    (embedding_join.py:47); here the bound is the caller's
-    ``bounded_subgraph(max_nodes=...)``, and the layout's own de-overlap
-    guard (layout.DEOVERLAP_CAP=2000) refuses unbounded input rather than
-    silently collecting it."""
-    from cognee_spark.operators.layout import compute_positions
-
-    node_ids = subgraph["nodes"].select(F.col(node_id).alias("node_id"))
-    links = subgraph["edges"].select(
-        F.col(src).alias("source"), F.col(dst).alias("target")
-    )
-    emb = node_embeddings(
-        subgraph["nodes"], embeddings, node_id=node_id, type_col=type_col
-    )
-    return compute_positions(node_ids, links, emb)

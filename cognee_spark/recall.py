@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cognee_spark.session import row_frame
+
 # _KIND_BY_SEARCH_TYPE (normalize_search_payload.py:22-41), over this
 # engine's SEARCH_TYPES surface (search.py).
 KIND_BY_SEARCH_TYPE: dict[str, str] = {
@@ -106,7 +108,8 @@ def normalize_search_results(
             None,
         ) or _json.dumps(result, default=str, ensure_ascii=False)
         raw_val = _json.dumps(result, default=str, ensure_ascii=False)
-        return spark.createDataFrame(
+        return row_frame(
+            spark,
             [(kind, st, text_val, None, dataset_id, dataset_name, {}, raw_val)],
             "kind string, search_type string, text string, score double, "
             "dataset_id string, dataset_name string, "
@@ -115,8 +118,8 @@ def normalize_search_results(
     if isinstance(result, (list, tuple)):
         if spark is None:
             raise ValueError("spark is required to normalize non-DataFrame payloads")
-        result = spark.createDataFrame(
-            [(str(v),) for v in result], "text string"
+        result = row_frame(
+            spark, [(str(v),) for v in result], "text string"
         ).withColumn("_is_scalar", F.lit(True))
     if not isinstance(result, DataFrame):
         raise TypeError(f"Cannot normalize payload of type {type(result).__name__}")

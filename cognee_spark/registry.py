@@ -43,14 +43,6 @@ NL_EXTRACTORS: dict[str, Callable[[DataFrame], DataFrame]] = {
     ),
 }
 
-CHUNKERS: dict[str, Callable[..., DataFrame]] = {
-    "paragraph": chunk_documents,   # TextChunker / chunk_by_paragraph path
-    "row": chunk_rows_documents,    # chunk_by_row path (structured corpora)
-}
-
-SUMMARIZERS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "extractive": summarize_chunks,
-}
 
 # Named tasks for run_custom_pipeline's `List[str]` form (the reference
 # resolves task names through its DI layer) — each is DataFrame -> DataFrame

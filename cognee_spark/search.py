@@ -23,6 +23,8 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cognee_spark.session import row_frame
+
 _log = logging.getLogger("cognee_spark.search")
 
 # FEELING_LUCKY llm-selection failures that fell back to the heuristic —
@@ -79,22 +81,13 @@ def _index_slice(tables, collection: str):
     return sliced if sliced.take(1) else None
 
 
-def _row_frame(spark: SparkSession, row: dict, schema: str) -> DataFrame:
-    """A one-row frame built from a pandas frame with an explicit schema, so
-    it goes through Arrow into the JVM: a list of rows would become a Python
-    RDD, with one Python task per core just to ship one row."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame({k: [v] for k, v in row.items()}), schema)
-
-
 def _query_frame(spark, query: str) -> DataFrame:
     """The one-row (query_id, query_vec) frame of the hash-embedded query."""
     from cognee_spark.functions.embeddings import hash_embedding_py
 
-    return _row_frame(
+    return row_frame(
         spark,
-        {"query_id": "q0", "query_vec": hash_embedding_py(query)},
+        [("q0", hash_embedding_py(query))],
         "query_id string, query_vec array<double>",
     )
 
@@ -390,48 +383,6 @@ def search(
 
 
 # --- search history (modules/search/operations) -----------------------------
-
-_QUERY_SCHEMA = "id string, text string, query_type string, user_id string, created_at timestamp"
-_RESULT_SCHEMA = "id string, value string, query_id string, user_id string, created_at timestamp"
-
-
-def log_query(
-    spark: SparkSession, text: str, query_type: str, user_id: str, ts: str
-) -> DataFrame:
-    """One Query row (operations/log_query.py:9-24) as a frame the caller
-    appends to its ``search_queries`` table. The reference's random ORM pk
-    becomes a deterministic uuid5 over (user, ts, text) so replayed logging
-    upserts instead of duplicating."""
-    from cognee_spark.functions.ids import id_for_col
-
-    return _row_frame(
-        spark,
-        {"text": text, "query_type": query_type, "user_id": user_id, "created_at": ts},
-        "text string, query_type string, user_id string, created_at string",
-    ).select(
-        id_for_col("Query", F.col("user_id"), F.col("created_at"), F.col("text")).alias("id"),
-        "text", "query_type", "user_id",
-        F.col("created_at").cast("timestamp"),
-    )
-
-
-def log_result(
-    spark: SparkSession, query_id: str, value: str, user_id: str, ts: str
-) -> DataFrame:
-    """One Result row (operations/log_result.py:9-24), deterministic id over
-    (query, user, ts)."""
-    from cognee_spark.functions.ids import id_for_col
-
-    return _row_frame(
-        spark,
-        {"value": value, "query_id": query_id, "user_id": user_id, "created_at": ts},
-        "value string, query_id string, user_id string, created_at string",
-    ).select(
-        id_for_col("Result", F.col("query_id"), F.col("user_id"), F.col("created_at")).alias("id"),
-        "value", "query_id", "user_id",
-        F.col("created_at").cast("timestamp"),
-    )
-
 
 def get_history(
     queries: DataFrame, results: DataFrame, user_id: str, limit: int = 10

@@ -48,7 +48,31 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def row_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in schema order, or dicts by field name)
+    as a frame with the DDL ``schema``.
+
+    The rows become one Arrow table, which crosses into the JVM as a
+    ``LocalRelation``. A list of rows handed to ``createDataFrame`` would
+    become a Python RDD, with one Python task per core just to ship them;
+    so would an empty pandas frame (PySpark sends only non-empty ones
+    through Arrow), and a pandas frame whose types Arrow cannot convert
+    falls back to it silently. An Arrow table has no such fallback: a row
+    that does not fit the schema raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def _ship_package(spark: SparkSession) -> None:

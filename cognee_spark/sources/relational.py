@@ -7,13 +7,12 @@ schema: SchemaTable nodes, SchemaRelationship nodes per foreign key, and
 FK-based edges between the Document nodes of related rows
 (extract_dlt_fk_edges.py:30-120).
 
-Spark re-expression: a table is already the native shape, so "ingestion" is
-a projection — each row renders to "col: val, col: val" text (the enriched
-row context the reference stores), keyed by a deterministic document id.
-FK edges are a join on the key columns, schema nodes a handful of literals;
-all of it whole-stage codegen, no Python, no LLM. Row documents flow through
-the standard pipeline (chunk_rows / C4 semantics); FK triples union into the
-triples table shape.
+Spark re-expression: a table is already the native shape. FK edges
+(:func:`fk_row_edges`) are a join on the key columns between row documents
+keyed by a deterministic document id, whole-stage codegen with no Python
+and no LLM, and they union into the triples table shape. Schema nodes
+(:func:`ingest_database_schema`) are a handful of driver-side rows, because
+a schema is dictionary-sized.
 """
 
 from __future__ import annotations
@@ -21,29 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cognee_spark.functions.ids import id_for_col
-
-
-def table_to_documents(
-    df: DataFrame, table_name: str, key_col: str, columns: list[str] | None = None
-) -> DataFrame:
-    """Rows → repos-shaped documents: (repo, path, commit, lang, content).
-
-    content = "col: val, col: val" in declared column order (the reference's
-    schema-context text); path = <table>/<key>.row; lang = 'dlt' keeps the
-    rows out of the code/NL extractors (their graph is schema-derived).
-    """
-    cols = columns or [c for c in df.columns]
-    content = F.concat_ws(
-        ", ", *[F.concat_ws(": ", F.lit(c), F.col(c).cast("string")) for c in cols]
-    )
-    return df.select(
-        F.lit(f"db/{table_name}").alias("repo"),
-        F.concat(F.lit(f"{table_name}/"), F.col(key_col).cast("string"), F.lit(".row")).alias("path"),
-        F.lit("dlt").alias("commit"),
-        F.lit("dlt").alias("lang"),
-        content.alias("content"),
-    )
+from cognee_spark.session import row_frame
 
 
 def row_document_id(table_name: str, key: F.Column) -> F.Column:
@@ -81,36 +58,6 @@ def fk_row_edges(
     )
 
 
-def schema_nodes(tables: list[str], fks: list[tuple[str, str, str, str]]) -> list[dict]:
-    """SchemaTable + SchemaRelationship node rows (driver-side literals —
-    a schema is dictionary-sized by definition). fks: (table, column,
-    ref_table, ref_column)."""
-    from cognee_spark.functions.ids import id_for_py
-
-    rows = [
-        {"node_id": id_for_py("SchemaTable", t), "kind": "SchemaTable", "name": t}
-        for t in tables
-    ]
-    rows += [
-        {
-            "node_id": id_for_py("SchemaRelationship", f"{t}.{c}->{rt}.{rc}"),
-            "kind": "SchemaRelationship",
-            "name": f"{t}.{c}->{rt}.{rc}",
-        }
-        for t, c, rt, rc in fks
-    ]
-    return rows
-
-
-def row_membership_edges(df: DataFrame, table_name: str, key_col: str) -> DataFrame:
-    """row document → SchemaTable `is_part_of` edges."""
-    return df.select(
-        row_document_id(table_name, F.col(key_col)).alias("subj"),
-        F.lit("is_part_of").alias("pred"),
-        F.lit(table_name).alias("obj"),
-    ).withColumn("obj_id", id_for_col("SchemaTable", F.col("obj")))
-
-
 def ingest_database_schema(
     spark,
     schema: dict,
@@ -135,8 +82,7 @@ def ingest_database_schema(
     of the reference's pg_class.reltuples fast path, :66-77); sampling is
     ``limit(max_sample_rows)`` per table (:52-59), bounded driver state by
     construction. The schema dict itself is dictionary-sized (hundreds of
-    tables, not rows), so node building is driver-side literals — the same
-    rule sources/relational.schema_nodes already documents.
+    tables, not rows), so node building is driver-side literals.
 
     Ids mirror the reference exactly: uuid5(NAMESPACE_OID, table_name) for
     tables (:82), uuid5(NAMESPACE_OID, "t:c->rt:rc") for relationships
@@ -231,7 +177,7 @@ def ingest_database_schema(
         "tables string, description string"
     )
     return {
-        "database_schema": spark.createDataFrame([db_row], db_schema),
-        "schema_tables": spark.createDataFrame(table_rows, table_schema),
-        "relationships": spark.createDataFrame(rel_rows, rel_schema),
+        "database_schema": row_frame(spark, [db_row], db_schema),
+        "schema_tables": row_frame(spark, table_rows, table_schema),
+        "relationships": row_frame(spark, rel_rows, rel_schema),
     }

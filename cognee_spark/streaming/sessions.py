@@ -329,7 +329,7 @@ def _make_tracker(gap_ms: int):
 
 def stream_session_records(
     calls: DataFrame,
-    gap_seconds: int = 1800,  # lifecycle.ABANDON_AFTER_SECONDS
+    gap_seconds: int = 1800,  # the reference's metrics._abandon_after_seconds default
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Fold a streaming priced-call log into final session records.

@@ -209,21 +209,23 @@ def test_authorized_search_scopes_results_to_readable_datasets(spark):
 
 
 def test_history_interleaves_orders_and_limits(spark):
-    q1 = S.log_query(spark, "what is alice?", "CHUNKS", "u1", "2026-01-01 10:00:00")
-    q2 = S.log_query(spark, "and bob?", "CHUNKS", "u1", "2026-01-01 10:02:00")
-    other = S.log_query(spark, "hidden", "CHUNKS", "u2", "2026-01-01 10:01:00")
-    queries = q1.unionByName(q2).unionByName(other)
-    qid = q1.collect()[0].id
-    r1 = S.log_result(spark, qid, "alice builds engines", "u1", "2026-01-01 10:01:00")
-    hist = S.get_history(queries, r1, "u1").collect()
+    queries = spark.createDataFrame(
+        [
+            ("q1", "what is alice?", "CHUNKS", "u1", "2026-01-01 10:00:00"),
+            ("q2", "and bob?", "CHUNKS", "u1", "2026-01-01 10:02:00"),
+            ("q3", "hidden", "CHUNKS", "u2", "2026-01-01 10:01:00"),
+        ],
+        "id string, text string, query_type string, user_id string, created_at string",
+    ).withColumn("created_at", F.col("created_at").cast("timestamp"))
+    results = spark.createDataFrame(
+        [("r1", "alice builds engines", "q1", "u1", "2026-01-01 10:01:00")],
+        "id string, value string, query_id string, user_id string, created_at string",
+    ).withColumn("created_at", F.col("created_at").cast("timestamp"))
+    hist = S.get_history(queries, results, "u1").collect()
     assert [(h.text, h.user) for h in hist] == [
         ("what is alice?", "user"),
         ("alice builds engines", "system"),
         ("and bob?", "user"),
     ]
-    assert len(S.get_history(queries, r1, "u1", limit=2).collect()) == 2
-    assert len(S.get_history(queries, r1, "u1", limit=0).collect()) == 3
-    # deterministic ids: re-logging the same event is an upsert, not a dup
-    assert S.log_query(
-        spark, "what is alice?", "CHUNKS", "u1", "2026-01-01 10:00:00"
-    ).collect()[0].id == qid
+    assert len(S.get_history(queries, results, "u1", limit=2).collect()) == 2
+    assert len(S.get_history(queries, results, "u1", limit=0).collect()) == 3

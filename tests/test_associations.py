@@ -7,12 +7,10 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from cognee_spark.operators.associations import (
     compare_chunk_pairs,
     create_chunk_associations,
-    merge_association_edges,
     reference_association_transport,
 )
 
@@ -156,32 +154,6 @@ def test_top_k_restricts_to_each_sides_best(spark):
     # by id ("x") → the either-endpoint rule keeps every h-pair and drops
     # all spoke-spoke cross pairs
     assert kept == {("h", "x"), ("h", "y"), ("h", "z")}
-
-
-def test_merge_into_pipeline_edges_table(spark):
-    # the L11 "merged into the edges table" half: association edges join a
-    # materialized edges table, keep their weight, and replays are no-ops
-    edges_table = spark.createDataFrame(
-        [("n1", "mentioned_in", "d1", 0.5)],
-        "source_node_id string, relationship_name string, "
-        "target_node_id string, feedback_weight double",
-    ).withColumn(
-        "edge_object_id",
-        F.md5(F.concat("source_node_id", "relationship_name", "target_node_id")),
-    )
-    chunks, emb = _corpus(spark)
-    assoc = create_chunk_associations(
-        chunks, emb, similarity_threshold=0.5, candidate_threshold=0.9, dim=4
-    )["edges"]
-    merged = merge_association_edges(edges_table, assoc)
-    assert merged.count() == 2
-    got = {r.relationship_name: r for r in merged.collect()}
-    a = got["associated_with"]
-    assert a.weight == pytest.approx(5 / 7, abs=1e-9)
-    assert a.feedback_weight is None  # column union keeps both sides' props
-    assert got["mentioned_in"].weight is None
-    # replay: merging the same associations again adds nothing
-    assert merge_association_edges(merged, assoc).count() == 2
 
 
 def test_transport_double_is_pure_and_jaccard(spark):

@@ -14,7 +14,6 @@ from cognee_spark.operators.coding_rules import (
     RULES_NODESET,
     existing_rules,
     extract_rules,
-    rule_origin_edges,
 )
 
 
@@ -73,36 +72,6 @@ def test_existing_rules_scopes_to_nodesets(spark):
     assert got == ["always a", "always c"]  # default nodeset, rule-sorted
     both = {r.rule for r in existing_rules(rules, [RULES_NODESET, "other_set"]).collect()}
     assert both == {"always a", "always b", "always c"}
-
-
-def test_rule_origin_edges_link_to_top1_chunk(spark):
-    chats = _chats(spark)
-    rules = extract_rules(chats)
-    # per-chat rule membership re-derived the same way (chat → its rules)
-    per_chat = chats.select(
-        "chat_id",
-        F.explode(
-            F.expr(r"regexp_extract_all(text, '\\b(fast|slow) (\\w+)', 0)")
-        ).alias("m"),
-    ).select(
-        "chat_id",
-        F.concat(
-            F.lit("prefer "), F.element_at(F.split("m", " "), 2),
-            F.lit(" ("), F.element_at(F.split("m", " "), 1), F.lit(")"),
-        ).alias("rule"),
-    ).join(rules, "rule").select("chat_id", "rule_id").distinct()
-    chunks = chats.select(
-        F.concat(F.lit("ch_"), "chat_id").alias("chunk_id"), "text"
-    )
-    edges = rule_origin_edges(chats, per_chat, chunks)
-    got = {(r.src, r.dst, r.rel) for r in edges.collect()}
-    # every chat's rules point at the chunk with the chat's own text (cos=1);
-    # a rule extracted from two chats links to BOTH origins
-    assert all(rel == "rule_associated_from" for _, _, rel in got)
-    expected = {
-        (r.rule_id, f"ch_{r.chat_id}") for r in per_chat.collect()
-    }
-    assert {(s, d) for s, d, _ in got} == expected
 
 
 def test_dispatch_routes_coding_rules(spark):

@@ -1,4 +1,4 @@
-"""Training-data operators: dedup, similarity search, text stats, multimodal."""
+"""Training-data operators: dedup, similarity search, text stats."""
 
 from __future__ import annotations
 
@@ -30,35 +30,51 @@ def test_exact_duplicates(spark):
     assert groups[0].dup_count == 3 and groups[0].doc_ids == [1, 2, 4]
 
 
-def test_minhash_candidates_catch_near_dups(spark, docs):
-    from cognee_spark.operators.dedup import minhash_duplicate_candidates
+def _documents_dir(spark, tmp_path, rows):
+    """``rows`` as the ``documents`` table of an sf directory, the input
+    shape the ``__spark_entry__`` dedup queries read."""
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    return str(tmp_path)
 
-    # two docs sharing a long prefix must co-bucket
-    df = spark.createDataFrame(
+
+def test_minhash_candidates_catch_near_dups(spark, docs, tmp_path):
+    import __spark_entry__ as entry
+    from cognee_spark.operators.dedup import shingle_min_signatures
+
+    # two docs sharing a long prefix must co-bucket, so the min-shingle
+    # candidate step of the minhash→verify ladder hands them to the verifier
+    sf_dir = _documents_dir(
+        spark,
+        tmp_path,
         [
             (1, "the quick brown fox jumps over the lazy dog in the park"),
             (2, "the quick brown fox jumps over the lazy dog in the yard"),
             (3, "completely unrelated content about spark aggregation"),
         ],
-        ["doc_id", "text"],
     )
-    cands = minhash_duplicate_candidates(df).collect()
-    assert any(set(c.doc_ids) >= {1, 2} for c in cands)
+    pairs = {(r.a, r.b) for r in entry.minhash_jaccard_pairs(spark, sf_dir).collect()}
+    assert (1, 2) in pairs
+    assert not pairs & {(1, 3), (2, 3)}
     # runs on real corpus without error
-    minhash_duplicate_candidates(docs).count()
+    shingle_min_signatures(docs).count()
 
 
-def test_simhash_duplicates(spark):
-    from cognee_spark.operators.dedup import simhash_duplicates
+def test_simhash_duplicates(spark, tmp_path):
+    import __spark_entry__ as entry
 
     base = "token" + " token".join(str(i) for i in range(60))
-    df = spark.createDataFrame(
-        [(1, base), (2, base + " extra"), (3, "something else entirely ok")],
-        ["doc_id", "text"],
+    sf_dir = _documents_dir(
+        spark, tmp_path, [(1, base), (2, base + " extra"), (3, "something else entirely ok")]
     )
-    pairs = simhash_duplicates(df, max_hamming=8).collect()
-    assert any({p.a, p.b} == {1, 2} for p in pairs)
-    assert not any({p.a, p.b} == {1, 3} for p in pairs)
+    sig = {r.doc_id: r.simhash for r in entry.simhash_signatures(spark, sf_dir).collect()}
+
+    def hamming(a, b):
+        return bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1")
+
+    assert hamming(1, 2) <= 8
+    assert hamming(1, 3) > 8
 
 
 def test_ngram_jaccard_verify(spark):
@@ -261,58 +277,3 @@ def test_textstats(spark, docs):
     language_id(docs).groupBy("lang_guess").count().collect()
     fp = fingerprints(docs)
     assert fp.count() == docs.count()
-
-
-def test_multimodal_real_decode(spark):
-    """BMP + WAV decode for real (pure Python, no PIL/ffmpeg): dimensions,
-    channel statistics, audio sample statistics."""
-    from cognee_spark.operators.multimodal import (
-        decode_bmp,
-        decode_wav,
-        extract_media_features,
-        make_bmp,
-        make_wav,
-        synthesize_media,
-    )
-
-    # kernel level
-    img = decode_bmp(make_bmp(7))
-    assert img["width"] == 16 and img["height"] == 12 and len(img["feature"]) == 8
-    assert all(0.0 <= img["feature"][j] <= 1.0 for j in range(6))  # channel stats
-    wav = decode_wav(make_wav(7))
-    assert wav["width"] is None and len(wav["feature"]) == 8
-    assert 0.0 < wav["feature"][1] <= wav["feature"][2] <= 1.0  # rms <= peak
-    assert abs(wav["feature"][0] - 400 / 8000) < 1e-9  # duration
-
-    # distributed: real decode over image+audio rows
-    media = synthesize_media(spark, n=30)
-    feats = extract_media_features(media.where(F.col("kind") != "video")).collect()
-    assert len(feats) == 20
-    assert all(len(f.feature) == 8 and f.n_bytes > 0 for f in feats)
-    assert all(f.width == 16 for f in feats if f.kind == "image")
-    # deterministic across runs
-    feats2 = extract_media_features(
-        synthesize_media(spark, n=30).where(F.col("kind") != "video")
-    ).collect()
-    assert {f.media_id: f.feature for f in feats} == {f.media_id: f.feature for f in feats2}
-
-    # compressed/unknown formats stay an honest NotImplementedError
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        extract_media_features(media.where(F.col("kind") == "video")).collect()
-
-
-def test_multimodal_plumbing(spark):
-    from cognee_spark.operators.multimodal import (
-        extract_media_features,
-        sample_frames,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, n=30)
-    feats = extract_media_features(media, fake=True).collect()
-    assert len(feats) == 30
-    assert all(len(f.feature) == 8 and f.n_bytes > 0 for f in feats)
-    frames = sample_frames(media, every_n_bytes=256, fake=True)
-    assert frames.count() > 0

@@ -1,19 +1,10 @@
-"""Enrichment operators: summaries, titles, consolidation, cleanup, weights."""
+"""Enrichment operators: summaries and titles."""
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import functions as F
-
-from cognee_spark.operators.enrich import (
-    apply_frequency_weights,
-    consolidate_descriptions,
-    disconnected_entities,
-    remove_disconnected_chunks,
-    summarize_chunks,
-    synthesize_titles,
-)
+from cognee_spark.operators.enrich import summarize_chunks, synthesize_titles
 
 
 def test_summarize_chunks(spark):
@@ -36,30 +27,3 @@ def test_synthesize_titles(spark):
     row = synthesize_titles(docs).first()
     assert row.title.startswith("alpha beta gamma delta epsilon zeta eta | ")
     assert "alpha" in row.title.split(" | ")[1]
-
-
-def test_consolidate_descriptions(spark):
-    mentions = spark.createDataFrame(
-        [("e1", "Alpha"), ("e1", "alpha svc"), ("e2", "Beta"), ("e1", "Alpha")],
-        ["canonical_name", "name"],
-    )
-    rows = {r.canonical_name: r for r in consolidate_descriptions(mentions).collect()}
-    assert rows["e1"].consolidated_description == "Alpha; alpha svc"
-    assert rows["e1"].mention_count == 3
-
-
-def test_remove_disconnected_and_weights(spark):
-    chunks = spark.createDataFrame([("c1", "t"), ("c2", "t")], ["chunk_id", "text"])
-    mentions = spark.createDataFrame([("c1", "m")], ["chunk_id", "name"])
-    kept = remove_disconnected_chunks(chunks, mentions).collect()
-    assert [r.chunk_id for r in kept] == ["c1"]
-
-    nodes = spark.createDataFrame([("a",), ("b",), ("zzz",)], ["name"])
-    triples = spark.createDataFrame([("a", "r", "b")], ["subj", "pred", "obj"])
-    lonely = disconnected_entities(nodes, triples).collect()
-    assert [r.name for r in lonely] == ["zzz"]
-
-    edges = spark.createDataFrame([("e1", 0.5), ("e2", 0.5)], ["edge_object_id", "feedback_weight"])
-    usage = spark.createDataFrame([("e1", 100)], ["edge_object_id", "uses"])
-    out = {r.edge_object_id: r.feedback_weight for r in apply_frequency_weights(edges, usage).collect()}
-    assert out["e2"] == 0.5 and 0.9 < out["e1"] <= 1.0

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from cognee_spark.functions import (
     edge_object_id_col,
     edge_object_id_py,
-    entity_id_col,
+    id_for_col,
     id_for_py,
     node_id_col,
     node_id_py,
@@ -56,7 +56,7 @@ def test_uuid5_col_matches_python(spark):
         "name",
         uuid5_col(F.col("name")).alias("u5"),
         node_id_col(F.col("name")).alias("nid"),
-        entity_id_col(F.col("name")).alias("eid"),
+        id_for_col("Entity", F.col("name")).alias("eid"),
     ).collect()
     for row in rows:
         assert row.u5 == str(uuid.uuid5(uuid.NAMESPACE_OID, row.name)), row.name

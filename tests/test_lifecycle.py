@@ -1,6 +1,6 @@
 """Session-lifecycle usage tracking (usage_tracking.py:33-169 + metrics.py
 semantics): token estimates, longest-prefix pricing, per-session and
-per-model rollups, terminal-session freeze, read-time abandoned status."""
+per-model rollups, terminal-session freeze."""
 
 from __future__ import annotations
 
@@ -8,16 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from cognee_spark.operators.lifecycle import (
-    cost_by_model,
     cost_usd_col,
-    effective_status_col,
     estimate_tokens_col,
+    priced_calls,
     session_usage,
 )
-
-
-def _one(spark, expr):
-    return spark.range(1).select(expr.alias("v")).first().v
 
 
 def test_token_estimate_contract(spark):
@@ -61,6 +56,18 @@ def _calls(spark):
     ).withColumn("ts", F.to_timestamp("ts"))
 
 
+def test_cost_by_model_attributes_mixed_sessions(spark):
+    out = {
+        (r.session_id, r.model): r
+        for r in priced_calls(_calls(spark)).collect()
+    }
+    assert ("s1", "gpt-4o") in out and ("s1", "gpt-4o-mini") in out
+    assert out[("s1", "gpt-4o")].tokens_out == 20
+    # the mystery call carries tokens (credited) even though it costs $0
+    assert ("s2", "mystery") in out and out[("s2", "mystery")].cost_usd == 0.0
+    assert out[("s2", "mystery")].tokens_in > 0
+
+
 def test_session_usage_rollup(spark):
     out = {r.session_id: r for r in session_usage(_calls(spark)).collect()}
     s1 = out["s1"]
@@ -83,38 +90,6 @@ def test_terminal_sessions_are_frozen(spark):
     assert out["s1"].n_calls == 1 and out["s1"].error_count == 0
     assert out["s1"].last_model == "gpt-4o"
     assert out["s2"].n_calls == 1  # running session unaffected
-
-
-def test_cost_by_model_attributes_mixed_sessions(spark):
-    out = {
-        (r.session_id, r.model): r
-        for r in cost_by_model(_calls(spark)).collect()
-    }
-    assert ("s1", "gpt-4o") in out and ("s1", "gpt-4o-mini") in out
-    assert out[("s1", "gpt-4o")].tokens_out == 20
-    # the mystery call carries tokens (credited) even though it costs $0
-    assert ("s2", "mystery") in out and out[("s2", "mystery")].cost_usd == 0.0
-
-
-def test_effective_status_abandoned_at_read_time(spark):
-    sessions = spark.createDataFrame(
-        [
-            ("s1", "running", "2024-01-01 10:00:00"),   # idle 2 h → abandoned
-            ("s2", "running", "2024-01-01 11:45:00"),   # idle 15 min → running
-            ("s3", "completed", "2024-01-01 08:00:00"), # terminal stays stored
-        ],
-        ["session_id", "status", "last_activity_at"],
-    ).withColumn("last_activity_at", F.to_timestamp("last_activity_at"))
-    out = {
-        r.session_id: r.eff
-        for r in sessions.select(
-            "session_id",
-            effective_status_col(
-                F.col("status"), F.col("last_activity_at"), "2024-01-01 12:00:00"
-            ).alias("eff"),
-        ).collect()
-    }
-    assert out == {"s1": "abandoned", "s2": "running", "s3": "completed"}
 
 
 def test_terminal_session_with_null_ended_at_keeps_usage(spark):

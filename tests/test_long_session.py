@@ -36,7 +36,17 @@ def persistent_ids(collect=False):
     if collect:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    # the map getPersistentRDDs returns (and its key-set view) hold every
+    # persistent RDD strongly. A dropped proxy is detached only when py4j's
+    # finalizer thread next wakes, up to a second later, so the next poll's
+    # System.gc() would find this probe still holding them; detach now.
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    keys = rdds.keySet()
+    try:
+        return set(keys.toArray())
+    finally:
+        for proxy in (keys, rdds):
+            proxy._gateway_client.garbage_collect_object(proxy._target_id, False)
 
 
 root = tempfile.mkdtemp(prefix="cognee_long_session")

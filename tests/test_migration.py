@@ -1,21 +1,13 @@
-"""Memory-store migration: source adapters, loader translation, exports.
+"""Memory-store migration: loader translation and the Cypher emitter.
 
-Reference semantics under test: cognee/modules/migration/sources/{mem0,zep,
-letta}.py (adapter tolerance), loader.py:41-649 (merge/resolve/stub/skip/
-dedup/digests), cogx.py:207-343 + formats.py:28-145 (archive round trip and
-emitters)."""
+Reference semantics under test: cognee/modules/migration/loader.py:156-353
+(merge/resolve/stub/skip/dedup) and formats.py:103-145 (Cypher emitter)."""
 
 from __future__ import annotations
 
-import json
-
-import pytest
-
-from pyspark.sql import functions as F
-
 from cognee_spark.functions.ids import id_for_py
-from cognee_spark.operators import migration as M
 from cognee_spark.operators import graph_export as X
+from cognee_spark.operators import migration as M
 from cognee_spark.sources import memory_stores as S
 
 
@@ -24,183 +16,8 @@ def _by(rows, key):
 
 
 # --------------------------------------------------------------------------
-# adapters
-# --------------------------------------------------------------------------
-
-
-def test_mem0_adapter_list_and_wrapper_shapes(spark):
-    items = [
-        {"id": "m1", "memory": "Alice likes tea", "categories": ["prefs"],
-         "user_id": "u1", "created_at": "2024-01-02T03:04:05Z"},
-        {"text": "fallback content key", "categories": "work"},
-        {"id": "m3", "metadata": {"k": "v"}},  # no content → dropped
-    ]
-    for payload in (items, {"results": items}, {"memories": items}):
-        rows = S.mem0_records(spark, payload).orderBy("seq").collect()
-        assert [r.external_id for r in rows] == ["m1", "mem0-1"]
-        assert rows[0].content == "Alice likes tea"
-        assert rows[0].categories == ["prefs"]
-        assert rows[0].user_id == "u1"
-        assert rows[0].created_at.isoformat().startswith("2024-01-02T03:04:05")
-        # string categories tolerated as a single-element list (mem0.py:62-64)
-        assert rows[1].categories == ["work"]
-        assert rows[1].content == "fallback content key"
-
-
-def test_zep_adapter_episodes_entities_facts(spark):
-    export = {
-        "episodes": [
-            {"uuid": "ep1", "name": "Chat", "content": "hello world",
-             "created_at": "2024-05-01T00:00:00Z", "group_id": "g1"},
-            {"uuid": "ep2", "episode_body": "   "},  # blank → dropped
-        ],
-        "nodes": [
-            {"uuid": "n1", "name": "Alice", "labels": ["Entity", "Person"],
-             "summary": "a person"},
-            {"uuid": "n2", "name": "TeaCo", "label": "Company"},
-            {"uuid": "n3", "name": " "},  # blank name → dropped
-        ],
-        "edges": [
-            {"uuid": "f1", "source_node_uuid": "n1", "target_node_uuid": "n2",
-             "relation": "works_at", "fact": "Alice works at TeaCo",
-             "valid_at": "2024-01-01T00:00:00Z", "expired_at": "2024-06-01T00:00:00Z"},
-            {"uuid": "f2", "source": "n1"},  # missing target → dropped
-        ],
-    }
-    rows = S.zep_records(spark, export).orderBy("seq").collect()
-    kinds = [r.kind for r in rows]
-    assert kinds == ["episode", "entity", "entity", "fact"]
-    ep, a, t, f = rows
-    assert ep.turns[0].role == "episode" and ep.turns[0].content == "hello world"
-    assert ep.session_id == "g1"
-    # first non-'Entity' label becomes the type; bare string label tolerated
-    assert a.entity_type == "Person" and a.description == "a person"
-    assert t.entity_type == "Company"
-    assert f.predicate == "works_at" and f.fact_text == "Alice works at TeaCo"
-    assert f.invalid_at is not None  # expired_at alias (zep.py:133)
-
-
-def test_letta_adapter_blocks_messages_passages(spark):
-    af = {
-        "agents": [
-            {
-                "name": "bot",
-                "block_ids": ["b1"],
-                "messages": [
-                    {"role": "system", "content": "ignored"},
-                    {"role": "user", "content": "plain string"},
-                    {"role": "assistant",
-                     "content": [{"type": "text", "text": "part one"},
-                                 {"type": "image"}, {"type": "text", "text": "part two"}]},
-                    {"role": "tool", "content": "ignored too"},
-                ],
-                "archival_memory": [{"id": "p1", "text": "a passage"}],
-            }
-        ],
-        "blocks": [{"id": "b1", "label": "persona", "value": "I am helpful"}],
-    }
-    rows = S.letta_records(spark, af).collect()
-    by_kind = {}
-    for r in rows:
-        by_kind.setdefault(r.kind, []).append(r)
-    [block] = by_kind["memory_block"]
-    assert block.label == "persona" and block.value == "I am helpful"
-    assert block.external_id == "b1" and block.agent_id == "bot"
-    [episode] = by_kind["episode"]
-    # system/tool filtered; list-of-parts content keeps only text parts
-    assert [t.content for t in episode.turns] == ["plain string", "part one\npart two"]
-    assert episode.title == "Conversation history of agent bot"
-    [doc] = by_kind["document"]
-    assert doc.content == "a passage" and doc.external_id == "p1"
-
-
-def test_letta_single_agent_at_top_level(spark):
-    af = {"name": "solo", "messages": [{"role": "user", "content": "hi"}]}
-    rows = S.letta_records(spark, af).collect()
-    assert len(rows) == 1 and rows[0].kind == "episode"
-    assert rows[0].agent_id == "solo"
-
-
-def test_parse_ts_epoch_scaling(spark):
-    df = spark.range(1).select(
-        S.parse_ts(__import__("pyspark").sql.functions.lit("1700000000")).alias("s"),
-        S.parse_ts(__import__("pyspark").sql.functions.lit("1700000000000")).alias("ms"),
-        S.parse_ts(__import__("pyspark").sql.functions.lit("1700000000000000")).alias("us"),
-        S.parse_ts(__import__("pyspark").sql.functions.lit("2023-11-14T22:13:20Z")).alias("iso"),
-        S.parse_ts(__import__("pyspark").sql.functions.lit("not a time")).alias("bad"),
-    ).first()
-    assert df.s == df.ms == df.us == df.iso
-    assert df.bad is None
-
-
-# --------------------------------------------------------------------------
 # loader translation
 # --------------------------------------------------------------------------
-
-
-def test_data_items_rendering_and_ids(spark):
-    records = S._finish(spark.createDataFrame(
-        [
-            ("document", "zep", "d1", 0, "raw text", "Title"),
-            ("memory", "mem0", "m1", 1, "likes tea", None),
-            ("memory_block", "letta", "b1", 2, None, None),
-        ],
-        "kind string, external_system string, external_id string, seq long, "
-        "content string, title string",
-    ).withColumn("categories", __import__("pyspark").sql.functions.expr(
-        "case when kind = 'memory' then array('prefs','taste') end"
-    )).withColumn("label", __import__("pyspark").sql.functions.expr(
-        "case when kind = 'memory_block' then 'persona' end"
-    )).withColumn("value", __import__("pyspark").sql.functions.expr(
-        "case when kind = 'memory_block' then 'I help' end"
-    )))
-    rows = _by(M.data_items(records, mode="preserve").collect(), "external_id")
-    assert rows["d1"].content == "raw text" and rows["d1"].title == "Title"
-    assert rows["m1"].content == "likes tea\nCategories: prefs, taste"
-    assert rows["b1"].content == "persona:\nI help"
-    assert rows["b1"].title == "persona"
-    # deterministic data id (loader.py:53-55)
-    import uuid
-
-    expected = str(uuid.uuid5(uuid.NAMESPACE_OID, "cogx:zep:d1"))
-    assert rows["d1"].data_id == expected
-
-
-def test_episode_transcript_stable_time_sort(spark):
-    export = {
-        "episodes": [],
-        "entities": [],
-        "facts": [],
-    }
-    records = S.zep_records(spark, export)
-    # build an episode record directly: turns out of order + one missing ts
-    from pyspark.sql import functions as F
-
-    turns = [
-        ("b", "second", "2024-01-02T00:00:00Z"),
-        ("a", "first", "2024-01-01T00:00:00Z"),
-        ("z", "no time", None),
-    ]
-    df = S._finish(
-        spark.createDataFrame(
-            [("episode", "zep", "e1", 0, "My chat")],
-            "kind string, external_system string, external_id string, seq long, title string",
-        ).withColumn(
-            "turns",
-            F.expr(
-                "array(named_struct('role','b','content','second','occurred_at',timestamp'2024-01-02 00:00:00'),"
-                "named_struct('role','a','content','first','occurred_at',timestamp'2024-01-01 00:00:00'),"
-                "named_struct('role','z','content','no time','occurred_at',cast(null as timestamp)))"
-            ),
-        )
-    )
-    [row] = M.data_items(df, mode="preserve").collect()
-    assert row.content == (
-        "# My chat\n"
-        "z: no time\n"
-        "a [2024-01-01T00:00:00+00:00]: first\n"
-        "b [2024-01-02T00:00:00+00:00]: second"
-    )
 
 
 def _entity(system, ext_id, seq, name, desc=None, etype=None, aliases=None):
@@ -280,70 +97,8 @@ def test_preserve_source_ids_keeps_uuid_external_ids(spark):
     assert ids == [u1, u2]
 
 
-def test_rederive_digests(spark, monkeypatch):
-    monkeypatch.setattr(M, "FACTS_PER_DIGEST", 2)
-    ents = spark.createDataFrame(
-        [_entity("zep", "e1", 0, "Alice", "a person"), _entity("zep", "e2", 1, "Bob", None)],
-        _ENT_SCHEMA,
-    )
-    facts = spark.createDataFrame(
-        [
-            _fact("zep", "f1", 100, "Alice", "knows", "Bob"),
-            _fact("zep", "f2", 101, "x", "y", "z", "A custom fact"),
-            _fact("zep", "f3", 102, "Bob", "likes", "tea"),
-        ],
-        _FACT_SCHEMA,
-    )
-    records = S._finish(ents).unionByName(S._finish(facts))
-    items = _by(M.data_items(records, mode="re-derive").collect(), "external_id")
-    assert items["entities-digest"].content == "Alice: a person"
-    assert items["facts-digest-0"].content == "Alice knows Bob\nA custom fact"
-    assert items["facts-digest-1"].content == "Bob likes tea"
-    assert items["facts-digest-0"].title == "Imported facts"
-
-
-def test_fact_line_temporal_qualifiers(spark):
-    from pyspark.sql import functions as F
-
-    facts = S._finish(
-        spark.createDataFrame(
-            [("fact", "zep", "f1", 0, "A", "met", "B")],
-            "kind string, external_system string, external_id string, seq long, "
-            "subject_ref string, predicate string, object_ref string",
-        )
-        .withColumn("valid_at", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-        .withColumn("invalid_at", F.lit("2024-06-01 00:00:00").cast("timestamp"))
-    )
-    items = M.data_items(facts, mode="re-derive").collect()
-    [digest] = [r for r in items if r.external_id == "facts-digest-0"]
-    assert digest.content == (
-        "A met B (valid from 2024-01-01T00:00:00+00:00, "
-        "invalid since 2024-06-01T00:00:00+00:00)"
-    )
-
-
-def test_translate_records_mode_gates(spark):
-    ents = S._finish(spark.createDataFrame([_entity("zep", "e1", 0, "Alice")], _ENT_SCHEMA))
-    with pytest.raises(ValueError):
-        M.translate_records(ents, mode="bogus")
-    re_derive = M.translate_records(ents, mode="re-derive")
-    assert "nodes" not in re_derive and re_derive["cognify_data_items"]
-    preserve = M.translate_records(ents, mode="preserve")
-    assert preserve["nodes"].count() == 1 and not preserve["cognify_data_items"]
-
-
-def test_import_repos_shape(spark):
-    ents = S._finish(spark.createDataFrame(
-        [("document", "mem0", "d1", 0, "hello", None)],
-        "kind string, external_system string, external_id string, seq long, "
-        "content string, title string",
-    ))
-    [row] = M.import_repos(M.data_items(ents, mode="preserve")).collect()
-    assert (row.repo, row.path, row.lang, row.content) == ("import:mem0", "d1", "text", "hello")
-
-
 # --------------------------------------------------------------------------
-# exports + archive round trip
+# Cypher export
 # --------------------------------------------------------------------------
 
 
@@ -370,29 +125,6 @@ def _small_graph(spark):
     return nodes, edges
 
 
-def test_jsonl_export_parses_back(spark):
-    nodes, edges = _small_graph(spark)
-    parts = X.json_lines(nodes, edges)
-    node_objs = [json.loads(r.line) for r in parts["nodes"].collect()]
-    assert {o["name"] for o in node_objs} == {"Alice & Co", "TeaCo", "chunk-1"}
-    [edge] = [json.loads(r.line) for r in parts["edges"].collect()]
-    assert edge == {
-        "source": "00000000-0000-5000-8000-00000000000a",
-        "target": "00000000-0000-5000-8000-00000000000b",
-        "relationship_name": "works_at",
-        "edge_text": "Alice works at TeaCo",
-    }
-
-
-def test_graphml_escaping(spark):
-    nodes, edges = _small_graph(spark)
-    parts = X.graphml_parts(nodes, edges)
-    lines = "\n".join(r.line for r in parts["nodes"].collect())
-    assert "Alice &amp; Co" in lines and "a &lt;person&gt;" in lines
-    assert '<?xml version="1.0"' in parts["header"][0]
-    assert parts["footer"][-1] == "</graphml>"
-
-
 def test_cypher_lines_shape(spark):
     nodes, edges = _small_graph(spark)
     parts = X.cypher_lines(nodes, edges)
@@ -405,72 +137,3 @@ def test_cypher_lines_shape(spark):
     [edge_line] = [r.line for r in parts["edges"].collect()]
     assert "MERGE (a)-[r:`works_at`]->(b)" in edge_line
     assert "CREATE INDEX IF NOT EXISTS" in parts["header"][1]
-
-
-def test_cogx_archive_round_trip(spark, tmp_path):
-    nodes, edges = _small_graph(spark)
-    dest = str(tmp_path / "archive_cogx")
-    manifest = X.write_cogx_archive(nodes, edges, dest)
-    assert manifest["counts"] == {"entity": 2, "document": 0, "fact": 1, "raw_node": 1}
-
-    records = S.read_cogx_archive(spark, dest)
-    out = M.graph_tables(records, preserve_source_ids=True)
-    nodes_back = _by(out["nodes"].collect(), "id")
-    assert set(nodes_back) == {
-        "00000000-0000-5000-8000-00000000000a",
-        "00000000-0000-5000-8000-00000000000b",
-        "00000000-0000-5000-8000-00000000000c",  # raw node kept with its id
-    }
-    assert nodes_back["00000000-0000-5000-8000-00000000000c"].type == "DocumentChunk"
-    [edge] = out["edges"].collect()
-    assert (edge.source_id, edge.relationship_name, edge.target_id) == (
-        "00000000-0000-5000-8000-00000000000a",
-        "works_at",
-        "00000000-0000-5000-8000-00000000000b",
-    )
-    assert out["stats"].first().skipped_facts == 0
-
-
-def test_write_graph_export_formats(spark, tmp_path):
-    nodes, edges = _small_graph(spark)
-    dest = str(tmp_path / "jsonl_out")
-    X.write_graph_export(nodes, edges, dest, format="jsonl")
-    back = spark.read.text(str(tmp_path / "jsonl_out" / "nodes.jsonl"))
-    assert back.count() == 3
-    with pytest.raises(ValueError):
-        X.write_graph_export(nodes, edges, dest, format="nope")
-
-
-def test_dense_index_matches_global_rank_and_avoids_global_window(spark):
-    """dense_index = the dense 0-based rank a global window would give, with
-    no single-partition WindowExec in the plan."""
-    from cognee_spark.functions.indexing import dense_index
-
-    df = spark.range(0, 997).select(
-        F.concat(F.lit("k"), F.lpad((F.col("id") * 7919 % 997).cast("string"), 4, "0")).alias("key"),
-        F.col("id").alias("payload"),
-    ).repartition(8)
-    out = dense_index(df, ["key"], "idx")
-    rows = out.orderBy("key").collect()
-    assert [r.idx for r in rows] == list(range(997))
-    # rank follows key order regardless of input partitioning
-    assert all(
-        rows[i].key < rows[i + 1].key for i in range(len(rows) - 1)
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the only window is partitioned; a bare global window prints an empty
-    # partition spec ("windowspecdefinition(key ... )" with no partition cols
-    # renders as Window [...], [key ASC ...] with no partitionBy) — assert the
-    # partition column is present in every Window operator line
-    for line in plan.splitlines():
-        if "Window " in line:
-            assert "_di_pid" in line, line
-
-
-def test_dense_index_empty_frame(spark):
-    from cognee_spark.functions.indexing import dense_index
-
-    df = spark.range(0, 0).select(F.col("id").cast("string").alias("key"))
-    out = dense_index(df, ["key"], "idx")
-    assert out.columns == ["key", "idx"]
-    assert out.count() == 0

@@ -1,15 +1,9 @@
-"""S6 relational/dlt source: rows→documents, schema nodes, FK edges
-(reference: DltRowDocument.py, extract_dlt_fk_edges.py)."""
+"""S6 relational/dlt source: FK edges between row documents
+(reference: extract_dlt_fk_edges.py)."""
 
 from __future__ import annotations
 
-from cognee_spark.functions.ids import id_for_py
-from cognee_spark.sources.relational import (
-    fk_row_edges,
-    row_membership_edges,
-    schema_nodes,
-    table_to_documents,
-)
+from cognee_spark.sources.relational import fk_row_edges
 
 
 def _orders(spark):
@@ -21,18 +15,6 @@ def _orders(spark):
 
 def _customers(spark):
     return spark.createDataFrame([(10, "alice"), (20, "bo b")], ["c_custkey", "c_name"])
-
-
-def test_table_to_documents(spark):
-    docs = table_to_documents(_customers(spark), "customer", "c_custkey").collect()
-    by_path = {r.path: r for r in docs}
-    assert by_path["customer/10.row"].content == "c_custkey: 10, c_name: alice"
-    assert all(r.lang == "dlt" and r.repo == "db/customer" for r in docs)
-    # row documents chunk via the C4 row chunker without splitting mid-row
-    from cognee_spark.operators.chunking import chunk_rows
-
-    chunks = list(chunk_rows("customer/10.row", by_path["customer/10.row"].content, 12))
-    assert len(chunks) == 1 and chunks[0]["cut_type"] == "row_end"
 
 
 def test_fk_row_edges(spark):
@@ -48,15 +30,3 @@ def test_fk_row_edges(spark):
         ("db/orders:orders/2.row", "references_customer", "db/customer:customer/10.row"),
         ("db/orders:orders/3.row", "references_customer", "db/customer:customer/20.row"),
     }
-
-
-def test_schema_and_membership(spark):
-    nodes = schema_nodes(["orders", "customer"], [("orders", "o_custkey", "customer", "c_custkey")])
-    kinds = {(n["kind"], n["name"]) for n in nodes}
-    assert ("SchemaTable", "orders") in kinds
-    assert ("SchemaRelationship", "orders.o_custkey->customer.c_custkey") in kinds
-    assert all(n["node_id"] == id_for_py(n["kind"], n["name"]) for n in nodes)
-
-    member = row_membership_edges(_orders(spark), "orders", "o_orderkey").collect()
-    assert all(r.pred == "is_part_of" and r.obj == "orders" for r in member)
-    assert all(r.obj_id == id_for_py("SchemaTable", "orders") for r in member)

@@ -54,24 +54,6 @@ def test_trace_rows_match_agent_trace_window_shape(spark):
     assert rendered.n_steps == 1 and "42" in rendered.text
 
 
-def test_feedback_applies_last_update_per_qa(spark):
-    rows = [
-        ("qa", "u1", "s1", 0, json.dumps({"question": "q?", "answer": "a."})),
-        ("qa", "u1", "s1", 1, json.dumps({"question": "q2?", "answer": "a2."})),
-    ]
-    out = R.route_memory_entries(_entries(spark, rows))
-    qa_id = out["qa"].where(F.col("seq") == 0).first().entry_id
-    fb_rows = [
-        ("feedback", "u1", "s1", 2, json.dumps({"qa_id": qa_id, "feedback_text": "meh", "feedback_score": 2})),
-        ("feedback", "u1", "s1", 3, json.dumps({"qa_id": qa_id, "feedback_text": "good", "feedback_score": 5})),
-    ]
-    fb = R.route_memory_entries(_entries(spark, fb_rows))["feedback"]
-    folded = {r.seq: (r.feedback_text, r.feedback_score)
-              for r in R.apply_feedback(out["qa"], fb).collect()}
-    assert folded[0] == ("good", 5)      # last update wins
-    assert folded[1] == (None, None)     # untouched QA passes through
-
-
 def test_skill_run_validation_rejects_like_the_reference(spark):
     def run(seq, **kw):
         body = {"run_id": f"r{seq}", "selected_skill_id": "sk1", **kw}
@@ -247,42 +229,3 @@ def test_qa_carries_inline_feedback_and_used_elements(spark):
     got = {(r.element_id, r.element_kind, r.feedback_score)
            for r in events.collect()}
     assert got == {("e1", "edge", 4), ("e2", "edge", 4)}
-
-
-def test_later_feedback_entry_overrides_inline_feedback(spark):
-    qa_payload = json.dumps({
-        "question": "q?", "answer": "a.",
-        "feedback_text": "inline", "feedback_score": 2,
-    })
-    out = R.route_memory_entries(_entries(spark, [("qa", "u1", "s1", 0, qa_payload)]))
-    qa_id = out["qa"].first().entry_id
-    fb = R.route_memory_entries(_entries(spark, [
-        ("feedback", "u1", "s1", 1,
-         json.dumps({"qa_id": qa_id, "feedback_text": "better", "feedback_score": 5})),
-    ]))["feedback"]
-    folded = R.apply_feedback(out["qa"], fb).first()
-    assert (folded.feedback_text, folded.feedback_score) == ("better", 5)
-    # inline feedback survives when no update targets the row
-    empty_fb = fb.where(F.lit(False))
-    kept = R.apply_feedback(out["qa"], empty_fb).first()
-    assert (kept.feedback_text, kept.feedback_score) == ("inline", 2)
-
-
-def test_apply_feedback_with_single_inline_column(spark):
-    # inline gates are per-column: a qa frame carrying only feedback_text
-    # keeps it, one carrying only feedback_score resolves without an
-    # unresolved-column error (text-only / score-only inline feedback)
-    fb_schema = ("qa_id string, feedback_text string, feedback_score int, "
-                 "seq long")
-    empty_fb = spark.createDataFrame([], fb_schema)
-    text_only = spark.createDataFrame(
-        [("q1", "helpful")], "entry_id string, feedback_text string"
-    )
-    folded = R.apply_feedback(text_only, empty_fb).first()
-    assert folded.feedback_text == "helpful" and folded.feedback_score is None
-
-    score_only = spark.createDataFrame(
-        [("q2", 4)], "entry_id string, feedback_score int"
-    )
-    folded = R.apply_feedback(score_only, empty_fb).first()
-    assert folded.feedback_score == 4 and folded.feedback_text is None

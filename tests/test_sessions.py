@@ -4,8 +4,6 @@ reference rendering, stale-watermark recovery, advance-after-cognify."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cognee_spark.operators.sessions import (
     persist_sessions,
     session_windows,
@@ -142,21 +140,3 @@ def test_agent_trace_last_n_steps_window_and_raw_mode(spark):
     t2 = _traces(spark, rows + [("u1", "t2", 0, "other", "o")])
     got = {r.session_id for r in agent_trace_windows(t2, session_ids=["t2"]).collect()}
     assert got == {"t2"}
-
-
-def test_persist_agent_traces_lands_under_node_set(spark, tmp_path):
-    from cognee_spark.operators.sessions import AGENT_TRACE_NODE_SET, persist_agent_traces
-
-    t = _traces(spark, [
-        ("u1", "t1", 0, "ZephyrService uses QuokkaRegistry.", "raw"),
-        ("u1", "t1", 1, "MapleHub extends OrchidStore.", "raw"),
-    ])
-    out = persist_agent_traces(spark, str(tmp_path / "store"), t)
-    assert out["windows"] == 1
-    docs = out["tables"]["documents"]
-    repos = {r.repo for r in docs.select("repo").collect()}
-    assert repos == {f"{AGENT_TRACE_NODE_SET}/u1"}
-    names = {r.name for r in out["tables"]["nodes"].collect()}
-    assert "zephyrservice" in names and "maplehub" in names
-    trips = {(r.subj, r.pred, r.obj) for r in out["tables"]["triples"].collect()}
-    assert ("zephyrservice", "uses", "quokkaregistry") in trips

@@ -1,11 +1,7 @@
-"""Batch skill-improvement proposals (operators/skill_improvement.py) vs
-the reference's improve_skill flow (memify/skill_improvement.py:58-348)."""
+"""Failure-run selection (operators/skill_improvement.py) vs the reference's
+improve_skill flow (memify/skill_improvement.py:124-131)."""
 
 from __future__ import annotations
-
-import json
-
-from pyspark.sql import functions as F
 
 from cognee_spark.operators import skill_improvement as SI
 
@@ -16,15 +12,6 @@ def _runs(spark, rows):
         "run_id string, selected_skill_id string, success_score double, "
         "error_type string, error_message string, result_summary string, "
         "started_at_ms long",
-    )
-
-
-def _skills(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "id string, name string, description string, procedure string, "
-        "skill_text string, search_text string, is_active boolean, "
-        "dataset_scope array<string>",
     )
 
 
@@ -43,87 +30,9 @@ def test_failure_selection_threshold_error_and_recency_cap(spark):
     assert {r.run_id for r in capped.collect()} == {"r3", "r4", "r5"}
 
 
-def test_context_renders_reference_evidence_format(spark):
-    runs = _runs(spark, [
-        ("r1", "sk1", 0.2, "", "", "old failure", 100),
-        ("r2", "sk1", 0.3, "Timeout", "", "new failure", 200),
-    ])
-    skills = _skills(spark, [
-        ("sid-1", "sk1", "does x", "step 1", "", "", True, ["ds1"]),
-    ])
-    ctx = SI.render_improvement_contexts(
-        SI.find_failure_runs(runs), skills, "ds1"
-    ).first()
-    assert ctx.runs_used == ["r2", "r1"]  # most recent first
-    assert ctx.context.startswith("# Skill\nName: sk1\nDescription: does x")
-    assert "# Current Procedure\nstep 1" in ctx.context
-    assert (
-        "- run_id=r2; score=0.3; error=Timeout; result=new failure\n\n"
-        "- run_id=r1; score=0.2; error=none; result=old failure"
-    ) in ctx.context
-
-
-def test_proposals_deterministic_double_and_fail_open(spark):
-    runs = _runs(spark, [
-        ("r1", "sk1", 0.2, "Timeout", "", "slow", 100),
-        ("r2", "sk2", 0.2, "", "", "bad", 100),
-    ])
-    skills = _skills(spark, [
-        ("sid-1", "sk1", "does x", "step 1", "", "", True, ["ds1"]),
-        ("sid-2", "sk2", "does y", "# sk2\n\nstep A", "", "", True, ["ds1"]),
-    ])
-    ctxs = SI.render_improvement_contexts(SI.find_failure_runs(runs), skills, "ds1")
-    props = {p.skill_name: p for p in SI.propose_skill_improvements(ctxs).collect()}
-    p1 = props["sk1"]
-    assert p1.status == "proposed" and p1.runs_used == ["r1"]
-    assert p1.proposed_procedure.startswith("# sk1\n\nstep 1")
-    assert "## Avoid\n- Timeout" in p1.proposed_procedure
-    assert props["sk2"].proposed_procedure.startswith("# sk2")  # no double heading
-    assert "## Avoid" not in props["sk2"].proposed_procedure    # no errors
-    # deterministic proposal ids: same evidence → same id (replays upsert)
-    again = {p.skill_name: p for p in SI.propose_skill_improvements(ctxs).collect()}
-    assert p1.proposal_id == again["sk1"].proposal_id
-
-    # a malformed draft drops only its skill
-    def flaky(kind, prompt):
-        if "sk1" in prompt:
-            return "not json"
-        return SI.reference_improvement_llm(kind, prompt)
-
-    flaky_out = SI.propose_skill_improvements(ctxs, llm=flaky).collect()
-    assert [p.skill_name for p in flaky_out] == ["sk2"]
-
-
-def test_apply_rewrites_skill_and_marks_proposal(spark):
-    runs = _runs(spark, [("r1", "sk1", 0.2, "Timeout", "", "slow", 100)])
-    skills = _skills(spark, [
-        ("sid-1", "sk1", "does x", "step 1", "t", "t", True, ["ds1"]),
-        ("sid-2", "sk2", "does y", "step A", "t2", "t2", True, ["ds1"]),
-    ])
-    ctxs = SI.render_improvement_contexts(SI.find_failure_runs(runs), skills, "ds1")
-    proposals = SI.propose_skill_improvements(ctxs)
-    pid = proposals.first().proposal_id
-    out = SI.apply_proposals(skills, proposals, [pid])
-    got = {r.name: r for r in out["skills"].collect()}
-    assert got["sk1"].procedure.startswith("# sk1\n\nstep 1")
-    assert "## Avoid\n- Timeout" in got["sk1"].procedure
-    assert got["sk1"].skill_text == "\n\n".join(
-        ["sk1", "does x", got["sk1"].procedure]
-    )
-    assert got["sk1"].search_text == got["sk1"].skill_text
-    assert got["sk2"].procedure == "step A"       # untargeted passes through
-    assert got["sk2"].skill_text == "t2"
-    statuses = {r.proposal_id: r.status for r in out["proposals"].collect()}
-    assert statuses[pid] == "applied"
-
-
 def test_selection_and_context_plans_stay_jvm_side(spark):
     runs = _runs(spark, [("r1", "sk1", 0.2, "", "", "bad", 100)])
-    skills = _skills(spark, [
-        ("sid-1", "sk1", "d", "p", "", "", True, ["ds1"]),
-    ])
-    ctxs = SI.render_improvement_contexts(SI.find_failure_runs(runs), skills, "ds1")
-    plan = ctxs._jdf.queryExecution().executedPlan().toString()
-    # everything up to the drafting transport is codegen joins/folds
+    plan = SI.find_failure_runs(runs)._jdf.queryExecution().executedPlan().toString()
+    # the failure selection is codegen filters and a window, no Python
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert "CartesianProduct" not in plan

@@ -91,58 +91,3 @@ def test_bounded_subgraph_validates_params(spark):
         V.bounded_subgraph(nodes, edges, seeds, depth=0)
     with pytest.raises(ValueError):
         V.bounded_subgraph(nodes, edges, seeds, max_nodes=0)
-
-
-def test_node_embeddings_joins_entity_collection_and_skips_missing(spark):
-    nodes, _ = _graph(spark)
-    emb = spark.createDataFrame(
-        [
-            ("Entity_name", "a", "A", [1.0, 0.0]),
-            ("Entity_name", "b", "B", [0.0, 1.0]),
-            ("DocumentChunk_text", "a", "A", [9.0, 9.0]),  # other collection
-        ],
-        "collection string, item_id string, text string, embedding array<double>",
-    )
-    got = {r.node_id: r.vector for r in V.node_embeddings(nodes, emb).collect()}
-    assert got == {"a": [1.0, 0.0], "b": [0.0, 1.0]}
-
-
-def test_node_embeddings_typed_collection_mapping(spark):
-    nodes = spark.createDataFrame(
-        [("n1", "TextSummary"), ("n2", "Entity"), ("n3", "UnmappedType")],
-        "entity_id string, dp_type string",
-    )
-    emb = spark.createDataFrame(
-        [
-            ("TextSummary_text", "n1", "t", [1.0]),
-            ("Entity_name", "n2", "e", [2.0]),
-            ("UnmappedType_?", "n3", "u", [3.0]),
-        ],
-        "collection string, item_id string, text string, embedding array<double>",
-    )
-    got = {
-        r.node_id: r.vector
-        for r in V.node_embeddings(nodes, emb, type_col="dp_type").collect()
-    }
-    # unmapped type yields NULL collection -> dropped (embedding_join's
-    # unmapped_types branch)
-    assert got == {"n1": [1.0], "n2": [2.0]}
-
-
-def test_semantic_positions_over_bounded_subgraph(spark):
-    nodes, edges = _graph(spark)
-    seeds = spark.createDataFrame([("a",)], "node_id string")
-    sub = V.bounded_subgraph(nodes, edges, seeds, depth=2, max_nodes=6)
-    emb = spark.createDataFrame(
-        [
-            ("Entity_name", "a", "A", [0.0, 0.0, 1.0]),
-            ("Entity_name", "b", "B", [0.0, 1.0, 0.0]),
-            ("Entity_name", "c", "C", [1.0, 0.0, 0.0]),
-        ],
-        "collection string, item_id string, text string, embedding array<double>",
-    )
-    pos = V.semantic_positions(sub, emb)
-    rows = {r.node_id: (r.x, r.y) for r in pos.collect()}
-    kept = {r.entity_id for r in sub["nodes"].collect()}
-    assert set(rows) == kept  # one coordinate per surviving node
-    assert all(abs(x) <= 1.3 and abs(y) <= 1.3 for x, y in rows.values())
