@@ -632,6 +632,7 @@ def khop_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hop graph projection (R2) on the doc—word bipartite graph, seeded at
     the word 'spark': all words co-occurring in documents containing it."""
     from cognee_spark.operators.retrieval import k_hop_subgraph
+    from cognee_spark.session import row_frame
 
     docs = _t(spark, sf_dir, "documents")
     edges = (
@@ -644,7 +645,7 @@ def khop_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    seeds = spark.createDataFrame([("w:spark",)], ["name"])
+    seeds = row_frame(spark, [("w:spark",)], "name string")
     sub = k_hop_subgraph(edges, seeds, k=2)
     return sub.select(F.substring("obj", 3, 1 << 20).alias("word")).distinct()
 
@@ -942,15 +943,15 @@ def triplet_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cognee_spark.functions.embeddings import hash_embedding_py
     from cognee_spark.operators.indexing import build_triplet_index
     from cognee_spark.operators.similarity_search import brute_force_topk
+    from cognee_spark.session import row_frame
 
     idx = build_triplet_index(_kg_tables(spark)["triples"].select("subj", "pred", "obj"))
     qv = hash_embedding_py(_KG_SEARCH_QUERY)
-    queries = spark.createDataFrame([("q0", qv)], ["query_id", "query_vec"])
-    top = brute_force_topk(idx, queries, k=5, id_col="item_id", vec_col="embedding")
-    texts = idx.select(F.col("item_id").alias("vec_id"), "text")
-    return top.join(texts, "vec_id").select(
-        "rank", F.col("vec_id").alias("item_id"), "text"
+    queries = row_frame(spark, [("q0", qv)], "query_id string, query_vec array<double>")
+    top = brute_force_topk(
+        idx, queries, k=5, id_col="item_id", vec_col="embedding", keep=("text",)
     )
+    return top.select("rank", F.col("vec_id").alias("item_id"), "text")
 
 
 _TRIPLET_EMBED_SQL = f"""
@@ -964,19 +965,17 @@ def kg_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entity_name embedding collection (partition-pruned scan)."""
     from cognee_spark.functions.embeddings import hash_embedding_py
     from cognee_spark.operators.similarity_search import brute_force_topk
+    from cognee_spark.session import row_frame
 
     emb = _kg_tables(spark, need_index=True)["embeddings"].where(
         F.col("collection") == "Entity_name"
     )
     qv = hash_embedding_py(_KG_SEARCH_QUERY)
-    queries = spark.createDataFrame([("q0", qv)], ["query_id", "query_vec"])
+    queries = row_frame(spark, [("q0", qv)], "query_id string, query_vec array<double>")
     top = brute_force_topk(
-        emb, queries, k=5, id_col="item_id", vec_col="embedding"
+        emb, queries, k=5, id_col="item_id", vec_col="embedding", keep=("text",)
     )
-    names = emb.select(F.col("item_id").alias("vec_id"), F.col("text").alias("name"))
-    return top.join(names, "vec_id").select(
-        "rank", F.col("vec_id").alias("item_id"), "name"
-    )
+    return top.select("rank", F.col("vec_id").alias("item_id"), F.col("text").alias("name"))
 
 
 _KG_TRIPLES_SQL = f"""
@@ -1585,6 +1584,7 @@ def distilled_lessons(spark: SparkSession, sf_dir: str) -> DataFrame:
         reference_distillation_llm,
         render_lesson_documents,
     )
+    from cognee_spark.session import row_frame
 
     docs = _t(spark, sf_dir, "documents")
     entries = docs.select(
@@ -1597,9 +1597,7 @@ def distilled_lessons(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 7 == 0).cast("int").alias("harmful_count"),
         ((F.col("doc_id") % 10) / 10.0 + 0.05).alias("confidence"),
     )
-    qa = spark.createDataFrame(
-        [], "session_id string, time string, question string, answer string"
-    )
+    qa = row_frame(spark, [], "session_id string, time string, question string, answer string")
     lessons = propose_lessons(
         curator_batches(qa, gated_entries(entries)), reference_distillation_llm
     )
@@ -2259,6 +2257,7 @@ def graph_export_cypher(spark: SparkSession, sf_dir: str) -> DataFrame:
     to_json (the reference collects the whole graph and loops on the
     driver). Escaping is exercised by quotes/ampersands in the values."""
     from cognee_spark.operators.graph_export import cypher_lines
+    from cognee_spark.session import row_frame
 
     d = F.col("doc_id")
     nodes = (
@@ -2273,9 +2272,7 @@ def graph_export_cypher(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    edges = spark.createDataFrame(
-        [], "source_id string, target_id string, relationship_name string"
-    )
+    edges = row_frame(spark, [], "source_id string, target_id string, relationship_name string")
     return cypher_lines(nodes, edges)["nodes"].orderBy("line")
 
 

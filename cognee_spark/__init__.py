@@ -9,7 +9,9 @@ topoteretes/cognee (reference read-only at /root/reference) on Apache Spark:
    cognee/tasks/code_graph/extract_code_graph.py)
 - entity linking via blocking + MinHash-LSH + similarity scoring
   (reference: cognee/modules/ontology/matching_strategies.py generalized)
-- canonicalization via distributed connected components (large-star/small-star)
+- canonicalization via union-find clusters: one driver pass over a
+  dictionary-sized name set, distributed connected components
+  (large-star/small-star) past it
 - materialized (subj, pred, obj) triple tables + node/edge tables with
   per-partition lineage, metrics, and checkpoint/resume semantics
   (reference: cognee/modules/pipelines/operations/run_tasks*.py)

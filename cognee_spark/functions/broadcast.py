@@ -5,10 +5,11 @@ An unconditional broadcast hint forces a single-threaded driver hash build
 and ships the full relation to every executor; fine for dictionary-sized
 frames, a driver OOM (and an 8 GB hard cap) when the frame turns out to be
 corpus-sized — node-distance tables, duplicate-id sets and usage rollups all
-grow with input, not with a schema. The probe pattern here is the one
-``linking._components_hybrid`` established: materialize the frame once with
-an eager ``localCheckpoint`` (so the probe and every downstream consumer
-reuse the computed rows instead of recomputing the subplan), then
+grow with input, not with a schema. A frame whose optimized plan already
+proves a row bound (a ``limit(k)``, a driver-row ``LocalRelation``) needs no
+probe. Any other frame is materialized once with an eager
+``localCheckpoint`` (so the probe and every downstream consumer reuse the
+computed rows instead of recomputing the subplan), then probed with
 ``limit(bound+1).count()`` — at most bound+1 rows move into one task, never
 into driver memory. Bounded frames get the broadcast hint; unbounded ones are
 left unhinted, where AQE picks the join strategy from the real post-shuffle
@@ -33,18 +34,32 @@ from pyspark.sql import functions as F
 BROADCAST_ROW_BOUND = int(os.environ.get("COGNEE_BROADCAST_ROW_BOUND", "2000000"))
 
 
+def plan_max_rows(df: DataFrame) -> int | None:
+    """The row bound ``df``'s optimized plan proves (a ``LocalRelation``'s
+    row count, a limit's k), or None when the plan proves none. Planning
+    only: no Spark job."""
+    max_rows = df._jdf.queryExecution().optimizedPlan().maxRows()
+    return max_rows.get() if max_rows.isDefined() else None
+
+
 def bounded_broadcast(
     df: DataFrame,
     bound_rows: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
-    """Broadcast ``df`` only when a probe proves it within ``bound_rows``.
+    """Broadcast ``df`` only when its plan or a probe proves it within
+    ``bound_rows``.
 
-    Pass ``materialize=False`` when the caller already localCheckpointed the
+    A plan that proves its own bound (a limit, a driver-row frame) is
+    hinted as it is: no checkpoint, no probe. Otherwise the probe runs; pass
+    ``materialize=False`` when the caller already localCheckpointed the
     frame (the probe then reads cached blocks either way). Returns the
-    materialized frame, hinted iff bounded.
+    frame, hinted iff bounded.
     """
     bound = BROADCAST_ROW_BOUND if bound_rows is None else bound_rows
+    max_rows = plan_max_rows(df)
+    if max_rows is not None and max_rows <= bound:
+        return F.broadcast(df)
     if materialize:
         df = df.localCheckpoint(eager=True)
     if df.limit(bound + 1).count() <= bound:

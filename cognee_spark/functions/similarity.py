@@ -15,6 +15,7 @@ cutoff, scalable candidate generation.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterable, Iterator
 from difflib import SequenceMatcher
 
 from cognee_spark.functions.ids import normalize_identity_py
@@ -27,6 +28,8 @@ MINHASH_PERMS = 24
 # typo pair). Single-row bands make big buckets for very common shingle-min
 # values; the pipeline caps bucket size (skew guard) before pairing.
 LSH_BANDS = 24
+MAX_LSH_BUCKET = 1024  # skew guard: buckets larger than this are dropped from
+# pairing (a bucket that big means a degenerate band key, not real aliases)
 _ROWS = MINHASH_PERMS // LSH_BANDS
 _MERSENNE = (1 << 61) - 1
 
@@ -91,6 +94,23 @@ def is_alias_pair(a: str, b: str) -> bool:
     return name_similarity(a, b) >= SIMILARITY_CUTOFF
 
 
+def alias_partners(b: str, candidates: Iterable[str]) -> Iterator[str]:
+    """The ``a`` in ``candidates`` with ``is_alias_pair(a, b)``.
+
+    One matcher holds ``b``, whose analysis difflib caches across
+    ``set_seq1`` calls; both quick ratios bound ``ratio()`` from above, so a
+    pair below the cutoff on either skips the full block match."""
+    sm = SequenceMatcher(None, "", b, autojunk=False)
+    for a in candidates:
+        sm.set_seq1(a)
+        if (
+            sm.real_quick_ratio() >= SIMILARITY_CUTOFF
+            and sm.quick_ratio() >= SIMILARITY_CUTOFF
+            and sm.ratio() >= SIMILARITY_CUTOFF
+        ):
+            yield a
+
+
 def canonical_name(names: set[str]) -> str:
     """Deterministic canonical representative of an alias cluster.
 
@@ -100,3 +120,38 @@ def canonical_name(names: set[str]) -> str:
     partitionings, and cluster sizes.
     """
     return min(normalize_identity_py(n) for n in names)
+
+
+def cluster_names(names: list[str]) -> list[tuple[str, str]]:
+    """(name, canonical) for every name, in one single-threaded pass: the
+    pipeline's linking rules — match-key merge, LSH co-bucketing under the
+    skew guard, each candidate pair (a < b) scored once at the cutoff,
+    union-find, canonical_name's minimum per cluster."""
+    mkey = {n: match_key(n) for n in names}
+    parent = {k: k for k in mkey.values()}
+
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    buckets: dict[str, list[str]] = {}
+    for k in sorted(parent):
+        for band in lsh_band_keys(k):
+            buckets.setdefault(band, []).append(k)
+    smaller: dict[str, set[str]] = {}  # b → its candidate partners a < b
+    for members in buckets.values():
+        if len(members) <= MAX_LSH_BUCKET:
+            for i, b in enumerate(members):
+                smaller.setdefault(b, set()).update(members[:i])
+    for b, partners in smaller.items():
+        # a pair already in one cluster cannot change the closure
+        for a in alias_partners(b, (a for a in partners if find(a) != find(b))):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    clusters: dict[str, set[str]] = {}
+    for n in names:
+        clusters.setdefault(find(mkey[n]), set()).add(n)
+    canonical = {root: canonical_name(members) for root, members in clusters.items()}
+    return [(n, canonical[find(mkey[n])]) for n in names]

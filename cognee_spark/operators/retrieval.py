@@ -6,7 +6,9 @@
   iterative semi-join expansion, depth-bounded, seeds broadcast
 - score_triplets + top_k_triplets: the reference's triplet scoring
   score = Σ (2 - importance_weight) · distance over (src, dst, edge),
-  feedback-blended (CogneeGraph.py:470-540), as a join + window rank
+  feedback-blended (CogneeGraph.py:470-540), as a join + ranked top-k
+- ranked_topk: every ranked top-k of the read path — TakeOrderedAndProject,
+  then a rank over the <= k survivors
 - resolve_edges_to_text: triples → "A --[rel]--> B (edge_text)" context
   lines (resolve_edges_to_text.py:12-107)
 - bm25_score: lexical retrieval (bm25_retriever.py:9-57) — per-document
@@ -17,8 +19,9 @@
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -107,19 +110,28 @@ def score_triplets(
     return scored.withColumn("score", F.round(blended, 9)).drop("_fw")
 
 
-def top_k_triplets(scored: DataFrame, k: int = 10) -> DataFrame:
-    """Lowest-score-first top-k (the reference's heapq.nsmallest).
+def ranked_topk(
+    df: DataFrame, order: Sequence[Column], k: int, rank_col: str = "rank"
+) -> DataFrame:
+    """The first ``k`` rows of ``df`` by ``order``, ranked 1..k in a
+    ``rank_col`` column.
 
     orderBy + limit compiles to TakeOrderedAndProject — each partition keeps
-    its local k, only k rows per partition reach the driver-side merge. A
-    global row_number window would instead move EVERY row to one task. The
-    rank column is derived afterwards on the k-row result (trivially small).
-    """
-    top = scored.orderBy(
-        F.asc("score"), F.asc("subj"), F.asc("pred"), F.asc("obj")
-    ).limit(k)
-    w = Window.orderBy(F.asc("score"), F.asc("subj"), F.asc("pred"), F.asc("obj"))
-    return top.withColumn("rank", F.row_number().over(w))
+    its local k, only k rows per partition reach the single-partition merge.
+    A global row_number window would instead move EVERY row to one task.
+    The rank is a row_number over the <= k survivors, in a window
+    partitioned by their partition id: the limit's output is one partition,
+    which already satisfies that window, so no Exchange is added (and the
+    unpartitioned window's warning is not logged per query)."""
+    w = Window.partitionBy(F.spark_partition_id()).orderBy(*order)
+    return df.orderBy(*order).limit(k).withColumn(rank_col, F.row_number().over(w))
+
+
+def top_k_triplets(scored: DataFrame, k: int = 10) -> DataFrame:
+    """Lowest-score-first top-k (the reference's heapq.nsmallest)."""
+    return ranked_topk(
+        scored, [F.asc("score"), F.asc("subj"), F.asc("pred"), F.asc("obj")], k
+    )
 
 
 def resolve_edges_to_text(triples: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -417,9 +429,7 @@ def lexical_topk(
     scored = per_doc.select(
         "doc_id", F.round(score, 9).alias("score")
     ).where(F.col("score") > 0)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.withColumn("rank", F.row_number().over(w))
+    return ranked_topk(scored, [F.desc("score"), F.asc("doc_id")], top_k)
 
 
 def summarize_text_py(text: str, max_len: int = 160) -> str:
@@ -531,13 +541,8 @@ def rrf_fuse(
         ).drop("_imp_factor", "_truth_factor")
     else:
         out = out.withColumn("final_score", F.col("rrf_score"))
-    top = out.orderBy(
-        F.desc("final_score"), F.desc("rrf_score"), F.asc("best_rank"), F.asc(id_col)
-    ).limit(top_k)
-    w = Window.orderBy(
-        F.desc("final_score"), F.desc("rrf_score"), F.asc("best_rank"), F.asc(id_col)
-    )
-    return top.withColumn("fuse_rank", F.row_number().over(w))
+    order = [F.desc("final_score"), F.desc("rrf_score"), F.asc("best_rank"), F.asc(id_col)]
+    return ranked_topk(out, order, top_k, rank_col="fuse_rank")
 
 
 def bm25_score(
@@ -588,7 +593,4 @@ def bm25_score(
             ).alias("bm25"),
         )
     )
-    # distributed top-k: TakeOrderedAndProject, then rank over the k survivors
-    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return top.withColumn("rank", F.row_number().over(w))
+    return ranked_topk(scored, [F.desc("bm25"), F.asc("doc_id")], k)

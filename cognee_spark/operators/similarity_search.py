@@ -5,8 +5,9 @@ The reference's retrieval core is brute-force cosine top-k per collection
 
 - brute_force_topk: exact cosine over all rows — whole-stage codegen via
   F.zip_with/F.aggregate (no Python), broadcast of the (small) query set,
-  per-query top-k via window rank. The correctness baseline and the right
-  answer below ~10M vectors per partition-pruned slice.
+  one ordered limit for a one-query frame, per-query window rank for many.
+  The correctness baseline and the right answer below ~10M vectors per
+  partition-pruned slice.
 
 - ivf blocking: k-means-lite coarse quantizer (deterministic seeded centroid
   init + a few Lloyd iterations over a sample), assign every vector to its
@@ -40,18 +41,27 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Exact top-k by cosine for each query row: (query_id, vec_id, cosine, rank).
+    """Exact top-k by cosine for each query row: (query_id, vec_id, cosine,
+    *keep, rank); ``keep`` names passenger columns of ``embeddings``.
 
     The query side is broadcast (queries are user requests — always tiny
-    relative to the corpus); the corpus side streams through codegen.
+    relative to the corpus); the corpus side streams through codegen. A
+    query frame whose plan proves at most one row (a ``row_frame``
+    LocalRelation) takes one ordered limit, TakeOrderedAndProject; any other
+    frame ranks per query in a window.
     """
     from pyspark.sql.window import Window
+
+    from cognee_spark.functions.broadcast import plan_max_rows
+    from cognee_spark.operators.retrieval import ranked_topk
 
     base = embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("v"),
         _norm(F.col(vec_col)).alias("vn"),
+        *keep,
     )
     q = F.broadcast(
         queries.select(
@@ -64,8 +74,13 @@ def brute_force_topk(
         "query_id",
         "vec_id",
         (_dot(F.col("v"), F.col("qv")) / (F.col("vn") * F.col("qn"))).alias("cosine"),
+        *keep,
     )
-    window = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    order = [F.desc("cosine"), F.asc("vec_id")]
+    max_rows = plan_max_rows(queries)
+    if max_rows is not None and max_rows <= 1:
+        return ranked_topk(scored, order, k)
+    window = Window.partitionBy("query_id").orderBy(*order)
     return (
         scored.withColumn("rank", F.row_number().over(window))
         .where(F.col("rank") <= k)

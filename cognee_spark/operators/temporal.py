@@ -294,17 +294,14 @@ def temporal_topk_events(
     (temporal_retriever.filter_top_k_events: score lookup per event, missing
     score = +inf, sort ascending, keep top_k). ``scores``: (event_id, score)
     from embedding the question against the Event_name collection (R1) or
-    any deterministic scoring twin. orderBy+limit compiles to
-    TakeOrderedAndProject — only k rows per partition reach the driver merge."""
-    from pyspark.sql.window import Window
+    any deterministic scoring twin, ranked by retrieval.ranked_topk."""
+    from cognee_spark.operators.retrieval import ranked_topk
 
     windowed = events_overlapping_window(events, starts_at, ends_at, from_col, to_col)
     scored = windowed.join(
         scores.select(F.col(id_col), F.col("score")), id_col, "left"
     ).withColumn("score", F.coalesce("score", F.lit(float("inf"))))
-    top = scored.orderBy(F.asc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.asc("score"), F.asc(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    return ranked_topk(scored, [F.asc("score"), F.asc(id_col)], k)
 
 
 TEMPORAL_CONTEXT_SEPARATOR = "\n#####################\n"

@@ -68,16 +68,18 @@ def hash_node_distances(nodes: DataFrame, query: str) -> DataFrame:
 def _index_slice(tables, collection: str):
     """The committed vector index's slice for ``collection`` (item_id, text,
     embedding), or None when the tables dict carries no index or the index
-    has no rows for that collection. The presence probe is one take(1) over a
-    collection-pruned scan — the index table is written partitioned by
-    collection (operators/indexing.py), so this reads one partition's
-    footer, not the corpus."""
+    has no rows for that collection. The committed index is written
+    partitioned by collection (operators/indexing.py), so its file listing,
+    driver metadata, answers without a job; an in-memory index is probed."""
     emb = tables.get("embeddings")
     if emb is None:
         return None
     sliced = emb.where(F.col("collection") == collection).select(
         F.col("item_id"), "text", "embedding"
     )
+    files = emb.inputFiles()
+    if any("/collection=" in f for f in files):
+        return sliced if any(f"/collection={collection}/" in f for f in files) else None
     return sliced if sliced.take(1) else None
 
 
@@ -94,13 +96,12 @@ def _query_frame(spark, query: str) -> DataFrame:
 
 def _query_topk(spark, emb: DataFrame, query: str, k: int) -> DataFrame:
     """Exact top-k rows of ``emb`` (item_id, text, embedding) by cosine to
-    ``query``: (vec_id, query_id, cosine, rank, text)."""
+    ``query`` in one scan: (query_id, vec_id, cosine, text, rank)."""
     from cognee_spark.operators.similarity_search import brute_force_topk
 
-    top = brute_force_topk(
-        emb, _query_frame(spark, query), k=k, id_col="item_id", vec_col="embedding"
+    return brute_force_topk(
+        emb, _query_frame(spark, query), k, "item_id", "embedding", keep=("text",)
     )
-    return top.join(emb.select(F.col("item_id").alias("vec_id"), "text"), "vec_id")
 
 
 def _vector_topk(spark, frame, query, k, id_col, text_col, index=None, ivf=None):
@@ -112,7 +113,7 @@ def _vector_topk(spark, frame, query, k, id_col, text_col, index=None, ivf=None)
     scale path) → ``index`` (brute-force cosine over the committed
     embeddings slice, no re-embedding) → on-the-fly hash embedding of
     ``frame`` (the fallback for stores without an index — the only path
-    that re-embeds the corpus per query).
+    that re-embeds the corpus per query), one scan to TakeOrderedAndProject.
 
     The cognify ``embeddings`` stage commits every collection the dispatch
     reads (TextSummary_text, DocumentChunk_text, Triplet_text, Entity_name),
@@ -217,10 +218,8 @@ def search(
 
     dist = distances_of or _default_dist
 
-    # the committed vector index / IVF cell index, when the caller's tables
-    # carry one — the dispatch probes it instead of re-embedding the corpus
-    # per query (the 100×-scale path; on-the-fly embedding stays the
-    # bootstrap fallback)
+    # an IVF cell index in the caller's tables serves its own collection
+    # (_vector_topk); every other vector search reads the committed index
     ivf = tables.get("ivf")
 
     if st == "SUMMARIES":

@@ -192,7 +192,7 @@ def cluster_aliases(names: set[str]) -> dict[str, str]:
     identical candidate generation, identical score, identical cutoff)."""
     from collections import defaultdict as _dd
 
-    from cognee_spark.functions.similarity import lsh_band_keys
+    from cognee_spark.functions.similarity import MAX_LSH_BUCKET, lsh_band_keys
 
     keys = sorted({match_key(n) for n in names})
     parent: dict[str, str] = {k: k for k in keys}
@@ -208,15 +208,13 @@ def cluster_aliases(names: set[str]) -> dict[str, str]:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
 
-    from cognee_spark.operators.linking import MAX_LSH_BUCKET
-
     buckets: dict[str, list[str]] = _dd(list)
     for k in keys:
         for band in lsh_band_keys(k):
             buckets[band].append(k)
     for members in buckets.values():
         if len(members) > MAX_LSH_BUCKET:
-            # same skew guard as the pipeline (linking.py MAX_LSH_BUCKET):
+            # same skew guard as the pipeline (similarity.MAX_LSH_BUCKET):
             # a bucket this big is a degenerate band key, not real aliases —
             # both sides drop it, so candidate generation stays identical
             continue

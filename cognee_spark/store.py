@@ -25,6 +25,7 @@ import os
 import threading
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -236,6 +237,12 @@ def run_stage(
     counts the other's compiles too. Near zero on a rerun in the same
     session means the codegen cache holds the working set (session.py).
 
+    ``spark_jobs`` is how many Spark jobs the stage ran: its jobs run under
+    the ``stage:<name>`` job group (the ``spark.jobGroup.id`` local
+    property, restored on exit; ``setJobGroup`` would also overwrite the
+    job description), and the status tracker lists the group's job ids
+    without a job of its own.
+
     ``extra_metrics`` is an optional thunk invoked AFTER the write action —
     kernels that accumulate side metrics during the job (e.g. the LLM
     extractor's skipped-row counters) surface them into the checkpoint row.
@@ -262,6 +269,8 @@ def run_stage(
         return _read_committed()
     sc = spark.sparkContext
     prev_description = sc.getLocalProperty("spark.job.description")
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"stage:{stage}"
     store.acquire_stage_lock(stage)
     try:
         # a concurrent builder may have committed while we waited on the lock
@@ -273,15 +282,25 @@ def run_stage(
         # every job this stage submits (works under concurrent stage
         # submission); restored on exit so later jobs on this thread are not
         # filed under this stage
-        sc.setLocalProperty("spark.job.description", f"stage:{stage}")
+        sc.setLocalProperty("spark.job.description", group)
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        earlier_jobs = set(sc.statusTracker().getJobIdsForGroup(group))
         obs = Observation(f"rows_{stage}")
         df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
         store.write(df, stage, partition_by=partition_by)
+        # the status store learns of jobs from the listener bus: drain it so
+        # the stage's last job is listed (a bus still busy after 10 s raises;
+        # the count then holds what is listed, and the stage still commits)
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        except Py4JJavaError:
+            pass
         metrics: dict = {
             "wall_sec": round(time.time() - started, 3),
             "rows": obs.get["rows"],
             "partitions": _count_part_files(store.path(stage)),
             "codegen_compiles": _codegen_compiles(spark) - compiled,
+            "spark_jobs": len(set(sc.statusTracker().getJobIdsForGroup(group)) - earlier_jobs),
         }
         if extra_metrics is not None:
             metrics.update(extra_metrics())
@@ -290,4 +309,5 @@ def run_stage(
         return spark.read.schema(df.schema).parquet(store.path(stage))
     finally:
         sc.setLocalProperty("spark.job.description", prev_description)
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
         store.release_stage_lock(stage)

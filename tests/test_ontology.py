@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cognee_spark.operators.linking import alias_map, nl_triples, ontology_is_a_triples
+from cognee_spark.sources.corpus import nl_variant
 
 
 @pytest.fixture(scope="module")
@@ -48,6 +49,37 @@ def test_exact_and_fuzzy_ontology_match(spark, ontology):
     assert mapping["Postgres Databse"] == "postgresdatabase"  # typo rewritten
     assert mapping["Kafka Queue"] == mapping["kafka queue"]  # corpus merge intact
     assert mapping["Kafka Queue"] != "postgresdatabase"
+
+
+# test_exact_and_fuzzy_ontology_match's names, plus every surface form of
+# the corpus's NL entities: real typo clusters (one dropped character)
+_PARITY_NAMES = [
+    "postgres database", "Postgres-Database", "Postgres Databse", "Kafka Queue",
+    "kafka queue",
+] + sorted({nl_variant(i, v) for i in range(48) for v in range(5)})
+
+
+@pytest.mark.parametrize("with_ontology", [False, True], ids=["bare", "ontology"])
+def test_alias_paths_agree_with_golden(spark, ontology, monkeypatch, with_ontology):
+    """The driver pass and the distributed path give one mapping, and the
+    self-clustered names map as the independent oracle maps them."""
+    from cognee_spark.operators import linking
+    from cognee_spark.sources.golden import cluster_aliases
+
+    onto = ontology if with_ontology else None
+
+    def mapping():
+        frame = alias_map(_mentions(spark, _PARITY_NAMES), ontology=onto)
+        return {r.name: r.canonical for r in frame.collect()}
+
+    driver = mapping()
+    monkeypatch.setattr(linking, "DRIVER_NAME_BOUND", 0)
+    assert mapping() == driver
+    assert len(set(driver.values())) < len(driver)  # typo clusters merged
+    onto_canonicals = {"postgresdatabase", "mysqldatabase", "relationaldatabase", "database"}
+    rest = {n for n, c in driver.items() if c not in onto_canonicals}
+    assert {n: driver[n] for n in rest} == cluster_aliases(rest)
+    assert (len(rest) < len(driver)) == with_ontology
 
 
 def test_ontology_ancestors_imported(spark, ontology):

@@ -255,6 +255,23 @@ def test_score_triplets_broadcast_is_size_guarded(spark, monkeypatch):
     assert "BroadcastExchange" not in unbounded, unbounded
 
 
+def test_bounded_broadcast_trusts_a_plan_bound(spark):
+    """A frame whose plan proves its bound (a limit) is hinted as it is: no
+    checkpoint and no probe job."""
+    from cognee_spark.functions.broadcast import bounded_broadcast
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "test-bounded-broadcast")
+    try:
+        hinted = bounded_broadcast(spark.range(100).limit(3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert not sc.statusTracker().getJobIdsForGroup("test-bounded-broadcast")
+    plan = hinted._jdf.queryExecution().analyzed().toString()
+    assert "strategy=broadcast" in plan and "LogicalRDD" not in plan, plan
+
+
 def test_khop_frontier_broadcast_is_size_guarded(spark, monkeypatch):
     """Same guard on the k-hop frontier joins (hub-heavy graphs can push a
     2-hop frontier past the broadcast envelope)."""
@@ -323,3 +340,30 @@ def test_build_nodes_single_aggregation_exchange(spark):
     assert len(re.findall(r"(?:Sort|Hash)Aggregate", plan)) == 2, plan
     assert plan.count("Exchange") == 2, plan
     assert "EvalPython" not in plan
+
+
+def test_ranked_topk_adds_no_exchange_after_the_limit(spark):
+    """The rank over the k survivors reuses the limit's single partition: no
+    Exchange above TakeOrderedAndProject, and a one-query vector search is
+    that one ordered limit too (no per-query window exchange)."""
+    from cognee_spark.operators.retrieval import ranked_topk
+    from cognee_spark.operators.similarity_search import brute_force_topk
+    from cognee_spark.session import row_frame
+
+    def above_limit(plan):
+        lines = plan.splitlines()
+        at = next(i for i, ln in enumerate(lines) if "TakeOrderedAndProject" in ln)
+        return "\n".join(lines[:at])
+
+    scored = spark.range(100).select("id", (F.col("id") % 7).alias("score"))
+    plan = _plan(ranked_topk(scored, [F.desc("score"), F.asc("id")], 5))
+    assert "Exchange" not in above_limit(plan), plan
+
+    emb = spark.range(50).select(
+        F.col("id").cast("string").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+    query = row_frame(spark, [("q0", [1.0, 2.0])], "query_id string, query_vec array<double>")
+    plan = _plan(brute_force_topk(emb, query, k=3))
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in above_limit(plan), plan

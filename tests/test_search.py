@@ -320,3 +320,28 @@ def test_committed_index_answers_equal_on_the_fly(spark, store_tables, query):
         via_index = rows(store_tables, search_type)
         assert via_index, search_type
         assert via_index == rows(bare, search_type), search_type
+
+
+# Spark jobs per search type over store_tables, result collected: the vector
+# types scan once to TakeOrderedAndProject, with no probe or re-join
+MAX_SEARCH_JOBS = {
+    "CHUNKS": 2, "SUMMARIES": 2, "TRIPLET_COMPLETION": 2, "GRAPH_COMPLETION": 3,
+    "HYBRID_COMPLETION": 7, "CHUNKS_LEXICAL": 3, "CODE": 1,
+}
+
+
+@pytest.mark.parametrize("search_type", sorted(MAX_SEARCH_JOBS))
+def test_search_jobs_per_type(spark, store_tables, search_type):
+    """No search type spends a job on probing or re-joining its own plan."""
+    sc = spark.sparkContext
+    group = f"test-search-{search_type}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        query = "fn_" if search_type == "CODE" else "ZephyrService uses QuokkaRegistry"
+        out = search(spark, store_tables, search_type, query)
+        rows = out if isinstance(out, str) else out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= MAX_SEARCH_JOBS[search_type]

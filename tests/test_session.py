@@ -23,6 +23,8 @@ from cognee_spark.sources.corpus import build_repos_df
 N = 40
 # measured: 2-12 compiles on a warm rerun at 2,000 entries, 265-275 at 100
 MAX_WARM_COMPILES = 40
+# entity_aliases: the names collect and the alias write
+MAX_ALIAS_JOBS = 4
 
 
 def test_codegen_cache_holds_the_working_set(spark):
@@ -48,6 +50,11 @@ def test_second_identical_cognify_compiles_almost_nothing(spark, tmp_path):
     assert {c["stage"] for c in warm} == {c["stage"] for c in cold}
     assert all(c["codegen_compiles"] >= 0 for c in warm)
     assert sum(c["codegen_compiles"] for c in warm) <= MAX_WARM_COMPILES
+    aliases = next(c for c in warm if c["stage"] == "entity_aliases")
+    # one collect of the names and the write: nothing left to compile
+    assert aliases["codegen_compiles"] == 0
+    assert all(c["spark_jobs"] >= 1 for c in cold + warm)
+    assert aliases["spark_jobs"] <= MAX_ALIAS_JOBS
 
 
 def _recall_dict(spark):
@@ -101,11 +108,51 @@ def _schema_frames(spark):
     return [out["database_schema"], out["schema_tables"], out["relationships"], empty]
 
 
-def _alias_components(spark):
-    from cognee_spark.operators.linking import _components_hybrid
+def _alias_map(spark):
+    from cognee_spark.operators.linking import alias_map
 
-    pairs = row_frame(spark, [("x", "y"), ("y", "z")], "a string, b string")
-    return _components_hybrid(spark, pairs)
+    names = row_frame(spark, [("Maple Hub",), ("maple-hub",), ("MapleHb",)], "name string")
+    return alias_map(names)
+
+
+def _entry_row_frames(spark, query):
+    """The frames an ``__spark_entry__`` query builds through row_frame."""
+    import __spark_entry__ as entry
+    from test_entry_oracle import SF_DIR
+
+    import cognee_spark.session as session
+
+    frames = []
+
+    def recording(*args):
+        frames.append(row_frame(*args))
+        return frames[-1]
+
+    with pytest.MonkeyPatch.context() as patch:
+        patch.setattr(session, "row_frame", recording)
+        getattr(entry, query)(spark, SF_DIR)
+    assert frames, query
+    return frames
+
+
+def _khop_seeds(spark):
+    return _entry_row_frames(spark, "khop_words")
+
+
+def _kg_search_query(spark):
+    return _entry_row_frames(spark, "kg_search")
+
+
+def _triplet_search_query(spark):
+    return _entry_row_frames(spark, "triplet_embedding_topk")
+
+
+def _distill_qa(spark):
+    return _entry_row_frames(spark, "distilled_lessons")
+
+
+def _cypher_edges(spark):
+    return _entry_row_frames(spark, "graph_export_cypher")
 
 
 def _query_frame(spark):
@@ -118,7 +165,8 @@ def _query_frame(spark):
     "site",
     [
         _recall_dict, _recall_list, _context_index_root, _visualization_seeds,
-        _truth_centroids, _schema_frames, _alias_components, _query_frame,
+        _truth_centroids, _schema_frames, _alias_map, _query_frame, _khop_seeds,
+        _kg_search_query, _triplet_search_query, _distill_qa, _cypher_edges,
     ],
     ids=lambda f: f.__name__.lstrip("_"),
 )
